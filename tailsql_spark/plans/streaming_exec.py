@@ -15,6 +15,7 @@ perturb the hash (same policy as the batch money aggregates).
 from __future__ import annotations
 
 import tempfile
+from collections.abc import Callable
 
 import pandas as pd
 
@@ -27,27 +28,43 @@ from tailsql_spark.plans.catalog import QuerySpec, load_tables
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def _await_or_raise(q, what: str, timeout_sec: int = 300) -> None:
+#: How long one ``availableNow`` drain may run before it fails loud.
+_STREAM_TIMEOUT_SEC = 300
+
+
+def _await_or_raise(q, what: str) -> None:
     """Block until the streaming query finishes; a timeout must fail
     LOUD — proceeding would silently return results from a partial
     prefix of micro-batches and surface as a baffling data mismatch
     in the differential gate instead of the real cause."""
-    if not q.awaitTermination(timeout_sec):
+    if not q.awaitTermination(_STREAM_TIMEOUT_SEC):
         raise TimeoutError(
-            f"{what}: streaming query did not finish within {timeout_sec}s "
-            "(partial state would be silently wrong — investigate the hang)"
+            f"{what}: streaming query did not finish within "
+            f"{_STREAM_TIMEOUT_SEC}s (partial state would be silently "
+            "wrong — investigate the hang)"
         )
+
+
+def _drain(writer, what: str) -> None:
+    """Start ``writer`` under the ``availableNow`` trigger and block until
+    every available input file has been processed; the query is stopped
+    on every exit path.  The one drain primitive of this module — the
+    memory-sink builders (``_run_stream``) and the foreachBatch builders
+    (``_run_incremental``) both run through it."""
+    q = writer.trigger(availableNow=True).start()
+    try:
+        _await_or_raise(q, what)
+    finally:
+        q.stop()
 
 
 def _run_stream(
     writer_builder, name: str, spark: SparkSession, staged: str | None = None
 ) -> DataFrame:
     spark.sql(f"DROP VIEW IF EXISTS {name}")
-    q = writer_builder.queryName(name).trigger(availableNow=True).start()
     try:
-        _await_or_raise(q, name)
+        _drain(writer_builder.queryName(name), name)
     finally:
-        q.stop()
         if staged:
             import shutil
 
@@ -56,19 +73,62 @@ def _run_stream(
     return spark.table(name)
 
 
+def _run_incremental(
+    name: str,
+    sf_dir: str,
+    state_root: str | None,
+    frame: DataFrame,
+    setup: Callable[[str], Callable],
+    finish: Callable[[str], DataFrame],
+) -> DataFrame:
+    """The one incremental runner behind every foreachBatch ``stream_*``
+    builder.  Resolves the state root, stages ``frame`` at ``{root}/src``
+    (4 staged files + maxFilesPerTrigger=1 → 4 genuine micro-batches;
+    ``sf_dir`` is the corpus tag checked on resume), calls
+    ``setup(root)`` — which seeds the builder's state families and
+    returns its foreachBatch processor — drains the stream with its
+    checkpoint at ``{root}/ckpt``, and persists ``finish(root)`` under
+    ``name`` (see ``_persist_result``).
+
+    An OWNED root (``state_root=None``) is deleted in ``finally``, so a
+    raising processor or a drain timeout leaves no tempdir behind; a
+    caller-owned root always survives for the next resume.  The query
+    stays unnamed (``queryName`` is for memory sinks only), so
+    concurrent builds cannot collide on a name."""
+    root, owned = _resolve_state_root(name, state_root)
+    try:
+        src = _stage_stream_source(frame, root, sf_dir)
+        process = setup(root)
+        stream = (
+            frame.sparkSession.readStream.schema(frame.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+        )
+        _drain(
+            stream.writeStream.foreachBatch(process).option(
+                "checkpointLocation", f"{root}/ckpt"
+            ),
+            name,
+        )
+        return _persist_result(finish(root), name)
+    finally:
+        if owned:
+            _fs_rmtree(root)
+
+
 def _staged(df: DataFrame, tag: str) -> str:
     path = tempfile.mkdtemp(prefix=f"tailsql_stream_{tag}_")
     df.write.mode("overwrite").parquet(path)
     return path
 
 
-def _resolve_state_root(tag: str, state_root: str | None) -> tuple[str, bool]:
+def _resolve_state_root(name: str, state_root: str | None) -> tuple[str, bool]:
     """Where an incremental operator keeps its persistent state (index
-    parquet dir families + the streaming checkpoint). Returns
-    ``(root, owned)``.
+    parquet dir families, the staged source + the streaming
+    checkpoint). Returns ``(root, owned)``.
 
     Default (``state_root=None``): a fresh LOCAL tempdir OWNED by this
-    run — the grading/test mode; the operator deletes it after
+    run — the grading/test mode; the runner deletes it after
     materializing its result.  With an explicit root (a shared path or
     a ``hdfs://`` / ``s3a://`` / ``file://`` URI): a CALLER-owned
     location that survives the run, so a later run resumes the same
@@ -83,11 +143,12 @@ def _resolve_state_root(tag: str, state_root: str | None) -> tuple[str, bool]:
     ``{root}/src`` (see ``_stage_stream_source``): re-invoking a
     wrapper against a used root resumes the checkpoint over the SAME
     files (a no-op) instead of re-ingesting a fresh corpus copy;
-    continuation means adding new files under ``{root}/src``.  Layout
-    under the root: SCALING.md, "Incremental state layout"."""
+    continuation means adding new files under ``{root}/src``.  Owned
+    and caller-owned roots share one layout: SCALING.md, "Incremental
+    state layout"."""
     if state_root is not None:
         return state_root.rstrip("/"), False
-    return tempfile.mkdtemp(prefix=f"tailsql_{tag}_state_"), True
+    return tempfile.mkdtemp(prefix=f"tailsql_{name}_state_"), True
 
 
 def _fs_list(root: str) -> list[str]:
@@ -230,27 +291,19 @@ def _fs_write_text_atomic(path: str, text: str) -> None:
         raise IOError(f"atomic pointer commit failed: rename {path}.tmp -> {path}")
 
 
-def _stage_stream_source(
-    df: DataFrame,
-    tag: str,
-    state_root: str,
-    owned: bool,
-    n_files: int = 4,
-    corpus_tag: str | None = None,
-) -> str:
+def _stage_stream_source(df: DataFrame, state_root: str, corpus_tag: str) -> str:
     """Stage the micro-batch source files for a stateful stream_* op.
 
-    Owned (grading/test) state: a fresh local tempdir the caller
-    deletes after the run.  CALLER-owned ``state_root``: the source is
-    pinned at ``{state_root}/src`` and re-staging is SKIPPED when the
-    pinned copy already exists — the retained checkpoint under the same
-    root has already consumed those files, so a second invocation of
-    the public wrapper resumes as a no-op instead of staging a fresh
-    corpus copy the checkpoint has never seen (which would re-process
-    every batch on top of the persisted index, duplicating index state
-    and pair emissions).  Production continuation therefore means
-    dropping NEW files under ``{state_root}/src``; this staging only
-    bootstraps the first run against a root.
+    The source is pinned at ``{state_root}/src`` and re-staging is
+    SKIPPED when the pinned copy already exists — the retained
+    checkpoint under the same root has already consumed those files, so
+    a second invocation of the public wrapper resumes as a no-op
+    instead of staging a fresh corpus copy the checkpoint has never
+    seen (which would re-process every batch on top of the persisted
+    index, duplicating index state and pair emissions).  Production
+    continuation therefore means dropping NEW files under
+    ``{state_root}/src``; this staging only bootstraps the first run
+    against a root.  An owned root is fresh, so it always stages.
 
     ``corpus_tag`` (the wrappers pass their ``sf_dir``) is recorded at
     first staging and CHECKED on reuse: one root belongs to one
@@ -258,15 +311,11 @@ def _stage_stream_source(
     corpus would otherwise no-op on the checkpoint and silently return
     the old corpus's accumulated results.
     """
-    if owned:
-        path = tempfile.mkdtemp(prefix=f"tailsql_stream_{tag}_")
-        df.repartition(n_files).write.mode("overwrite").parquet(path)
-        return path
     spark = df.sparkSession
     path = f"{state_root}/src"
     tag_path = f"{state_root}/src_corpus"
     if _fs_exists(f"{path}/_SUCCESS"):
-        if corpus_tag is not None and _fs_exists(f"{tag_path}/_SUCCESS"):
+        if _fs_exists(f"{tag_path}/_SUCCESS"):
             recorded = spark.read.parquet(tag_path).head()[0]
             if recorded != corpus_tag:
                 raise ValueError(
@@ -278,11 +327,10 @@ def _stage_stream_source(
                     "root."
                 )
         return path
-    df.repartition(n_files).write.mode("overwrite").parquet(path)
-    if corpus_tag is not None:
-        spark.createDataFrame([(corpus_tag,)], "corpus string").coalesce(
-            1
-        ).write.mode("overwrite").parquet(tag_path)
+    df.repartition(4).write.mode("overwrite").parquet(path)
+    spark.createDataFrame([(corpus_tag,)], "corpus string").coalesce(
+        1
+    ).write.mode("overwrite").parquet(tag_path)
     return path
 
 
@@ -833,11 +881,7 @@ def _minhash_batch_processor(
         sess = batch_df.sparkSession
         bid = int(batch_id)
         if del_root is not None:
-            dset = (
-                sess.read.parquet(*_del_state_paths(del_root))
-                .select("doc_id")
-                .distinct()
-            )
+            dset = _del_ids(sess, del_root)
             batch_df = batch_df.join(F.broadcast(dset), "doc_id", "left_anti")
         ex_b = (
             batch_df.select(
@@ -963,38 +1007,13 @@ def stream_dedup_minhash(
     signatures), i.e. the same scratch-storage pattern as the window
     spool.
     """
-    import shutil
-    import tempfile
-
     t = load_tables(spark, sf_dir)
     docs = t["documents"].select("doc_id", "text")
-    state_root, _owned_state = _resolve_state_root("mhdedup", state_root)
-    # 4 staged files + maxFilesPerTrigger=1 → 4 genuine micro-batches
-    src_dir = _stage_stream_source(docs, "mhdedup", state_root, _owned_state, corpus_tag=sf_dir)
-    ex_root, sig_root, out_root = _mh_seed_state(docs, state_root)
-    process = _minhash_batch_processor(ex_root, sig_root, out_root)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
+    return _run_incremental(
+        "stream_dedup_minhash", sf_dir, state_root, docs,
+        lambda root: _minhash_batch_processor(*_mh_seed_state(docs, root)),
+        lambda root: spark.read.parquet(*_mh_state_paths(f"{root}/pairs")),
     )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_dedup_minhash")
-    finally:
-        q.stop()
-    result = spark.read.parquet(*_mh_state_paths(out_root))
-    out = _persist_result(result, "stream_dedup_minhash")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
 
 
 # oracle = the BATCH minhash oracle — equality of streaming-incremental
@@ -1106,46 +1125,27 @@ def stream_dedup_clusters(
     SELECT DISTINCT dedup surface (sql/engine.go:256-258) exactly as
     dedup_clusters does, but under continuous arrival.
     """
-    import shutil
-
     pairs = dedup_minhash_lsh_pairs(spark, sf_dir)
-    state_root, _owned_state = _resolve_state_root("cc", state_root)
-    # 4 staged files + maxFilesPerTrigger=1 → 4 genuine micro-batches
-    src_dir = _stage_stream_source(pairs, "cc", state_root, _owned_state, corpus_tag=sf_dir)
-    edges_root = f"{state_root}/edges"
-    labels_root = f"{state_root}/labels"
-    pairs.limit(0).write.mode("overwrite").parquet(f"{edges_root}/seed")
-    spark.createDataFrame([], "doc_id long, cluster_id long").write.mode(
-        "overwrite"
-    ).parquet(f"{labels_root}/seed")
 
-    stream = (
-        spark.readStream.schema(pairs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
+    def setup(root):
+        pairs.limit(0).write.mode("overwrite").parquet(f"{root}/edges/seed")
+        spark.createDataFrame([], "doc_id long, cluster_id long").write.mode(
+            "overwrite"
+        ).parquet(f"{root}/labels/seed")
+        return _cc_batch_processor(f"{root}/edges", f"{root}/labels")
+
+    def finish(root):
+        labels = spark.read.parquet(_latest_snapshot_path(f"{root}/labels", None))
+        sizes = labels.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
+        return labels.join(sizes, "cluster_id").select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.col("cluster_id").cast("long").alias("cluster_id"),
+            F.col("cluster_size").cast("long").alias("cluster_size"),
+        )
+
+    return _run_incremental(
+        "stream_dedup_clusters", sf_dir, state_root, pairs, setup, finish
     )
-    q = (
-        stream.writeStream.foreachBatch(_cc_batch_processor(edges_root, labels_root))
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_dedup_clusters")
-    finally:
-        q.stop()
-    labels = spark.read.parquet(_latest_snapshot_path(labels_root, None))
-    sizes = labels.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
-    result = labels.join(sizes, "cluster_id").select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("cluster_id").cast("long").alias("cluster_id"),
-        F.col("cluster_size").cast("long").alias("cluster_size"),
-    )
-    out = _persist_result(result, "stream_dedup_clusters")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
 
 
 def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1252,8 +1252,6 @@ def stream_ann_topk(
     result. Query/seed vectors are fixed model parameters (vec_id <
     N_QUERIES / N_CELLS), resolved once up front like an IVF codebook.
     """
-    import shutil
-
     from tailsql_spark.operators.similarity import (
         N_QUERIES,
         as_double,
@@ -1264,59 +1262,40 @@ def stream_ann_topk(
 
     t = load_tables(spark, sf_dir)
     emb = t["embeddings"].select("vec_id", "embedding")
-    state_root, _owned_state = _resolve_state_root("ann", state_root)
-    topk_root = f"{state_root}/topk"
 
-    # fixed model parameters: coarse-cell seed vectors and the query
-    # block with their (deterministic, seed-dependent) cell assignment
-    # — both via the SAME assign_cells rule the processor uses
-    vec = emb.select("vec_id", as_double(F.col("embedding")).alias("v")).withColumn(
-        "nrm", norm(F.col("v"))
-    )
-    seeds = seed_table(vec)
-    seeds_path = f"{state_root}/seeds"
-    seeds.write.mode("overwrite").parquet(seeds_path)
-    queries = assign_cells(vec.filter(F.col("vec_id") < N_QUERIES), seeds).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("cell").alias("qcell"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    queries_path = f"{state_root}/queries"
-    queries.write.mode("overwrite").parquet(queries_path)
-    spark.createDataFrame(
-        [], "query_id long, neighbor_id long, cosine double, rnk long"
-    ).write.mode("overwrite").parquet(f"{topk_root}/seed")
-
-    # 4 staged files + maxFilesPerTrigger=1 → 4 genuine micro-batches
-    src_dir = _stage_stream_source(emb, "ann", state_root, _owned_state, corpus_tag=sf_dir)
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            _ann_batch_processor(topk_root, queries_path, seeds_path)
+    def setup(root):
+        # fixed model parameters: coarse-cell seed vectors and the query
+        # block with their (deterministic, seed-dependent) cell assignment
+        # — both via the SAME assign_cells rule the processor uses
+        vec = emb.select(
+            "vec_id", as_double(F.col("embedding")).alias("v")
+        ).withColumn("nrm", norm(F.col("v")))
+        seeds = seed_table(vec)
+        seeds.write.mode("overwrite").parquet(f"{root}/seeds")
+        queries = assign_cells(vec.filter(F.col("vec_id") < N_QUERIES), seeds).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("cell").alias("qcell"),
+            F.col("v").alias("qv"),
+            F.col("nrm").alias("qn"),
         )
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+        queries.write.mode("overwrite").parquet(f"{root}/queries")
+        spark.createDataFrame(
+            [], "query_id long, neighbor_id long, cosine double, rnk long"
+        ).write.mode("overwrite").parquet(f"{root}/topk/seed")
+        return _ann_batch_processor(
+            f"{root}/topk", f"{root}/queries", f"{root}/seeds"
+        )
+
+    def finish(root):
+        # the processor already wrote the correct rnk ≤ 3 column — select
+        # it rather than re-ranking through another window exchange
+        return spark.read.parquet(
+            _latest_snapshot_path(f"{root}/topk", None)
+        ).select("query_id", "neighbor_id", "cosine", "rnk")
+
+    return _run_incremental(
+        "stream_ann_topk", sf_dir, state_root, emb, setup, finish
     )
-    try:
-        _await_or_raise(q, "stream_ann_topk")
-    finally:
-        q.stop()
-    # the processor already wrote the correct rnk ≤ 3 column — select
-    # it rather than re-ranking through another window exchange
-    final = spark.read.parquet(_latest_snapshot_path(topk_root, None)).select(
-        "query_id", "neighbor_id", "cosine", "rnk"
-    )
-    out = _persist_result(final, "stream_ann_topk")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
 
 
 from tailsql_spark.operators.similarity import REGISTRY as _SIM_REGISTRY  # noqa: E402
@@ -1384,11 +1363,7 @@ def _contam_batch_processor(
             new_grams = gb.join(hist, "g", "left_anti").persist()
             state_rows = new_grams.select("g")
         else:
-            dset = (
-                sess.read.parquet(*_del_state_paths(del_root))
-                .select("doc_id")
-                .distinct()
-            )
+            dset = _del_ids(sess, del_root)
             gb_pairs = (
                 _doc_5grams(batch_df)
                 .join(F.broadcast(dset), "doc_id", "left_anti")
@@ -1450,8 +1425,6 @@ def stream_contamination(
     same oracle: the hit set is a union of disjoint first-appearance
     probes, so batch slicing cannot perturb counts.
     """
-    import shutil
-
     t = load_tables(spark, sf_dir)
     is_test = (
         F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 2) < "1a"
@@ -1460,59 +1433,42 @@ def stream_contamination(
     test_docs = docs.filter(F.col("is_test")).select("doc_id", "text")
     train_docs = docs.filter(~F.col("is_test")).select("doc_id", "text")
 
-    state_root, _owned_state = _resolve_state_root("contam", state_root)
-    train_root = f"{state_root}/train_grams"
-    hits_root = f"{state_root}/hits"
-    test_grams = _doc_5grams(test_docs)
-    test_grams_path = f"{state_root}/test_grams"
-    test_grams.write.mode("overwrite").parquet(test_grams_path)
-    # per-test-doc gram counts: the fixed denominator table
+    def setup(root):
+        test_grams = _doc_5grams(test_docs)
+        test_grams.write.mode("overwrite").parquet(f"{root}/test_grams")
+        test_grams.select("g").limit(0).write.mode("overwrite").parquet(
+            f"{root}/train_grams/seed"
+        )
+        test_grams.limit(0).write.mode("overwrite").parquet(f"{root}/hits/seed")
+        return _contam_batch_processor(
+            f"{root}/train_grams", f"{root}/hits", f"{root}/test_grams"
+        )
+
+    def finish(root):
+        hits = spark.read.parquet(*_mh_state_paths(f"{root}/hits"))
+        return _contam_report(spark, f"{root}/test_grams", hits)
+
+    return _run_incremental(
+        "stream_contamination", sf_dir, state_root, train_docs, setup, finish
+    )
+
+
+def _contam_report(spark: SparkSession, test_grams_path: str, hits: DataFrame):
+    """Per-test-doc overlap report: the fixed denominator (each test
+    doc's gram count) joined with its hit count."""
     sizes = (
         spark.read.parquet(test_grams_path)
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_grams"))
     )
-    empty_g = test_grams.select("g").limit(0)
-    empty_g.write.mode("overwrite").parquet(f"{train_root}/seed")
-    test_grams.limit(0).write.mode("overwrite").parquet(f"{hits_root}/seed")
-
-    # 4 staged files + maxFilesPerTrigger=1 → 4 genuine micro-batches
-    src_dir = _stage_stream_source(train_docs, "contam", state_root, _owned_state, corpus_tag=sf_dir)
-    stream = (
-        spark.readStream.schema(train_docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            _contam_batch_processor(train_root, hits_root, test_grams_path)
-        )
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_contamination")
-    finally:
-        q.stop()
-    hits = spark.read.parquet(*_mh_state_paths(hits_root))
     per_doc = hits.groupBy("doc_id").agg(F.count("*").alias("n_hit"))
-    result = (
-        sizes.join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_grams",
-            F.coalesce(F.col("n_hit"), F.lit(0)).cast("long").alias("n_hit"),
-            F.round(
-                F.coalesce(F.col("n_hit"), F.lit(0)) * 1.0 / F.col("n_grams"), 6
-            ).alias("contamination_pct"),
-        )
+    n_hit = F.coalesce(F.col("n_hit"), F.lit(0))
+    return sizes.join(per_doc, "doc_id", "left").select(
+        "doc_id",
+        "n_grams",
+        n_hit.cast("long").alias("n_hit"),
+        F.round(n_hit * 1.0 / F.col("n_grams"), 6).alias("contamination_pct"),
     )
-    out = _persist_result(result, "stream_contamination")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
 
 
 from tailsql_spark.operators.textstats import REGISTRY as _TEXT_REGISTRY  # noqa: E402
@@ -1589,11 +1545,7 @@ def _semdedup_batch_processor(
         bid = int(batch_id)
         sub = _bdir(bid)
         if del_root is not None:
-            dset = (
-                sess.read.parquet(*_del_state_paths(del_root))
-                .select("vec_id")
-                .distinct()
-            )
+            dset = _del_ids(sess, del_root, "vec_id")
             batch_df = batch_df.join(F.broadcast(dset), "vec_id", "left_anti")
         cent = sess.read.parquet(cent_path)
         q = batch_df.select("vec_id", quantize_embedding("embedding").alias("e"))
@@ -1684,56 +1636,44 @@ def stream_dedup_semantic(
     model parameter — the production shape, where the quantizer is
     trained on a sample and frozen before the corpus streams through.
     """
-    import shutil
-
-    from tailsql_spark.operators.mlprep import lloyd_loop
-
     t = load_tables(spark, sf_dir)
     emb = t["embeddings"].select("vec_id", "embedding")
-    state_root, _owned_state = _resolve_state_root("semdedup", state_root)
-    members_root = f"{state_root}/members"
-    snap_root = f"{state_root}/snap"
-    cent_path = f"{state_root}/centroids"
 
+    def setup(root):
+        members_root, cent_path = _semdedup_seed(spark, sf_dir, root)
+        spark.createDataFrame(
+            [], "vec_id long, cell long, pruned_by long"
+        ).write.mode("overwrite").parquet(f"{root}/snap/seed")
+        return _semdedup_batch_processor(members_root, f"{root}/snap", cent_path)
+
+    def finish(root):
+        return spark.read.parquet(
+            _latest_snapshot_path(f"{root}/snap", None)
+        ).select(
+            "vec_id",
+            "cell",
+            F.col("pruned_by").isNull().alias("is_kept"),
+            "pruned_by",
+        )
+
+    return _run_incremental(
+        "stream_dedup_semantic", sf_dir, state_root, emb, setup, finish
+    )
+
+
+def _semdedup_seed(spark: SparkSession, sf_dir: str, root: str) -> tuple[str, str]:
+    """Freeze the k-means quantizer (the certified full-corpus Lloyd
+    trajectory) at ``{root}/centroids`` and seed the empty ``members``
+    family; returns ``(members_root, cent_path)``."""
+    from tailsql_spark.operators.mlprep import lloyd_loop
+
+    members_root, cent_path = f"{root}/members", f"{root}/centroids"
     _, cent = lloyd_loop(spark, sf_dir)
     cent.write.mode("overwrite").parquet(cent_path)
     spark.createDataFrame(
         [], "vec_id long, cell long, v array<double>, nrm double"
     ).write.mode("overwrite").parquet(f"{members_root}/seed")
-    spark.createDataFrame(
-        [], "vec_id long, cell long, pruned_by long"
-    ).write.mode("overwrite").parquet(f"{snap_root}/seed")
-
-    # 4 staged files + maxFilesPerTrigger=1 → 4 genuine micro-batches
-    src_dir = _stage_stream_source(emb, "semdedup", state_root, _owned_state, corpus_tag=sf_dir)
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            _semdedup_batch_processor(members_root, snap_root, cent_path)
-        )
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_dedup_semantic")
-    finally:
-        q.stop()
-    final = spark.read.parquet(_latest_snapshot_path(snap_root, None)).select(
-        "vec_id",
-        "cell",
-        F.col("pruned_by").isNull().alias("is_kept"),
-        "pruned_by",
-    )
-    out = _persist_result(final, "stream_dedup_semantic")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
+    return members_root, cent_path
 
 
 from tailsql_spark.operators.similarity import _semdedup_oracle as _SEMDEDUP_ORACLE  # noqa: E402
@@ -1814,11 +1754,7 @@ def _substr_batch_processor(
         bid = int(batch_id)
         sub = _bdir(bid)
         if del_root is not None:
-            dset = (
-                sess.read.parquet(*_del_state_paths(del_root))
-                .select("doc_id")
-                .distinct()
-            )
+            dset = _del_ids(sess, del_root)
             batch_df = batch_df.join(F.broadcast(dset), "doc_id", "left_anti")
         pg = doc_pos_grams(batch_df).persist()
         cb = pg.groupBy("g").agg(F.count("*").alias("c"))
@@ -1873,49 +1809,33 @@ def stream_substring_spans(
     are stored unflagged and the dup set is separate — the join at
     result time applies the latest knowledge to every stored position.
     """
-    import shutil
+    from tailsql_spark.operators.dedup import spans_from_flagged
 
     t = load_tables(spark, sf_dir)
     docs = t["documents"].select("doc_id", "text")
 
-    from tailsql_spark.operators.dedup import doc_pos_grams, spans_from_flagged
+    def finish(root):
+        dup = spark.read.parquet(*_mh_state_paths(f"{root}/dup")).select("g")
+        pos = spark.read.parquet(*_mh_state_paths(f"{root}/pos"))
+        return spans_from_flagged(pos.join(dup, "g").select("doc_id", "pos"))
 
-    state_root, _owned_state = _resolve_state_root("substr", state_root)
-    pos_root = f"{state_root}/pos"
-    dup_root = f"{state_root}/dup"
-    pending_root = f"{state_root}/pending"
+    return _run_incremental(
+        "stream_substring_spans", sf_dir, state_root, docs,
+        lambda root: _substr_batch_processor(*_substr_seed(docs, root)), finish,
+    )
+
+
+def _substr_seed(docs: DataFrame, root: str) -> tuple[str, str, str]:
+    """Seed the pos/dup/pending gram families under ``root``; returns
+    their three roots."""
+    from tailsql_spark.operators.dedup import doc_pos_grams
+
+    pos_root, dup_root, pending_root = f"{root}/pos", f"{root}/dup", f"{root}/pending"
     empty_pg = doc_pos_grams(docs.limit(0))
     empty_pg.write.mode("overwrite").parquet(f"{pos_root}/seed")
     empty_pg.select("g").write.mode("overwrite").parquet(f"{dup_root}/seed")
     empty_pg.select("g").write.mode("overwrite").parquet(f"{pending_root}/seed")
-
-    # 4 staged files + maxFilesPerTrigger=1 → 4 genuine micro-batches
-    src_dir = _stage_stream_source(docs, "substr", state_root, _owned_state, corpus_tag=sf_dir)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            _substr_batch_processor(pos_root, dup_root, pending_root)
-        )
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_substring_spans")
-    finally:
-        q.stop()
-    dup = spark.read.parquet(*_mh_state_paths(dup_root)).select("g")
-    pos = spark.read.parquet(*_mh_state_paths(pos_root))
-    dpos = pos.join(dup, "g").select("doc_id", "pos")
-    out = _persist_result(spans_from_flagged(dpos), "stream_substring_spans")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
+    return pos_root, dup_root, pending_root
 
 
 from tailsql_spark.operators.dedup import REGISTRY as _DEDUP_REGISTRY  # noqa: E402
@@ -1993,17 +1913,47 @@ def stream_curation_survivors(
     by fingerprint), the minhash index, and the label snapshots — all
     the certified per-stage states, composed with no new state kind.
     """
-    import shutil
+    from tailsql_spark.operators.corpus import clean_keep_attrs, survivor_budgets
+    from tailsql_spark.operators.dedup import BROADCAST_INPUT_BYTES
+    from tailsql_spark.plans.catalog import source_bytes
 
     t = load_tables(spark, sf_dir)
     docs = t["documents"].select("doc_id", "lang", "text", "n_chars")
-    state_root, _owned_state = _resolve_state_root("curation", state_root)
-    # 4 staged files + maxFilesPerTrigger=1 → 4 genuine micro-batches
-    src_dir = _stage_stream_source(docs, "curation", state_root, _owned_state, corpus_tag=sf_dir)
-    ex_root, sig_root, out_root = _mh_seed_state(docs.select("doc_id", "text"), state_root)
-    edges_root = f"{state_root}/edges"
-    labels_root = f"{state_root}/labels"
-    attrs_root = f"{state_root}/attrs"
+
+    def setup(root):
+        ex_root, sig_root, out_root = _mh_seed_state(
+            docs.select("doc_id", "text"), root
+        )
+        edges_root, labels_root, attrs_root = _curation_graph_seed(spark, root)
+        return _curation_batch_processor(
+            _minhash_batch_processor(ex_root, sig_root, out_root),
+            _cc_batch_processor(edges_root, labels_root),
+            attrs_root,
+            out_root,
+        )
+
+    def finish(root):
+        attrs = spark.read.parquet(*_mh_state_paths(f"{root}/attrs"))
+        # the label snapshot grows with everything ingested: gate the
+        # broadcast hint on its actual on-disk footprint (r17, guide §3.1)
+        lab_path = _latest_snapshot_path(f"{root}/labels", None)
+        return survivor_budgets(
+            clean_keep_attrs(attrs),
+            spark.read.parquet(lab_path),
+            hint_broadcast=0 < source_bytes(lab_path) < BROADCAST_INPUT_BYTES,
+        )
+
+    return _run_incremental(
+        "stream_curation_survivors", sf_dir, state_root, docs, setup, finish
+    )
+
+
+def _curation_graph_seed(spark: SparkSession, root: str) -> tuple[str, str, str]:
+    """Seed the curation composition's edge log, label snapshots and
+    quality-attribute log under ``root``; returns their three roots."""
+    edges_root, labels_root, attrs_root = (
+        f"{root}/edges", f"{root}/labels", f"{root}/attrs"
+    )
     spark.createDataFrame([], "id_a long, id_b long").write.mode("overwrite").parquet(
         f"{edges_root}/seed"
     )
@@ -2013,49 +1963,7 @@ def stream_curation_survivors(
     spark.createDataFrame(
         [], "doc_id long, lang string, fingerprint string, n_tokens long"
     ).write.mode("overwrite").parquet(f"{attrs_root}/seed")
-
-    process = _curation_batch_processor(
-        _minhash_batch_processor(ex_root, sig_root, out_root),
-        _cc_batch_processor(edges_root, labels_root),
-        attrs_root,
-        out_root,
-    )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_curation_survivors")
-    finally:
-        q.stop()
-
-    from tailsql_spark.operators.corpus import clean_keep_attrs, survivor_budgets
-    from tailsql_spark.operators.dedup import BROADCAST_INPUT_BYTES
-    from tailsql_spark.plans.catalog import source_bytes
-
-    attrs = spark.read.parquet(*_mh_state_paths(attrs_root))
-    cleaned = clean_keep_attrs(attrs)
-    # the label snapshot grows with everything ingested: gate the
-    # broadcast hint on its actual on-disk footprint (r17, guide §3.1)
-    lab_path = _latest_snapshot_path(labels_root, None)
-    labels = spark.read.parquet(lab_path)
-    result = survivor_budgets(
-        cleaned,
-        labels,
-        hint_broadcast=0 < source_bytes(lab_path) < BROADCAST_INPUT_BYTES,
-    )
-    out = _persist_result(result, "stream_curation_survivors")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
+    return edges_root, labels_root, attrs_root
 
 
 from tailsql_spark.operators.corpus import _curation_oracle as _CURATION_ORACLE  # noqa: E402
@@ -2116,45 +2024,27 @@ def stream_bpe_pair_counts(
     corpus size — the shape of continuously-refreshed vocabulary
     statistics for a tokenizer retrained on a growing corpus.
     """
-    import shutil
-
     t = load_tables(spark, sf_dir)
     docs = t["documents"].select("doc_id", "text")
-    state_root, _owned_state = _resolve_state_root("bpepairs", state_root)
-    # 4 staged files + maxFilesPerTrigger=1 → 4 genuine micro-batches
-    src_dir = _stage_stream_source(docs, "bpepairs", state_root, _owned_state, corpus_tag=sf_dir)
-    counts_root = f"{state_root}/counts"
-    spark.createDataFrame([], "pair string, n long").write.mode("overwrite").parquet(
-        f"{counts_root}/seed"
+
+    def setup(root):
+        spark.createDataFrame([], "pair string, n long").write.mode(
+            "overwrite"
+        ).parquet(f"{root}/counts/seed")
+        return _bpe_pairs_batch_processor(f"{root}/counts")
+
+    def finish(root):
+        return (
+            spark.read.parquet(*_mh_state_paths(f"{root}/counts"))
+            .groupBy("pair")
+            .agg(F.sum("n").alias("n"))
+            .orderBy(F.desc("n"), F.asc("pair"))
+            .limit(20)
+        )
+
+    return _run_incremental(
+        "stream_bpe_pair_counts", sf_dir, state_root, docs, setup, finish
     )
-    process = _bpe_pairs_batch_processor(counts_root)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_bpe_pair_counts")
-    finally:
-        q.stop()
-    result = (
-        spark.read.parquet(*_mh_state_paths(counts_root))
-        .groupBy("pair")
-        .agg(F.sum("n").alias("n"))
-        .orderBy(F.desc("n"), F.asc("pair"))
-        .limit(20)
-    )
-    out = _persist_result(result, "stream_bpe_pair_counts")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
 
 
 from tailsql_spark.operators.textstats import REGISTRY as _TEXT_REGISTRY  # noqa: E402
@@ -2218,49 +2108,29 @@ def stream_merge_upsert(
     partitions that batch touches; the maintained table lives under
     the state root (any Spark-readable URI — object store in
     production) and the checkpoint makes ingestion exactly-once."""
-    import shutil
-
     from tailsql_spark.plans.connectors import (
         _merge_base_frame,
         _merge_delta_frame,
+        _merge_result_agg,
     )
 
-    state_root, _owned_state = _resolve_state_root("mergeup", state_root)
-    table_root = f"{state_root}/table"
-    # seed the base ONCE per root, guarded on the COMMIT marker (a bare
-    # dir-exists check would treat a crashed partial seed as complete
-    # and merge the delta into a truncated base); the initial static
-    # write and every later dynamic overwrite both (re)write _SUCCESS
-    if not _fs_exists(f"{table_root}/_SUCCESS"):
-        _merge_base_frame(spark, sf_dir).write.mode("overwrite").partitionBy(
-            "part"
-        ).parquet(table_root)
     delta = _merge_delta_frame(spark, sf_dir, with_deletes=True)
-    # 4 staged files + maxFilesPerTrigger=1 → 4 genuine micro-batches
-    src_dir = _stage_stream_source(delta, "mergeup", state_root, _owned_state, corpus_tag=sf_dir)
-    stream = (
-        spark.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_merge_batch_processor(table_root))
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_merge_upsert")
-    finally:
-        q.stop()
-    from tailsql_spark.plans.connectors import _merge_result_agg
 
-    result = _merge_result_agg(spark.read.parquet(table_root))
-    out = _persist_result(result, "stream_merge_upsert")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
+    def setup(root):
+        # seed the base ONCE per root, guarded on the COMMIT marker (a bare
+        # dir-exists check would treat a crashed partial seed as complete
+        # and merge the delta into a truncated base); the initial static
+        # write and every later dynamic overwrite both (re)write _SUCCESS
+        if not _fs_exists(f"{root}/table/_SUCCESS"):
+            _merge_base_frame(spark, sf_dir).write.mode("overwrite").partitionBy(
+                "part"
+            ).parquet(f"{root}/table")
+        return _merge_batch_processor(f"{root}/table")
+
+    return _run_incremental(
+        "stream_merge_upsert", sf_dir, state_root, delta, setup,
+        lambda root: _merge_result_agg(spark.read.parquet(f"{root}/table")),
+    )
 
 
 from tailsql_spark.plans.connectors import REGISTRY as _CONN_REGISTRY  # noqa: E402
@@ -2978,7 +2848,8 @@ def _compact_del_log(sess, root: str, col: str, exclude_bid: int | None) -> None
     )
     acquire_family_lease(root, holder=_holder)
     try:
-        ver = int(_del_meta_read(root)["version"]) + 1
+        meta = _del_meta_read(root)
+        ver = int(meta["version"]) + 1
         dels = (
             sess.read.parquet(*_del_state_paths(root, exclude_bid))
             .select(col)
@@ -2998,6 +2869,11 @@ def _compact_del_log(sess, root: str, col: str, exclude_bid: int | None) -> None
         folded_below = _max_bid(root) + 1
         if exclude_bid is not None:
             folded_below = min(folded_below, int(exclude_bid))
+        # ...and must never fall below the committed horizon: once
+        # expire_del_versions reclaimed the folded dirs, a second fold
+        # sees none of them, and a horizon that fell back would serve a
+        # replayed old batch dir beside the base that already holds it
+        folded_below = max(folded_below, int(meta["folded_below_bid"]))
         _fs_write_text_atomic(
             f"{root}/_meta.json",
             json.dumps({"version": int(ver), "folded_below_bid": folded_below}),
@@ -3110,9 +2986,11 @@ def _rewrite_flat_family(sess, root: str, frame) -> None:
 def _rewrite_flat_family_locked(sess, root: str, frame) -> None:
     import json
 
-    ver = int(_del_meta_read(root)["version"]) + 1
+    meta = _del_meta_read(root)
+    ver = int(meta["version"]) + 1
     frame.write.mode("overwrite").parquet(f"{root}/base_v{ver}")
-    folded_below = _max_bid(root) + 1
+    # the horizon never falls back (see _compact_del_log)
+    folded_below = max(_max_bid(root) + 1, int(meta["folded_below_bid"]))
     _fs_write_text_atomic(
         f"{root}/_meta.json",
         json.dumps({"version": int(ver), "folded_below_bid": folded_below}),
@@ -3265,11 +3143,7 @@ def _minhash_bucketed_processor(
             # side anti-joins the accumulated tombstone set (own bid
             # INCLUDED — its delete dir is rewritten byte-identically
             # on replay, so the probe stays deterministic)
-            dset = (
-                sess.read.parquet(*_del_state_paths(del_root))
-                .select("doc_id")
-                .distinct()
-            )
+            dset = _del_ids(sess, del_root)
             hist_bands = hist_bands.join(F.broadcast(dset), "doc_id", "left_anti")
         all_bands = hist_bands.unionByName(band_b)
         probe = band_b.select(
@@ -3373,37 +3247,13 @@ def stream_dedup_minhash_bucketed(
     history bands) and doc-bucketed postings (verification reads only
     candidate buckets).  Measured in SCALING.md's incremental-dedup
     entry via tools/incremental_cost.py --bucketed."""
-    import shutil
-
     t = load_tables(spark, sf_dir)
     docs = t["documents"].select("doc_id", "text")
-    state_root, _owned_state = _resolve_state_root("mhbucket", state_root)
-    # 4 staged files + maxFilesPerTrigger=1 → 4 genuine micro-batches
-    src_dir = _stage_stream_source(docs, "mhbucket", state_root, _owned_state, corpus_tag=sf_dir)
-    bands_root, ex_root, out_root = _mh_bucketed_seed(docs, state_root)
-    process = _minhash_bucketed_processor(bands_root, ex_root, out_root)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
+    return _run_incremental(
+        "stream_dedup_minhash_bucketed", sf_dir, state_root, docs,
+        lambda root: _minhash_bucketed_processor(*_mh_bucketed_seed(docs, root)),
+        lambda root: spark.read.parquet(*_mh_state_paths(f"{root}/pairs")),
     )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_dedup_minhash_bucketed")
-    finally:
-        q.stop()
-    result = spark.read.parquet(*_mh_state_paths(out_root))
-    out = _persist_result(result, "stream_dedup_minhash_bucketed")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
 
 
 REGISTRY["stream_dedup_minhash_bucketed"] = QuerySpec(
@@ -3469,39 +3319,21 @@ def stream_kmv_sketch(
     |days seen in batch| × K rows regardless of corpus size.  The
     partial log gets its compaction from :func:`sketch_maintain`
     (r15) — fold and read share :func:`_kmv_partial_merge`."""
-    import shutil
-
     t = load_tables(spark, sf_dir)
     events = t["events"].select("ts", "user_id")
-    state_root, _owned_state = _resolve_state_root("kmv", state_root)
-    # 4 staged files + maxFilesPerTrigger=1 → 4 genuine micro-batches
-    src_dir = _stage_stream_source(events, "kmv", state_root, _owned_state, corpus_tag=sf_dir)
-    sk_root = f"{state_root}/sk"
+    return _run_incremental(
+        "stream_kmv_sketch", sf_dir, state_root, events,
+        lambda root: _kmv_seed(spark, root),
+        lambda root: _kmv_serve(spark, f"{root}/sk"),
+    )
+
+
+def _kmv_seed(spark: SparkSession, root: str):
+    """Seed the KMV partial log at ``{root}/sk``; returns its processor."""
     spark.createDataFrame([], "day string, h long").write.mode("overwrite").parquet(
-        f"{sk_root}/seed"
+        f"{root}/sk/seed"
     )
-    process = _kmv_batch_processor(sk_root)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_kmv_sketch")
-    finally:
-        q.stop()
-    result = _kmv_serve(spark, sk_root)
-    out = _persist_result(result, "stream_kmv_sketch")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
+    return _kmv_batch_processor(f"{root}/sk")
 
 
 def _kmv_serve(spark: SparkSession, sk_root: str) -> DataFrame:
@@ -3544,45 +3376,21 @@ def stream_kmv_maintained(
     asserts the fold actually happened (4 staged files → 4 per-batch
     delta dirs before, 0 after) rather than serving a log the fast
     path skipped."""
-    import shutil
-
     t = load_tables(spark, sf_dir)
     events = t["events"].select("ts", "user_id")
-    state_root, _owned_state = _resolve_state_root("kmvm", state_root)
-    src_dir = _stage_stream_source(
-        events, "kmvm", state_root, _owned_state, corpus_tag=sf_dir
+
+    def finish(root):
+        rep = sketch_maintain(spark, f"{root}/sk", "kmv")
+        if not rep["folded"] or rep["dirs_before"] == 0 or rep["dirs_after"] != 0:
+            raise RuntimeError(
+                f"stream_kmv_maintained: fold did not run as certified — {rep}"
+            )
+        return _kmv_serve(spark, f"{root}/sk")
+
+    return _run_incremental(
+        "stream_kmv_maintained", sf_dir, state_root, events,
+        lambda root: _kmv_seed(spark, root), finish,
     )
-    sk_root = f"{state_root}/sk"
-    spark.createDataFrame([], "day string, h long").write.mode("overwrite").parquet(
-        f"{sk_root}/seed"
-    )
-    process = _kmv_batch_processor(sk_root)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_kmv_maintained")
-    finally:
-        q.stop()
-    rep = sketch_maintain(spark, sk_root, "kmv")
-    if not rep["folded"] or rep["dirs_before"] == 0 or rep["dirs_after"] != 0:
-        raise RuntimeError(
-            f"stream_kmv_maintained: fold did not run as certified — {rep}"
-        )
-    result = _kmv_serve(spark, sk_root)
-    out = _persist_result(result, "stream_kmv_maintained")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
 
 
 from tailsql_spark.operators.sketches import KMV_K as _KMV_K_DOC  # noqa: E402
@@ -3685,54 +3493,37 @@ def stream_heavy_hitters(
     rows regardless of batch size: the mergeable-sketch contract under
     continuous arrival, for the quality dashboards a 100 TB ingest
     keeps per shard and folds on demand."""
-    import shutil
-
     from tailsql_spark.operators.sketches import HH_K
 
     t = load_tables(spark, sf_dir)
     docs = t["documents"].select("doc_id", "text")
-    state_root, _owned_state = _resolve_state_root("hh", state_root)
-    src_dir = _stage_stream_source(docs, "hh", state_root, _owned_state, corpus_tag=sf_dir)
-    hh_root = f"{state_root}/hh"
-    spark.createDataFrame([], "tok string, cnt_est long").write.mode(
-        "overwrite"
-    ).parquet(f"{hh_root}/seed")
-    process = _hh_batch_processor(hh_root)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
+
+    def setup(root):
+        spark.createDataFrame([], "tok string, cnt_est long").write.mode(
+            "overwrite"
+        ).parquet(f"{root}/hh/seed")
+        return _hh_batch_processor(f"{root}/hh")
+
+    def finish(root):
+        # read = the family's own fold merge over base + post-fold deltas
+        # (r15: shared with sketch_maintain's fold)
+        cands = _hh_partial_merge(
+            spark.read.parquet(*_flat_state_paths(f"{root}/hh"))
+        ).select("tok")
+        toks = _hh_toks(spark.read.parquet(f"{root}/src"))
+        total = toks.agg(F.count("*").alias("n"))
+        return (
+            toks.join(F.broadcast(cands), "tok")
+            .groupBy("tok")
+            .agg(F.count("*").alias("cnt"))
+            .crossJoin(F.broadcast(total))
+            .filter(F.col("cnt") * HH_K > F.col("n"))
+            .select("tok", "cnt")
+        )
+
+    return _run_incremental(
+        "stream_heavy_hitters", sf_dir, state_root, docs, setup, finish
     )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_heavy_hitters")
-    finally:
-        q.stop()
-    # read = the family's own fold merge over base + post-fold deltas
-    # (r15: shared with sketch_maintain's fold)
-    cands = _hh_partial_merge(
-        spark.read.parquet(*_flat_state_paths(hh_root))
-    ).select("tok")
-    toks = _hh_toks(spark.read.parquet(src_dir))
-    total = toks.agg(F.count("*").alias("n"))
-    result = (
-        toks.join(F.broadcast(cands), "tok")
-        .groupBy("tok")
-        .agg(F.count("*").alias("cnt"))
-        .crossJoin(F.broadcast(total))
-        .filter(F.col("cnt") * HH_K > F.col("n"))
-        .select("tok", "cnt")
-    )
-    out = _persist_result(result, "stream_heavy_hitters")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
 
 
 from tailsql_spark.operators.sketches import _HH_ORACLE as _HH_ORACLE_STREAM  # noqa: E402
@@ -3803,74 +3594,59 @@ def stream_countmin_sketch(
     DuckDB oracle as the batch ``agg_countmin_sketch``.  Per-batch
     state is at most CMS_D x CMS_W rows: the mergeable-sketch contract
     for frequency monitoring under continuous arrival."""
-    import shutil
-
-    t = load_tables(spark, sf_dir)
-    docs = t["documents"].select("doc_id", "text")
-    state_root, _owned_state = _resolve_state_root("cms", state_root)
-    src_dir = _stage_stream_source(docs, "cms", state_root, _owned_state, corpus_tag=sf_dir)
-    cm_root = f"{state_root}/cm"
-    spark.createDataFrame([], "d int, cell long, c long").write.mode(
-        "overwrite"
-    ).parquet(f"{cm_root}/seed")
-    process = _cms_batch_processor(cm_root)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_countmin_sketch")
-    finally:
-        q.stop()
-    # read = the family's own fold merge over base + post-fold deltas
-    # (r15: shared with sketch_maintain's fold)
-    cms = _cms_partial_merge(spark.read.parquet(*_flat_state_paths(cm_root)))
-    toks = _hh_toks(spark.read.parquet(src_dir))
-    topk = (
-        toks.groupBy("tok")
-        .agg(F.count("*").alias("cnt"))
-        .orderBy(F.col("cnt").desc(), F.col("tok"))
-        .limit(10)
-    )
     from tailsql_spark.operators.dedup import shingle_hash60
     from tailsql_spark.operators.sketches import CMS_D, CMS_W
 
-    probes = topk.select(
-        "tok",
-        "cnt",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(d).alias("d"),
-                        F.pmod(
-                            shingle_hash60(F.concat(F.lit(str(d)), F.col("tok"))),
-                            F.lit(CMS_W),
-                        ).alias("cell"),
-                    )
-                    for d in range(CMS_D)
-                ]
-            )
-        ).alias("rc"),
-    ).select("tok", "cnt", "rc.d", "rc.cell")
-    result = (
-        probes.join(F.broadcast(cms), ["d", "cell"])
-        .groupBy("tok", F.col("cnt").alias("exact_cnt"))
-        .agg(F.min("c").alias("est_cnt"))
-        .select("tok", "exact_cnt", "est_cnt")
+    t = load_tables(spark, sf_dir)
+    docs = t["documents"].select("doc_id", "text")
+
+    def setup(root):
+        spark.createDataFrame([], "d int, cell long, c long").write.mode(
+            "overwrite"
+        ).parquet(f"{root}/cm/seed")
+        return _cms_batch_processor(f"{root}/cm")
+
+    def finish(root):
+        # read = the family's own fold merge over base + post-fold deltas
+        # (r15: shared with sketch_maintain's fold)
+        cms = _cms_partial_merge(
+            spark.read.parquet(*_flat_state_paths(f"{root}/cm"))
+        )
+        toks = _hh_toks(spark.read.parquet(f"{root}/src"))
+        topk = (
+            toks.groupBy("tok")
+            .agg(F.count("*").alias("cnt"))
+            .orderBy(F.col("cnt").desc(), F.col("tok"))
+            .limit(10)
+        )
+        probes = topk.select(
+            "tok",
+            "cnt",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(d).alias("d"),
+                            F.pmod(
+                                shingle_hash60(F.concat(F.lit(str(d)), F.col("tok"))),
+                                F.lit(CMS_W),
+                            ).alias("cell"),
+                        )
+                        for d in range(CMS_D)
+                    ]
+                )
+            ).alias("rc"),
+        ).select("tok", "cnt", "rc.d", "rc.cell")
+        return (
+            probes.join(F.broadcast(cms), ["d", "cell"])
+            .groupBy("tok", F.col("cnt").alias("exact_cnt"))
+            .agg(F.min("c").alias("est_cnt"))
+            .select("tok", "exact_cnt", "est_cnt")
+        )
+
+    return _run_incremental(
+        "stream_countmin_sketch", sf_dir, state_root, docs, setup, finish
     )
-    out = _persist_result(result, "stream_countmin_sketch")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
 
 
 from tailsql_spark.operators.sketches import _CMS_ORACLE as _CMS_ORACLE_STREAM  # noqa: E402
@@ -3923,61 +3699,44 @@ def stream_scd2_history(
     idempotency comes from value-based change detection (a re-applied
     'U' meets the row it opened — content equal, no-op; a re-applied
     'D' finds no current row), pytest-replayed like the MERGE twin."""
-    import shutil
-
     from tailsql_spark.plans.connectors import (
         _merge_base_frame,
         _merge_delta_frame,
     )
 
-    state_root, _owned_state = _resolve_state_root("scd2", state_root)
-    table_root = f"{state_root}/table"
-    # seed the history ONCE per root, guarded on the COMMIT marker
-    # (the stream_merge_upsert discipline): every base row opens as
-    # the current version-1 row
-    if not _fs_exists(f"{table_root}/_SUCCESS"):
-        (
-            _merge_base_frame(spark, sf_dir)
-            .select(
-                "doc_id",
-                "content",
-                F.lit(1).alias("valid_from"),
-                F.lit(None).cast("int").alias("valid_to"),
-                F.lit(1).alias("is_current"),
-                "part",
-            )
-            .write.mode("overwrite")
-            .partitionBy("part")
-            .parquet(table_root)
-        )
     delta = _merge_delta_frame(spark, sf_dir, with_deletes=True).select(
         "doc_id", "content", "op", "part"
     )
-    # 4 staged files + maxFilesPerTrigger=1 → 4 genuine micro-batches
-    src_dir = _stage_stream_source(delta, "scd2", state_root, _owned_state, corpus_tag=sf_dir)
-    stream = (
-        spark.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
+
+    def setup(root):
+        # seed the history ONCE per root, guarded on the COMMIT marker
+        # (the stream_merge_upsert discipline): every base row opens as
+        # the current version-1 row
+        if not _fs_exists(f"{root}/table/_SUCCESS"):
+            (
+                _merge_base_frame(spark, sf_dir)
+                .select(
+                    "doc_id",
+                    "content",
+                    F.lit(1).alias("valid_from"),
+                    F.lit(None).cast("int").alias("valid_to"),
+                    F.lit(1).alias("is_current"),
+                    "part",
+                )
+                .write.mode("overwrite")
+                .partitionBy("part")
+                .parquet(f"{root}/table")
+            )
+        return _scd2_batch_processor(f"{root}/table")
+
+    def finish(root):
+        return spark.read.parquet(f"{root}/table").select(
+            "doc_id", "content", "valid_from", "valid_to", "is_current"
+        )
+
+    return _run_incremental(
+        "stream_scd2_history", sf_dir, state_root, delta, setup, finish
     )
-    q = (
-        stream.writeStream.foreachBatch(_scd2_batch_processor(table_root))
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_scd2_history")
-    finally:
-        q.stop()
-    result = spark.read.parquet(table_root).select(
-        "doc_id", "content", "valid_from", "valid_to", "is_current"
-    )
-    out = _persist_result(result, "stream_scd2_history")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
 
 
 from tailsql_spark.plans.connectors import _SCD2_ORACLE as _SCD2_ORACLE_STREAM  # noqa: E402
@@ -4053,55 +3812,38 @@ def stream_bm25_topk(
     decontamination/eval-leakage probe over a growing training corpus.
     Per-batch cost tracks NEW documents only; state is |matching
     postings| + one counter row per batch, regardless of corpus size."""
-    import shutil
-
     from tailsql_spark.operators.textstats import bm25_rank, BM25_QUERIES
 
     t = load_tables(spark, sf_dir)
     docs = t["documents"].select("doc_id", "text")
-    state_root, _owned_state = _resolve_state_root("bm25", state_root)
-    post_root = f"{state_root}/post"
-    stat_root = f"{state_root}/stat"
-    spark.createDataFrame([], "tok string, doc_id long, tf long, dl long").write.mode(
-        "overwrite"
-    ).parquet(f"{post_root}/seed")
-    spark.createDataFrame([], "n_docs long, sum_dl long").write.mode(
-        "overwrite"
-    ).parquet(f"{stat_root}/seed")
-    src_dir = _stage_stream_source(docs, "bm25", state_root, _owned_state, corpus_tag=sf_dir)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
+
+    def setup(root):
+        spark.createDataFrame(
+            [], "tok string, doc_id long, tf long, dl long"
+        ).write.mode("overwrite").parquet(f"{root}/post/seed")
+        spark.createDataFrame([], "n_docs long, sum_dl long").write.mode(
+            "overwrite"
+        ).parquet(f"{root}/stat/seed")
+        return _bm25_batch_processor(f"{root}/post", f"{root}/stat")
+
+    def finish(root):
+        postings = spark.read.parquet(*_mh_state_paths(f"{root}/post"))
+        stats = spark.read.parquet(*_mh_state_paths(f"{root}/stat")).agg(
+            F.sum("n_docs").alias("n_docs"), F.sum("sum_dl").alias("sum_dl")
+        )
+        dfreq = postings.groupBy("tok").agg(F.count("*").alias("df"))
+        qterms = spark.createDataFrame(
+            [(qid, q_, tok) for qid, q_ in BM25_QUERIES for tok in q_.split(" ")],
+            "qid string, query string, tok string",
+        )
+        matched = postings.join(F.broadcast(qterms), "tok").select(
+            "qid", "query", "doc_id", "tok", "tf", "dl"
+        )
+        return bm25_rank(matched, dfreq, stats)
+
+    return _run_incremental(
+        "stream_bm25_topk", sf_dir, state_root, docs, setup, finish
     )
-    q = (
-        stream.writeStream.foreachBatch(_bm25_batch_processor(post_root, stat_root))
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_bm25_topk")
-    finally:
-        q.stop()
-    postings = spark.read.parquet(*_mh_state_paths(post_root))
-    stats = spark.read.parquet(*_mh_state_paths(stat_root)).agg(
-        F.sum("n_docs").alias("n_docs"), F.sum("sum_dl").alias("sum_dl")
-    )
-    dfreq = postings.groupBy("tok").agg(F.count("*").alias("df"))
-    qterms = spark.createDataFrame(
-        [(qid, q_, tok) for qid, q_ in BM25_QUERIES for tok in q_.split(" ")],
-        "qid string, query string, tok string",
-    )
-    matched = postings.join(F.broadcast(qterms), "tok").select(
-        "qid", "query", "doc_id", "tok", "tf", "dl"
-    )
-    result = bm25_rank(matched, dfreq, stats)
-    out = _persist_result(result, "stream_bm25_topk")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
 
 
 from tailsql_spark.operators.textstats import _BM25_ORACLE as _BM25_ORACLE_STREAM  # noqa: E402
@@ -4260,9 +4002,7 @@ def _ivf_purge_takedowns_locked(
     # planning-metadata: every committed leaf dir of the family
     paths = [r.path for r in man.select("path").distinct().collect()]  # planning-metadata
     src = sess.read.parquet(f"{cells_root}/seed", *paths)
-    dels = (
-        sess.read.parquet(*_del_state_paths(del_root)).select("vec_id").distinct()
-    )
+    dels = _del_ids(sess, del_root, "vec_id")
     purged = src.join(F.broadcast(dels), "vec_id", "left_anti").withColumn(
         "cell", F.col("ccell")
     )
@@ -4442,11 +4182,7 @@ def _ivf_retrain_quantizer_locked(
         "vec_id", "v", "nrm"
     )
     if del_root is not None:
-        dels = (
-            sess.read.parquet(*_del_state_paths(del_root))
-            .select("vec_id")
-            .distinct()
-        )
+        dels = _del_ids(sess, del_root, "vec_id")
         src = src.join(F.broadcast(dels), "vec_id", "left_anti")
     src = src.persist()
     n_live = src.count()
@@ -4583,11 +4319,7 @@ def ivf_recertify_recall(
 
     raw_live = None
     if del_root is not None:
-        dels = (
-            sess.read.parquet(*_del_state_paths(del_root))
-            .select("vec_id")
-            .distinct()
-        )
+        dels = _del_ids(sess, del_root, "vec_id")
         raw_live = (
             load_tables(sess, sf_dir)["embeddings"]
             .select("vec_id", "embedding")
@@ -4730,11 +4462,7 @@ def bm25_maintain(
         rows=int(meta1.get("rows", report["rows"])),
     )
     if del_root is not None:
-        dels = (
-            sess.read.parquet(*_del_state_paths(del_root))
-            .select("doc_id")
-            .distinct()
-        )
+        dels = _del_ids(sess, del_root)
         leaked = (
             sess.read.parquet(f"{post_root}/base_v{report['version']}")
             .join(F.broadcast(dels), "doc_id", "left_semi")
@@ -4938,9 +4666,7 @@ def _curation_maintain_locked(sess: SparkSession, state_root: str) -> dict:
     if report["noop"]:
         return report  # healthy: base-only everywhere, tombstones folded
 
-    dels_df = (
-        sess.read.parquet(*_del_state_paths(del_root)).select("doc_id").distinct()
-    )
+    dels_df = _del_ids(sess, del_root)
     report["dels"] = dels_df.count()
     for name, root in flat_roots.items():
         if needs[name]:
@@ -4957,9 +4683,7 @@ def _curation_maintain_locked(sess: SparkSession, state_root: str) -> dict:
 
     # purge invariant, re-read from the LIVE (compacted) tombstone log:
     # zero tombstoned rows may remain in any live content family.
-    dels_live = (
-        sess.read.parquet(*_del_state_paths(del_root)).select("doc_id").distinct()
-    )
+    dels_live = _del_ids(sess, del_root)
     for name, root in flat_roots.items():
         live = sess.read.parquet(*_flat_state_paths(root))
         leaked = live.join(F.broadcast(dels_live), "doc_id", "left_semi").count()
@@ -5183,57 +4907,59 @@ def stream_ivf_index(
     pair: BM25 (hash buckets, online re-dialable) and IVF (learned
     cells, frozen quantizer + rebuild-to-retrain) both now have batch
     builders AND incremental maintenance."""
-    import shutil
-
-    from tailsql_spark.operators.similarity import (
-        N_QUERIES_IDX,
-        as_double,
-        ivf_cell_count,
-        norm,
-    )
+    from tailsql_spark.operators.similarity import N_QUERIES_IDX
 
     t = load_tables(spark, sf_dir)
     emb = t["embeddings"].select("vec_id", "embedding")
-    state_root, _owned_state = _resolve_state_root("ivfidx", state_root)
-    cells_root = f"{state_root}/cells"
-    seeds_path = f"{state_root}/seeds"
+
+    def setup(root):
+        return _ivf_index_processor(*_ivf_index_seed(spark, emb, root))
+
+    def finish(root):
+        return _ivf_index_serve(
+            spark, sf_dir, f"{root}/cells", f"{root}/seeds", N_QUERIES_IDX
+        )
+
+    return _run_incremental(
+        "stream_ivf_index", sf_dir, state_root, emb, setup, finish
+    )
+
+
+def _ivf_index_seed(
+    spark: SparkSession, emb: DataFrame, root: str, degenerate: bool = False
+) -> tuple[str, str]:
+    """Seed the incremental IVF families under ``root``: an empty
+    ``cells`` family with its bucket manifest, and the frozen quantizer
+    at ``seeds``, staged once per pipeline (a resumed root keeps it).
+    The quantizer is the dialed seed set — in production, the
+    offline-trained coarse quantizer shipped to the ingestion job;
+    deletions arrive later and never retrain it, and its dial matches
+    the batch index, so the oracle's shared CASE ladder reproduces nc.
+    ``degenerate`` (``stream_ivf_retrain``) stages nc copies of vector
+    0 instead: same dial, so the drift is in the geometry, not the cell
+    count — every ingested vector ties at equal cosine and
+    assign_cells' lowest-seed-id tiebreak collapses it into cell 0, so
+    imbalance == nc trips the gate deterministically.  Returns
+    ``(cells_root, seeds_path)``."""
+    from tailsql_spark.operators.similarity import as_double, ivf_cell_count, norm
+
+    cells_root, seeds_path = f"{root}/cells", f"{root}/seeds"
     embd = emb.select("vec_id", as_double(F.col("embedding")).alias("v")).withColumn(
         "nrm", norm(F.col("v"))
     )
     if not _fs_exists(f"{seeds_path}/_SUCCESS"):
-        # the frozen quantizer, staged once per pipeline: the dialed
-        # seed set (in production, the offline-trained coarse
-        # quantizer shipped to the ingestion job)
         nc = ivf_cell_count(embd.count())
-        embd.filter(F.col("vec_id") < nc).select("vec_id", "v", "nrm").write.mode(
-            "overwrite"
-        ).parquet(seeds_path)
+        if degenerate:
+            v0 = embd.filter(F.col("vec_id") == 0).select("v", "nrm")
+            seeds = spark.range(int(nc)).select(F.col("id").alias("vec_id")).join(v0)
+        else:
+            seeds = embd.filter(F.col("vec_id") < nc).select("vec_id", "v", "nrm")
+        seeds.write.mode("overwrite").parquet(seeds_path)
     spark.createDataFrame(
         [], "vec_id long, v array<double>, nrm double, ccell long"
     ).write.mode("overwrite").parquet(f"{cells_root}/seed")
     _bucket_manifest_seed(spark.createDataFrame([], "x long"), cells_root)
-    src_dir = _stage_stream_source(emb, "ivfidx", state_root, _owned_state, corpus_tag=sf_dir)
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_ivf_index_processor(cells_root, seeds_path))
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_ivf_index")
-    finally:
-        q.stop()
-    result = _ivf_index_serve(spark, sf_dir, cells_root, seeds_path, N_QUERIES_IDX)
-    out = _persist_result(result, "stream_ivf_index")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
+    return cells_root, seeds_path
 
 
 def _ivf_index_serve(
@@ -5361,14 +5087,7 @@ def stream_ivf_takedown(
     serve below runs over the PURGED base — bytes gone, ranking
     unchanged.  Certified against the SAME persisted-IVF oracle
     recomputed on the corpus MINUS the deleted set."""
-    import shutil
-
-    from tailsql_spark.operators.similarity import (
-        N_QUERIES_IDX,
-        as_double,
-        ivf_cell_count,
-        norm,
-    )
+    from tailsql_spark.operators.similarity import N_QUERIES_IDX
 
     t = load_tables(spark, sf_dir)
     emb = t["embeddings"].select("vec_id", "embedding")
@@ -5377,65 +5096,31 @@ def stream_ivf_takedown(
         F.col("vec_id") % IVF_TAKEDOWN_MOD == IVF_TAKEDOWN_RESIDUE
     ).withColumn("op", F.lit("D"))
     delta = ins.unionByName(dels)
-    state_root, _owned_state = _resolve_state_root("ivftake", state_root)
-    cells_root = f"{state_root}/cells"
-    seeds_path = f"{state_root}/seeds"
-    del_root = f"{state_root}/del"
-    embd = emb.select("vec_id", as_double(F.col("embedding")).alias("v")).withColumn(
-        "nrm", norm(F.col("v"))
-    )
-    if not _fs_exists(f"{seeds_path}/_SUCCESS"):
-        # frozen quantizer staged from the INSERT corpus (deletions
-        # arrive later and never retrain it — same dial as the batch
-        # index, so the oracle's shared CASE ladder reproduces nc)
-        nc = ivf_cell_count(embd.count())
-        embd.filter(F.col("vec_id") < nc).select("vec_id", "v", "nrm").write.mode(
-            "overwrite"
-        ).parquet(seeds_path)
-    spark.createDataFrame(
-        [], "vec_id long, v array<double>, nrm double, ccell long"
-    ).write.mode("overwrite").parquet(f"{cells_root}/seed")
-    spark.createDataFrame([], "vec_id long").write.mode("overwrite").parquet(
-        f"{del_root}/seed"
-    )
-    _bucket_manifest_seed(spark.createDataFrame([], "x long"), cells_root)
-    src_dir = _stage_stream_source(
-        delta, "ivftake", state_root, _owned_state, corpus_tag=sf_dir
-    )
-    stream = (
-        spark.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            _ivf_index_processor(cells_root, seeds_path, del_root)
+
+    def setup(root):
+        cells_root, seeds_path = _ivf_index_seed(spark, emb, root)
+        _del_log_seed(spark, f"{root}/del", "vec_id")
+        return _ivf_index_processor(cells_root, seeds_path, f"{root}/del")
+
+    def finish(root):
+        cells_root, del_root = f"{root}/cells", f"{root}/del"
+        # OFFLINE physical purge (the stream has fully drained —
+        # availableNow completed — so no in-flight bid exists): rewrite the
+        # cell state minus the delete set under a new manifest version,
+        # vacuum the superseded dirs, and serve from the purged base.  The
+        # served result must be IDENTICAL to serving the unpurged state
+        # through the anti-join — the oracle certifies exactly that.
+        ivf_purge_takedowns(spark, cells_root, del_root)
+        expire_state_versions(spark, cells_root)
+        expire_del_versions(del_root)
+        return _ivf_index_serve(
+            spark, sf_dir, cells_root, f"{root}/seeds", N_QUERIES_IDX,
+            del_root=del_root,
         )
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+
+    return _run_incremental(
+        "stream_ivf_takedown", sf_dir, state_root, delta, setup, finish
     )
-    try:
-        _await_or_raise(q, "stream_ivf_takedown")
-    finally:
-        q.stop()
-    # OFFLINE physical purge (the stream has fully drained —
-    # availableNow completed — so no in-flight bid exists): rewrite the
-    # cell state minus the delete set under a new manifest version,
-    # vacuum the superseded dirs, and serve from the purged base.  The
-    # served result must be IDENTICAL to serving the unpurged state
-    # through the anti-join — the oracle certifies exactly that.
-    ivf_purge_takedowns(spark, cells_root, del_root)
-    expire_state_versions(spark, cells_root)
-    expire_del_versions(del_root)
-    result = _ivf_index_serve(
-        spark, sf_dir, cells_root, seeds_path, N_QUERIES_IDX, del_root=del_root
-    )
-    out = _persist_result(result, "stream_ivf_takedown")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
 
 
 REGISTRY["stream_ivf_takedown"] = QuerySpec(
@@ -5575,14 +5260,7 @@ def stream_ivf_retrain(
     (:func:`_ivf_retrain_oracle`): re-dialed count, live-lowest
     seeding, one shared assignment rule — the quantizer the re-train
     COMMITS is the quantizer the oracle DERIVES."""
-    import shutil
-
-    from tailsql_spark.operators.similarity import (
-        N_QUERIES_IDX,
-        as_double,
-        ivf_cell_count,
-        norm,
-    )
+    from tailsql_spark.operators.similarity import N_QUERIES_IDX
 
     t = load_tables(spark, sf_dir)
     emb = t["embeddings"].select("vec_id", "embedding")
@@ -5591,75 +5269,37 @@ def stream_ivf_retrain(
         F.col("vec_id") % IVF_TAKEDOWN_MOD == IVF_TAKEDOWN_RESIDUE
     ).withColumn("op", F.lit("D"))
     delta = ins.unionByName(dels)
-    state_root, _owned_state = _resolve_state_root("ivfretrain", state_root)
-    cells_root = f"{state_root}/cells"
-    seeds_path = f"{state_root}/seeds"
-    del_root = f"{state_root}/del"
-    embd = emb.select("vec_id", as_double(F.col("embedding")).alias("v")).withColumn(
-        "nrm", norm(F.col("v"))
-    )
-    if not _fs_exists(f"{seeds_path}/_SUCCESS"):
-        # the DEGENERATE quantizer: nc copies of vector 0 (same dial as
-        # the healthy rows, so the drift is in the geometry, not the
-        # cell count) — every ingested vector ties at equal cosine and
-        # assign_cells' lowest-seed-id tiebreak collapses it into cell
-        # 0; imbalance == nc trips the gate deterministically
-        nc = ivf_cell_count(embd.count())
-        v0 = embd.filter(F.col("vec_id") == 0).select("v", "nrm")
-        spark.range(int(nc)).select(F.col("id").alias("vec_id")).join(v0).write.mode(
-            "overwrite"
-        ).parquet(seeds_path)
-    spark.createDataFrame(
-        [], "vec_id long, v array<double>, nrm double, ccell long"
-    ).write.mode("overwrite").parquet(f"{cells_root}/seed")
-    spark.createDataFrame([], "vec_id long").write.mode("overwrite").parquet(
-        f"{del_root}/seed"
-    )
-    _bucket_manifest_seed(spark.createDataFrame([], "x long"), cells_root)
-    src_dir = _stage_stream_source(
-        delta, "ivfretrain", state_root, _owned_state, corpus_tag=sf_dir
-    )
-    stream = (
-        spark.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            _ivf_index_processor(cells_root, seeds_path, del_root)
+
+    def setup(root):
+        cells_root, seeds_path = _ivf_index_seed(spark, emb, root, degenerate=True)
+        _del_log_seed(spark, f"{root}/del", "vec_id")
+        return _ivf_index_processor(cells_root, seeds_path, f"{root}/del")
+
+    def finish(root):
+        cells_root, seeds_path = f"{root}/cells", f"{root}/seeds"
+        # the maintenance loop (stream fully drained): purge the takedowns,
+        # trip the gate, re-train at n_iters=1 — the deterministically-
+        # seeded geometry the oracle replays exactly (see
+        # _ivf_retrain_oracle on why the float-mean iterations stay
+        # pytest-gated) — and re-certify recall over the live ground truth
+        report = ivf_maintain(
+            spark, sf_dir, cells_root, seeds_path,
+            del_root=f"{root}/del", n_queries=N_QUERIES_IDX, n_iters=1,
         )
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_ivf_retrain")
-    finally:
-        q.stop()
-    # the maintenance loop (stream fully drained): purge the takedowns,
-    # trip the gate, re-train at n_iters=1 — the deterministically-
-    # seeded geometry the oracle replays exactly (see
-    # _ivf_retrain_oracle on why the float-mean iterations stay
-    # pytest-gated) — and re-certify recall over the live ground truth
-    report = ivf_maintain(
-        spark, sf_dir, cells_root, seeds_path,
-        del_root=del_root, n_queries=N_QUERIES_IDX, n_iters=1,
-    )
-    if not report.get("retrained"):
-        raise RuntimeError(
-            "stream_ivf_retrain: the imbalance gate did not trip "
-            f"(report={report!r}) — the certified re-train path never ran; "
-            "refusing to serve a vacuous certification"
+        if not report.get("retrained"):
+            raise RuntimeError(
+                "stream_ivf_retrain: the imbalance gate did not trip "
+                f"(report={report!r}) — the certified re-train path never ran; "
+                "refusing to serve a vacuous certification"
+            )
+        return _ivf_index_serve(
+            spark, sf_dir, cells_root, seeds_path, N_QUERIES_IDX,
+            n_probes=IVF_RETRAIN_PROBES, del_root=f"{root}/del",
         )
-    result = _ivf_index_serve(
-        spark, sf_dir, cells_root, seeds_path, N_QUERIES_IDX,
-        n_probes=IVF_RETRAIN_PROBES, del_root=del_root,
+
+    return _run_incremental(
+        "stream_ivf_retrain", sf_dir, state_root, delta, setup, finish
     )
-    out = _persist_result(result, "stream_ivf_retrain")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
 
 
 REGISTRY["stream_ivf_retrain"] = QuerySpec(
@@ -5702,9 +5342,7 @@ def _bm25_index_seed(
     spark.createDataFrame([], "n_docs long, sum_dl long").write.mode(
         "overwrite"
     ).parquet(f"{stat_root}/seed")
-    spark.createDataFrame([], "doc_id long").write.mode("overwrite").parquet(
-        f"{del_root}/seed"
-    )
+    _del_log_seed(spark, del_root)
     _bucket_manifest_seed(empty_post, post_root)
     return post_root, stat_root, del_root
 
@@ -5929,38 +5567,20 @@ def stream_bm25_index(
     ``sink_bm25_index`` (full index, rebuilt per corpus fingerprint):
     one state layout that is both the serving index AND incrementally
     fresh."""
-    import shutil
-
     t = load_tables(spark, sf_dir)
     docs = t["documents"].select("doc_id", "text")
-    state_root, _owned_state = _resolve_state_root("bm25idx", state_root)
-    post_root, stat_root, del_root = _bm25_index_seed(spark, state_root)
-    src_dir = _stage_stream_source(docs, "bm25idx", state_root, _owned_state, corpus_tag=sf_dir)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            _bm25_index_processor(post_root, stat_root, del_root)
+
+    def setup(root):
+        return _bm25_index_processor(*_bm25_index_seed(spark, root))
+
+    def finish(root):
+        return _bm25_index_serve(
+            spark, f"{root}/post", f"{root}/stat", f"{root}/del"
         )
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+
+    return _run_incremental(
+        "stream_bm25_index", sf_dir, state_root, docs, setup, finish
     )
-    try:
-        _await_or_raise(q, "stream_bm25_index")
-    finally:
-        q.stop()
-    out = _persist_result(
-        _bm25_index_serve(spark, post_root, stat_root, del_root),
-        "stream_bm25_index",
-    )
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
 
 
 REGISTRY["stream_bm25_index"] = QuerySpec(
@@ -6018,8 +5638,6 @@ def stream_bm25_takedown(
     a rebuild).  Batch order does not matter: tombstone application is
     an anti-join and the stats are additive, so I/D arrival order
     commutes — staging may scatter a doc's 'D' before its 'I'."""
-    import shutil
-
     t = load_tables(spark, sf_dir)
     docs = t["documents"].select("doc_id", "text")
     ins = docs.withColumn("op", F.lit("I"))
@@ -6027,46 +5645,28 @@ def stream_bm25_takedown(
         F.col("doc_id") % BM25_TAKEDOWN_MOD == BM25_TAKEDOWN_RESIDUE
     ).withColumn("op", F.lit("D"))
     delta = ins.unionByName(dels)
-    state_root, _owned_state = _resolve_state_root("bm25take", state_root)
-    post_root, stat_root, del_root = _bm25_index_seed(spark, state_root)
-    src_dir = _stage_stream_source(
-        delta, "bm25take", state_root, _owned_state, corpus_tag=sf_dir
-    )
-    stream = (
-        spark.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            _bm25_index_processor(post_root, stat_root, del_root)
+
+    def setup(root):
+        return _bm25_index_processor(*_bm25_index_seed(spark, root))
+
+    def finish(root):
+        # OFFLINE physical purge (stream drained), routed through the
+        # cron entry point `bm25_maintain` (r14) so the graded row
+        # certifies the scheduled job itself: the unfolded-delta state
+        # forces the del-aware fold regardless of the dial (at
+        # certification scale the posting count never crosses a doubling),
+        # the tombstone log is compacted, superseded dirs vacuumed, and
+        # the zero-tombstoned-postings invariant re-checked from the live
+        # base — the certified serve below runs over purged state,
+        # matching the IVF and curation takedown rows.
+        bm25_maintain(spark, f"{root}/post", del_root=f"{root}/del")
+        return _bm25_index_serve(
+            spark, f"{root}/post", f"{root}/stat", f"{root}/del"
         )
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+
+    return _run_incremental(
+        "stream_bm25_takedown", sf_dir, state_root, delta, setup, finish
     )
-    try:
-        _await_or_raise(q, "stream_bm25_takedown")
-    finally:
-        q.stop()
-    # OFFLINE physical purge (stream drained), routed through the
-    # cron entry point `bm25_maintain` (r14) so the graded row
-    # certifies the scheduled job itself: the unfolded-delta state
-    # forces the del-aware fold regardless of the dial (at
-    # certification scale the posting count never crosses a doubling),
-    # the tombstone log is compacted, superseded dirs vacuumed, and
-    # the zero-tombstoned-postings invariant re-checked from the live
-    # base — the certified serve below runs over purged state,
-    # matching the IVF and curation takedown rows.
-    bm25_maintain(spark, post_root, del_root=del_root)
-    out = _persist_result(
-        _bm25_index_serve(spark, post_root, stat_root, del_root),
-        "stream_bm25_takedown",
-    )
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
 
 
 REGISTRY["stream_bm25_takedown"] = QuerySpec(
@@ -6146,8 +5746,6 @@ def stream_phash_dedup(
     cost is hashing NEW payloads only (the expensive part — decode —
     never re-runs over history), and state is 5 ints per image
     regardless of payload size."""
-    import shutil
-
     from tailsql_spark.operators.multimodal import (
         PHASH_BANDS,
         phash_near_groups,
@@ -6156,38 +5754,24 @@ def stream_phash_dedup(
 
     media = synth_media(spark, sf_dir).filter(F.col("media_type") == "image")
     images = media.select("doc_id", "payload")
-    state_root, _owned_state = _resolve_state_root("phash", state_root)
-    ph_root = f"{state_root}/ph"
-    spark.createDataFrame(
-        [], "doc_id long, b0 long, b1 long, b2 long, b3 long"
-    ).write.mode("overwrite").parquet(f"{ph_root}/seed")
-    src_dir = _stage_stream_source(images, "phash", state_root, _owned_state, corpus_tag=sf_dir)
-    stream = (
-        spark.readStream.schema(images.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
+
+    def setup(root):
+        spark.createDataFrame(
+            [], "doc_id long, b0 long, b1 long, b2 long, b3 long"
+        ).write.mode("overwrite").parquet(f"{root}/ph/seed")
+        return _phash_batch_processor(f"{root}/ph")
+
+    def finish(root):
+        bcols = [f"b{k}" for k in range(PHASH_BANDS)]
+        ph = spark.read.parquet(*_mh_state_paths(f"{root}/ph"))
+        grp = ph.groupBy(*bcols).agg(
+            F.min("doc_id").alias("canonical_doc"), F.count("*").alias("n_docs")
+        )
+        return phash_near_groups(grp)
+
+    return _run_incremental(
+        "stream_phash_dedup", sf_dir, state_root, images, setup, finish
     )
-    q = (
-        stream.writeStream.foreachBatch(_phash_batch_processor(ph_root))
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_phash_dedup")
-    finally:
-        q.stop()
-    bcols = [f"b{k}" for k in range(PHASH_BANDS)]
-    ph = spark.read.parquet(*_mh_state_paths(ph_root))
-    grp = ph.groupBy(*bcols).agg(
-        F.min("doc_id").alias("canonical_doc"), F.count("*").alias("n_docs")
-    )
-    result = phash_near_groups(grp)
-    out = _persist_result(result, "stream_phash_dedup")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
 
 
 from tailsql_spark.operators.multimodal import _PHASH_ORACLE as _PHASH_ORACLE_STREAM  # noqa: E402
@@ -6260,40 +5844,24 @@ def stream_audio_fp_dedup(
     ``multimodal_audio_fp_dedup`` — the streaming ≡ batch guarantee
     for the audio modality.  Per-batch cost tracks new payloads; state
     is ~|tokens|/4 hash rows per doc regardless of payload size."""
-    import shutil
-
     from tailsql_spark.operators.multimodal import audio_near_groups, synth_media
 
     media = synth_media(spark, sf_dir).filter(F.col("media_type") == "audio")
     audio = media.select("doc_id", "payload")
-    state_root, _owned_state = _resolve_state_root("audiofp", state_root)
-    fp_root = f"{state_root}/fp"
-    spark.createDataFrame([], "doc_id long, fh string").write.mode(
-        "overwrite"
-    ).parquet(f"{fp_root}/seed")
-    src_dir = _stage_stream_source(audio, "audiofp", state_root, _owned_state, corpus_tag=sf_dir)
-    stream = (
-        spark.readStream.schema(audio.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
+
+    def setup(root):
+        spark.createDataFrame([], "doc_id long, fh string").write.mode(
+            "overwrite"
+        ).parquet(f"{root}/fp/seed")
+        return _audio_fp_batch_processor(f"{root}/fp")
+
+    def finish(root):
+        ff = spark.read.parquet(*_mh_state_paths(f"{root}/fp"))
+        return audio_near_groups(audio.select("doc_id"), ff)
+
+    return _run_incremental(
+        "stream_audio_fp_dedup", sf_dir, state_root, audio, setup, finish
     )
-    q = (
-        stream.writeStream.foreachBatch(_audio_fp_batch_processor(fp_root))
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_audio_fp_dedup")
-    finally:
-        q.stop()
-    ff = spark.read.parquet(*_mh_state_paths(fp_root))
-    result = audio_near_groups(audio.select("doc_id"), ff)
-    out = _persist_result(result, "stream_audio_fp_dedup")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
 
 
 from tailsql_spark.operators.multimodal import _AUDIO_FP_ORACLE as _AUDIO_FP_ORACLE_STREAM  # noqa: E402
@@ -6342,8 +5910,6 @@ def stream_audio_takedown(
     matching serves from the PURGED state, certified against the batch
     audio oracle recomputed minus the deleted set (which reshuffles
     the df-capped match structure corpus-wide, not just the row set)."""
-    import shutil
-
     from tailsql_spark.operators.multimodal import audio_near_groups, synth_media
 
     media = synth_media(spark, sf_dir).filter(F.col("media_type") == "audio")
@@ -6352,52 +5918,26 @@ def stream_audio_takedown(
         F.col("doc_id") % AUDIO_TAKEDOWN_MOD == AUDIO_TAKEDOWN_RESIDUE
     )
     delta = _takedown_delta(audio, is_del)
-    state_root, _owned_state = _resolve_state_root("audtake", state_root)
-    fp_root = f"{state_root}/fp"
-    del_root = f"{state_root}/del"
-    spark.createDataFrame([], "doc_id long, fh string").write.mode(
-        "overwrite"
-    ).parquet(f"{fp_root}/seed")
-    spark.createDataFrame([], "doc_id long").write.mode("overwrite").parquet(
-        f"{del_root}/seed"
-    )
-    src_dir = _stage_stream_source(
-        delta, "audtake", state_root, _owned_state, corpus_tag=sf_dir
-    )
-    process = _takedown_processor(
-        _audio_fp_batch_processor(fp_root), del_root, key="doc_id"
-    )
-    stream = (
-        spark.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_audio_takedown")
-    finally:
-        q.stop()
 
-    dels_df = (
-        spark.read.parquet(*_del_state_paths(del_root)).select("doc_id").distinct()
-    )
-    purge_flat_family(spark, fp_root, dels_df, col="doc_id")
-    expire_del_versions(fp_root)
-    _compact_del_log(spark, del_root, "doc_id", None)
-    expire_del_versions(del_root)
+    def setup(root):
+        spark.createDataFrame([], "doc_id long, fh string").write.mode(
+            "overwrite"
+        ).parquet(f"{root}/fp/seed")
+        _del_log_seed(spark, f"{root}/del")
+        return _takedown_processor(
+            _audio_fp_batch_processor(f"{root}/fp"), f"{root}/del"
+        )
 
-    ff = spark.read.parquet(*_flat_state_paths(fp_root))
-    result = audio_near_groups(audio.filter(~is_del).select("doc_id"), ff)
-    out = _persist_result(result, "stream_audio_takedown")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
+    def finish(root):
+        purge_flat_family(spark, f"{root}/fp", _del_ids(spark, f"{root}/del"))
+        expire_del_versions(f"{root}/fp")
+        _vacuum_del_log(spark, f"{root}/del")
+        ff = spark.read.parquet(*_flat_state_paths(f"{root}/fp"))
+        return audio_near_groups(audio.filter(~is_del).select("doc_id"), ff)
+
+    return _run_incremental(
+        "stream_audio_takedown", sf_dir, state_root, delta, setup, finish
+    )
 
 
 REGISTRY["stream_audio_takedown"] = QuerySpec(
@@ -6464,8 +6004,6 @@ def stream_video_dedup(
     cost tracks new payloads (frame decode never re-runs over
     history); state is 4 ints per sampled frame regardless of payload
     size."""
-    import shutil
-
     from tailsql_spark.operators.multimodal import (
         VIDEO_DF_CAP,
         VIDEO_MIN_SHARED,
@@ -6475,42 +6013,28 @@ def stream_video_dedup(
 
     media = synth_media(spark, sf_dir).filter(F.col("media_type") == "video")
     videos = media.select("doc_id", "payload")
-    state_root, _owned_state = _resolve_state_root("videofp", state_root)
-    fp_root = f"{state_root}/fp"
-    spark.createDataFrame([], "doc_id long, fh string").write.mode(
-        "overwrite"
-    ).parquet(f"{fp_root}/seed")
-    src_dir = _stage_stream_source(videos, "videofp", state_root, _owned_state, corpus_tag=sf_dir)
-    stream = (
-        spark.readStream.schema(videos.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
+
+    def setup(root):
+        spark.createDataFrame([], "doc_id long, fh string").write.mode(
+            "overwrite"
+        ).parquet(f"{root}/fp/seed")
+        return _video_fp_batch_processor(f"{root}/fp")
+
+    def finish(root):
+        ff = spark.read.parquet(*_mh_state_paths(f"{root}/fp"))
+        # every video yields >= 1 sampled frame (n_frames >= 1), so the
+        # merged postings' distinct doc set IS the streamed video id set —
+        # no separate id log needed
+        return audio_near_groups(
+            ff.select("doc_id").distinct(),
+            ff,
+            df_cap=VIDEO_DF_CAP,
+            min_shared=VIDEO_MIN_SHARED,
+        ).withColumnRenamed("n_frames", "n_sig_bands")
+
+    return _run_incremental(
+        "stream_video_dedup", sf_dir, state_root, videos, setup, finish
     )
-    q = (
-        stream.writeStream.foreachBatch(_video_fp_batch_processor(fp_root))
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_video_dedup")
-    finally:
-        q.stop()
-    ff = spark.read.parquet(*_mh_state_paths(fp_root))
-    # every video yields >= 1 sampled frame (n_frames >= 1), so the
-    # merged postings' distinct doc set IS the streamed video id set —
-    # no separate id log needed
-    result = audio_near_groups(
-        ff.select("doc_id").distinct(),
-        ff,
-        df_cap=VIDEO_DF_CAP,
-        min_shared=VIDEO_MIN_SHARED,
-    ).withColumnRenamed("n_frames", "n_sig_bands")
-    out = _persist_result(result, "stream_video_dedup")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
 
 
 from tailsql_spark.operators.multimodal import _VIDEO_ORACLE as _VIDEO_ORACLE_STREAM  # noqa: E402
@@ -6568,8 +6092,6 @@ def stream_video_takedown(
     recomputed on the corpus minus the deleted set, chosen so
     surviving docs' match counts actually change (deleted docs sat in
     their matches)."""
-    import shutil
-
     from tailsql_spark.operators.multimodal import (
         VIDEO_DF_CAP,
         VIDEO_MIN_SHARED,
@@ -6583,61 +6105,35 @@ def stream_video_takedown(
         F.col("doc_id") % VIDEO_TAKEDOWN_MOD == VIDEO_TAKEDOWN_RESIDUE
     )
     delta = _takedown_delta(videos, is_del)
-    state_root, _owned_state = _resolve_state_root("vidtake", state_root)
-    fp_root = f"{state_root}/fp"
-    del_root = f"{state_root}/del"
-    spark.createDataFrame([], "doc_id long, fh string").write.mode(
-        "overwrite"
-    ).parquet(f"{fp_root}/seed")
-    spark.createDataFrame([], "doc_id long").write.mode("overwrite").parquet(
-        f"{del_root}/seed"
-    )
-    src_dir = _stage_stream_source(
-        delta, "vidtake", state_root, _owned_state, corpus_tag=sf_dir
-    )
-    process = _takedown_processor(
-        _video_fp_batch_processor(fp_root), del_root, key="doc_id"
-    )
-    stream = (
-        spark.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_video_takedown")
-    finally:
-        q.stop()
 
-    # OFFLINE physical purge: frame postings are content (dHashes of
-    # the doc's own sampled frames) — anti-join rewrite under the
-    # {version, folded_below_bid} pointer, tombstone log compacted,
-    # superseded dirs vacuumed; the serve below reads the PURGED log.
-    dels_df = (
-        spark.read.parquet(*_del_state_paths(del_root)).select("doc_id").distinct()
-    )
-    purge_flat_family(spark, fp_root, dels_df, col="doc_id")
-    expire_del_versions(fp_root)
-    _compact_del_log(spark, del_root, "doc_id", None)
-    expire_del_versions(del_root)
+    def setup(root):
+        spark.createDataFrame([], "doc_id long, fh string").write.mode(
+            "overwrite"
+        ).parquet(f"{root}/fp/seed")
+        _del_log_seed(spark, f"{root}/del")
+        return _takedown_processor(
+            _video_fp_batch_processor(f"{root}/fp"), f"{root}/del"
+        )
 
-    ff = spark.read.parquet(*_flat_state_paths(fp_root))
-    result = audio_near_groups(
-        ff.select("doc_id").distinct(),
-        ff,
-        df_cap=VIDEO_DF_CAP,
-        min_shared=VIDEO_MIN_SHARED,
-    ).withColumnRenamed("n_frames", "n_sig_bands")
-    out = _persist_result(result, "stream_video_takedown")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
+    def finish(root):
+        # OFFLINE physical purge: frame postings are content (dHashes of
+        # the doc's own sampled frames) — anti-join rewrite under the
+        # {version, folded_below_bid} pointer, tombstone log compacted,
+        # superseded dirs vacuumed; the serve below reads the PURGED log.
+        purge_flat_family(spark, f"{root}/fp", _del_ids(spark, f"{root}/del"))
+        expire_del_versions(f"{root}/fp")
+        _vacuum_del_log(spark, f"{root}/del")
+        ff = spark.read.parquet(*_flat_state_paths(f"{root}/fp"))
+        return audio_near_groups(
+            ff.select("doc_id").distinct(),
+            ff,
+            df_cap=VIDEO_DF_CAP,
+            min_shared=VIDEO_MIN_SHARED,
+        ).withColumnRenamed("n_frames", "n_sig_bands")
+
+    return _run_incremental(
+        "stream_video_takedown", sf_dir, state_root, delta, setup, finish
+    )
 
 
 REGISTRY["stream_video_takedown"] = QuerySpec(
@@ -6735,34 +6231,33 @@ def _unified_batch_processor(
     return process
 
 
-def _unified_curation_layout(spark: SparkSession, docs: DataFrame, state_root: str):
+def _unified_curation_layout(
+    spark: SparkSession, docs: DataFrame, state_root: str, takedown: bool = False
+):
     """Seed the unified-curation composition's state families under
     ``state_root`` and assemble its lease-coordinated foreachBatch
-    processor — factored (r16) so the graded streaming query and the
-    live-interleaving soak (``tools/live_maintain_soak.py``) drive the
-    IDENTICAL layout.  Returns ``(process, roots)``.
+    processor — factored (r16) so the graded streaming query, its
+    takedown twin and the live-interleaving soak
+    (``tools/live_maintain_soak.py``) drive the IDENTICAL layout.
+    Returns ``(process, roots)``.
 
     Text sub-states use the BUCKETED minhash layout (dial-active
     two-tier state, manifest-pruned probes): the corpus-wide flagship
     composes the 100 TB path, not the flat history scan; the pair
     output contract ({out_root}/{bid} dirs) is identical, so the
     composition is unchanged (stream_curation_survivors keeps the
-    flat processor certified separately)."""
+    flat processor certified separately).
+
+    ``takedown=True`` (``stream_curation_takedown``): the input carries
+    an ``op`` column; 'D' doc_ids land in the shared tombstone log
+    before any sub-state of the batch (``_takedown_processor``) and the
+    MinHash probe anti-joins it.  That build purges offline after the
+    stream drains, so its batches take no ingest lease."""
     bands_root, ex_root, out_root = _mh_bucketed_seed(
         docs.select("doc_id", "text"), state_root
     )
-    edges_root = f"{state_root}/edges"
-    labels_root = f"{state_root}/labels"
-    attrs_root = f"{state_root}/attrs"
-    spark.createDataFrame([], "id_a long, id_b long").write.mode("overwrite").parquet(
-        f"{edges_root}/seed"
-    )
-    spark.createDataFrame([], "doc_id long, cluster_id long").write.mode(
-        "overwrite"
-    ).parquet(f"{labels_root}/seed")
-    spark.createDataFrame(
-        [], "doc_id long, lang string, fingerprint string, n_tokens long"
-    ).write.mode("overwrite").parquet(f"{attrs_root}/seed")
+    edges_root, labels_root, attrs_root = _curation_graph_seed(spark, state_root)
+    del_root = f"{state_root}/del"
     # modality sub-states (the stream_{phash,audio_fp,video}_dedup layouts)
     ph_root = f"{state_root}/ph"
     fpa_root = f"{state_root}/fpa"
@@ -6778,13 +6273,14 @@ def _unified_curation_layout(spark: SparkSession, docs: DataFrame, state_root: s
     # traffic (r16): curation_maintain reads it unconditionally, so a
     # co-scheduled maintenance pass against a takedown-free deployment
     # must find an (empty) seeded log, not FileNotFoundError
-    spark.createDataFrame([], "doc_id long").write.mode("overwrite").parquet(
-        f"{state_root}/del/seed"
-    )
+    _del_log_seed(spark, del_root)
 
     process = _unified_batch_processor(
         _curation_batch_processor(
-            _minhash_bucketed_processor(bands_root, ex_root, out_root),
+            _minhash_bucketed_processor(
+                bands_root, ex_root, out_root,
+                del_root=del_root if takedown else None,
+            ),
             _cc_batch_processor(edges_root, labels_root),
             attrs_root,
             out_root,
@@ -6796,8 +6292,10 @@ def _unified_curation_layout(spark: SparkSession, docs: DataFrame, state_root: s
         # composition-root lease, so a co-scheduled curation_maintain
         # serializes at batch boundaries instead of racing a fold
         # against in-flight state writes
-        ingest_lease_root=state_root,
+        ingest_lease_root=None if takedown else state_root,
     )
+    if takedown:
+        process = _takedown_processor(process, del_root)
     roots = {
         "bands": bands_root,
         "ex": ex_root,
@@ -6838,41 +6336,22 @@ def stream_unified_curation(
     Per-batch cost tracks the batch (gate + probe + seeded propagation
     + one decode pass per modality over NEW payloads only); no state
     kind is new — this op only composes the certified ones."""
-    import shutil
-
     t = load_tables(spark, sf_dir)
     docs = t["documents"].select("doc_id", "lang", "text", "n_chars")
-    state_root, _owned_state = _resolve_state_root("unicur", state_root)
-    src_dir = _stage_stream_source(docs, "unicur", state_root, _owned_state, corpus_tag=sf_dir)
-    process, roots = _unified_curation_layout(spark, docs, state_root)
-    attrs_root, labels_root = roots["attrs"], roots["labels"]
-    ph_root, fpa_root, fpv_root = roots["ph"], roots["fpa"], roots["fpv"]
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_unified_curation")
-    finally:
-        q.stop()
+    def setup(root):
+        return _unified_curation_layout(spark, docs, root)[0]
 
-    result = _unified_curation_serve(
-        spark, spark.read.parquet(src_dir),
-        attrs_root, labels_root, ph_root, fpa_root, fpv_root,
+    def finish(root):
+        return _unified_curation_serve(
+            spark, spark.read.parquet(f"{root}/src"),
+            f"{root}/attrs", f"{root}/labels",
+            f"{root}/ph", f"{root}/fpa", f"{root}/fpv",
+        )
+
+    return _run_incremental(
+        "stream_unified_curation", sf_dir, state_root, docs, setup, finish
     )
-    out = _persist_result(result, "stream_unified_curation")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
 
 
 def _unified_curation_serve(
@@ -6921,11 +6400,7 @@ def _unified_curation_serve(
 
     dels = None
     if del_root is not None:
-        dels = (
-            spark.read.parquet(*_del_state_paths(del_root))
-            .select("doc_id")
-            .distinct()
-        )
+        dels = _del_ids(spark, del_root)
         src_docs = src_docs.join(F.broadcast(dels), "doc_id", "left_anti")
 
     def _live(df):
@@ -7069,10 +6544,23 @@ def _takedown_processor(inner_process, del_root: str, key: str = "doc_id"):
     return process
 
 
-def _unified_takedown_processor(inner_process, del_root: str):
-    """The unified-curation takedown wrapper (r13) — now the doc_id
-    instance of the generic :func:`_takedown_processor`."""
-    return _takedown_processor(inner_process, del_root, key="doc_id")
+def _del_log_seed(spark: SparkSession, del_root: str, key: str = "doc_id") -> None:
+    """Seed an empty tombstone log (one ``key`` column) at ``del_root``."""
+    spark.createDataFrame([], f"{key} long").write.mode("overwrite").parquet(
+        f"{del_root}/seed"
+    )
+
+
+def _del_ids(sess: SparkSession, del_root: str, key: str = "doc_id") -> DataFrame:
+    """The distinct tombstoned ``key`` ids across the whole del log."""
+    return sess.read.parquet(*_del_state_paths(del_root)).select(key).distinct()
+
+
+def _vacuum_del_log(sess: SparkSession, del_root: str, key: str = "doc_id") -> None:
+    """Offline end of a purge: compact the tombstone log into one base
+    and reclaim its superseded dirs."""
+    _compact_del_log(sess, del_root, key, None)
+    expire_del_versions(del_root)
 
 
 def stream_curation_takedown(
@@ -7096,108 +6584,43 @@ def stream_curation_takedown(
     rule, chosen non-vacuous: drop counts shift in text, audio, and
     video, so closure recompute, keep-first re-election, and df-cap
     recomputation are all exercised)."""
-    import shutil
-
     t = load_tables(spark, sf_dir)
     docs = t["documents"].select("doc_id", "lang", "text", "n_chars")
     is_del = (
         F.col("doc_id") % CURATION_TAKEDOWN_MOD == CURATION_TAKEDOWN_RESIDUE
     )
-    delta = docs.withColumn("op", F.lit("I")).unionByName(
-        docs.filter(is_del).withColumn("op", F.lit("D"))
-    )
-    state_root, _owned_state = _resolve_state_root("curtake", state_root)
-    src_dir = _stage_stream_source(
-        delta, "curtake", state_root, _owned_state, corpus_tag=sf_dir
-    )
-    bands_root, ex_root, out_root = _mh_bucketed_seed(
-        docs.select("doc_id", "text"), state_root
-    )
-    edges_root = f"{state_root}/edges"
-    labels_root = f"{state_root}/labels"
-    attrs_root = f"{state_root}/attrs"
-    del_root = f"{state_root}/del"
-    spark.createDataFrame([], "id_a long, id_b long").write.mode("overwrite").parquet(
-        f"{edges_root}/seed"
-    )
-    spark.createDataFrame([], "doc_id long, cluster_id long").write.mode(
-        "overwrite"
-    ).parquet(f"{labels_root}/seed")
-    spark.createDataFrame(
-        [], "doc_id long, lang string, fingerprint string, n_tokens long"
-    ).write.mode("overwrite").parquet(f"{attrs_root}/seed")
-    spark.createDataFrame([], "doc_id long").write.mode("overwrite").parquet(
-        f"{del_root}/seed"
-    )
-    ph_root = f"{state_root}/ph"
-    fpa_root = f"{state_root}/fpa"
-    fpv_root = f"{state_root}/fpv"
-    spark.createDataFrame(
-        [], "doc_id long, b0 long, b1 long, b2 long, b3 long"
-    ).write.mode("overwrite").parquet(f"{ph_root}/seed")
-    for r in (fpa_root, fpv_root):
-        spark.createDataFrame([], "doc_id long, fh string").write.mode(
-            "overwrite"
-        ).parquet(f"{r}/seed")
+    delta = _takedown_delta(docs, is_del)
 
-    process = _unified_takedown_processor(
-        _unified_batch_processor(
-            _curation_batch_processor(
-                _minhash_bucketed_processor(
-                    bands_root, ex_root, out_root, del_root=del_root
-                ),
-                _cc_batch_processor(edges_root, labels_root),
-                attrs_root,
-                out_root,
-            ),
-            _phash_batch_processor(ph_root),
-            _audio_fp_batch_processor(fpa_root),
-            _video_fp_batch_processor(fpv_root),
-        ),
-        del_root,
-    )
+    def setup(root):
+        return _unified_curation_layout(spark, docs, root, takedown=True)[0]
 
-    stream = (
-        spark.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_curation_takedown")
-    finally:
-        q.stop()
+    def finish(root):
+        # OFFLINE physical purge (stream fully drained), routed through
+        # the composed cron entry point `curation_maintain` (r14) so the
+        # driver's hard gate certifies the exact job an operator
+        # schedules: flat attrs/modality logs anti-join-folded, bucketed
+        # band/shingle families del-aware-re-folded (compacting the shared
+        # tombstone log), every superseded dir vacuumed, and the zero-
+        # tombstoned-rows invariant re-checked from live state — a
+        # violation raises rather than serving.  The id-only graph state
+        # (edge pairs, label snapshots) is metadata, filtered/recomputed
+        # at serve; a compliance takedown requires the content-derived
+        # rows gone, and after this call they are.  The certified serve
+        # below runs over the PURGED state — bytes gone, report unchanged.
+        curation_maintain(spark, root)
+        src_live = (
+            spark.read.parquet(f"{root}/src").filter(F.col("op") == "I").drop("op")
+        )
+        return _unified_curation_serve(
+            spark, src_live,
+            f"{root}/attrs", f"{root}/labels",
+            f"{root}/ph", f"{root}/fpa", f"{root}/fpv",
+            edges_root=f"{root}/edges", del_root=f"{root}/del",
+        )
 
-    # OFFLINE physical purge (stream fully drained), routed through
-    # the composed cron entry point `curation_maintain` (r14) so the
-    # driver's hard gate certifies the exact job an operator
-    # schedules: flat attrs/modality logs anti-join-folded, bucketed
-    # band/shingle families del-aware-re-folded (compacting the shared
-    # tombstone log), every superseded dir vacuumed, and the zero-
-    # tombstoned-rows invariant re-checked from live state — a
-    # violation raises rather than serving.  The id-only graph state
-    # (edge pairs, label snapshots) is metadata, filtered/recomputed
-    # at serve; a compliance takedown requires the content-derived
-    # rows gone, and after this call they are.  The certified serve
-    # below runs over the PURGED state — bytes gone, report unchanged.
-    curation_maintain(spark, state_root)
-
-    src_live = spark.read.parquet(src_dir).filter(F.col("op") == "I").drop("op")
-    result = _unified_curation_serve(
-        spark, src_live,
-        attrs_root, labels_root, ph_root, fpa_root, fpv_root,
-        edges_root=edges_root, del_root=del_root,
+    return _run_incremental(
+        "stream_curation_takedown", sf_dir, state_root, delta, setup, finish
     )
-    out = _persist_result(result, "stream_curation_takedown")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
 
 
 REGISTRY["stream_curation_takedown"] = QuerySpec(
@@ -7280,73 +6703,47 @@ def stream_minhash_takedown(
     shingles, signatures, AND emitted pairs (both endpoints), so the
     served pair set equals batch ``dedup_minhash_lsh`` over the corpus
     minus the deleted set."""
-    import shutil
-
     t = load_tables(spark, sf_dir)
     docs = t["documents"].select("doc_id", "text")
     is_del = (
         F.col("doc_id") % MINHASH_TAKEDOWN_MOD == MINHASH_TAKEDOWN_RESIDUE
     )
     delta = _takedown_delta(docs, is_del)
-    state_root, _owned_state = _resolve_state_root("mhtake", state_root)
-    src_dir = _stage_stream_source(
-        delta, "mhtake", state_root, _owned_state, corpus_tag=sf_dir
-    )
-    ex_root, sig_root, out_root = _mh_seed_state(docs, state_root)
-    del_root = f"{state_root}/del"
-    spark.createDataFrame([], "doc_id long").write.mode("overwrite").parquet(
-        f"{del_root}/seed"
-    )
-    process = _takedown_processor(
-        _minhash_batch_processor(ex_root, sig_root, out_root, del_root=del_root),
-        del_root,
-        key="doc_id",
-    )
-    stream = (
-        spark.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_minhash_takedown")
-    finally:
-        q.stop()
 
-    # OFFLINE physical purge: shingles + signatures are content (the
-    # doc's own n-grams / hashes) — anti-join fold by doc_id; the pair
-    # log references deleted endpoints with a content-derived jaccard,
-    # so it folds twice (one pass per endpoint column); the tombstone
-    # log compacts and every superseded dir is vacuumed.
-    dels_df = (
-        spark.read.parquet(*_del_state_paths(del_root)).select("doc_id").distinct()
-    )
-    for fam in (ex_root, sig_root):
-        purge_flat_family(spark, fam, dels_df, col="doc_id")
-        expire_del_versions(fam)
-    purge_flat_family(
-        spark, out_root, dels_df.withColumnRenamed("doc_id", "id_a"), col="id_a"
-    )
-    purge_flat_family(
-        spark, out_root, dels_df.withColumnRenamed("doc_id", "id_b"), col="id_b"
-    )
-    expire_del_versions(out_root)
-    _compact_del_log(spark, del_root, "doc_id", None)
-    expire_del_versions(del_root)
+    def setup(root):
+        ex_root, sig_root, out_root = _mh_seed_state(docs, root)
+        _del_log_seed(spark, f"{root}/del")
+        return _takedown_processor(
+            _minhash_batch_processor(
+                ex_root, sig_root, out_root, del_root=f"{root}/del"
+            ),
+            f"{root}/del",
+        )
 
-    result = spark.read.parquet(*_flat_state_paths(out_root)).select(
-        "id_a", "id_b", "jaccard"
+    def finish(root):
+        out_root = f"{root}/pairs"
+        # OFFLINE physical purge: shingles + signatures are content (the
+        # doc's own n-grams / hashes) — anti-join fold by doc_id; the pair
+        # log references deleted endpoints with a content-derived jaccard,
+        # so it folds twice (one pass per endpoint column); the tombstone
+        # log compacts and every superseded dir is vacuumed.
+        dels_df = _del_ids(spark, f"{root}/del")
+        for fam in (f"{root}/ex", f"{root}/sig"):
+            purge_flat_family(spark, fam, dels_df)
+            expire_del_versions(fam)
+        for end in ("id_a", "id_b"):
+            purge_flat_family(
+                spark, out_root, dels_df.withColumnRenamed("doc_id", end), col=end
+            )
+        expire_del_versions(out_root)
+        _vacuum_del_log(spark, f"{root}/del")
+        return spark.read.parquet(*_flat_state_paths(out_root)).select(
+            "id_a", "id_b", "jaccard"
+        )
+
+    return _run_incremental(
+        "stream_minhash_takedown", sf_dir, state_root, delta, setup, finish
     )
-    out = _persist_result(result, "stream_minhash_takedown")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
 
 
 REGISTRY["stream_minhash_takedown"] = QuerySpec(
@@ -7377,85 +6774,55 @@ def stream_substr_takedown(
     SURVIVING positional windows — the decremental analog of the
     curation row's closure recompute — and the offline purge rebuilds
     the dup/pending gram families from the purged position log."""
-    import shutil
-
     t = load_tables(spark, sf_dir)
     docs = t["documents"].select("doc_id", "text")
-    from tailsql_spark.operators.dedup import doc_pos_grams, spans_from_flagged
+    from tailsql_spark.operators.dedup import spans_from_flagged
 
     is_del = F.col("doc_id") % SUBSTR_TAKEDOWN_MOD == SUBSTR_TAKEDOWN_RESIDUE
     delta = _takedown_delta(docs, is_del)
-    state_root, _owned_state = _resolve_state_root("sstake", state_root)
-    src_dir = _stage_stream_source(
-        delta, "sstake", state_root, _owned_state, corpus_tag=sf_dir
-    )
-    pos_root = f"{state_root}/pos"
-    dup_root = f"{state_root}/dup"
-    pending_root = f"{state_root}/pending"
-    del_root = f"{state_root}/del"
-    empty_pg = doc_pos_grams(docs.limit(0))
-    empty_pg.write.mode("overwrite").parquet(f"{pos_root}/seed")
-    empty_pg.select("g").write.mode("overwrite").parquet(f"{dup_root}/seed")
-    empty_pg.select("g").write.mode("overwrite").parquet(f"{pending_root}/seed")
-    spark.createDataFrame([], "doc_id long").write.mode("overwrite").parquet(
-        f"{del_root}/seed"
-    )
-    process = _takedown_processor(
-        _substr_batch_processor(
-            pos_root, dup_root, pending_root, del_root=del_root
-        ),
-        del_root,
-        key="doc_id",
-    )
-    stream = (
-        spark.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_substr_takedown")
-    finally:
-        q.stop()
 
-    # OFFLINE physical purge: positions carry gram TEXT per doc —
-    # anti-join fold by doc_id; then dup/pending are REBUILT from the
-    # purged position log (membership is count-derived, so a deleted
-    # occurrence can demote a gram — an anti-join cannot express that).
-    dels_df = (
-        spark.read.parquet(*_del_state_paths(del_root)).select("doc_id").distinct()
-    )
-    purge_flat_family(spark, pos_root, dels_df, col="doc_id")
-    expire_del_versions(pos_root)
-    live_pos = spark.read.parquet(*_flat_state_paths(pos_root))
-    live_counts = live_pos.groupBy("g").agg(F.count("*").alias("c"))
-    _rewrite_flat_family(
-        spark, dup_root, live_counts.filter(F.col("c") >= 2).select("g")
-    )
-    expire_del_versions(dup_root)
-    _rewrite_flat_family(
-        spark, pending_root, live_counts.filter(F.col("c") == 1).select("g")
-    )
-    expire_del_versions(pending_root)
-    _compact_del_log(spark, del_root, "doc_id", None)
-    expire_del_versions(del_root)
+    def setup(root):
+        _del_log_seed(spark, f"{root}/del")
+        return _takedown_processor(
+            _substr_batch_processor(
+                *_substr_seed(docs, root), del_root=f"{root}/del"
+            ),
+            f"{root}/del",
+        )
 
-    dup = spark.read.parquet(*_flat_state_paths(dup_root)).select("g")
-    dpos = (
-        spark.read.parquet(*_flat_state_paths(pos_root))
-        .join(dup, "g")
-        .select("doc_id", "pos")
+    def finish(root):
+        pos_root, dup_root, pending_root = (
+            f"{root}/pos", f"{root}/dup", f"{root}/pending"
+        )
+        # OFFLINE physical purge: positions carry gram TEXT per doc —
+        # anti-join fold by doc_id; then dup/pending are REBUILT from the
+        # purged position log (membership is count-derived, so a deleted
+        # occurrence can demote a gram — an anti-join cannot express that).
+        purge_flat_family(spark, pos_root, _del_ids(spark, f"{root}/del"))
+        expire_del_versions(pos_root)
+        live_pos = spark.read.parquet(*_flat_state_paths(pos_root))
+        live_counts = live_pos.groupBy("g").agg(F.count("*").alias("c"))
+        _rewrite_flat_family(
+            spark, dup_root, live_counts.filter(F.col("c") >= 2).select("g")
+        )
+        expire_del_versions(dup_root)
+        _rewrite_flat_family(
+            spark, pending_root, live_counts.filter(F.col("c") == 1).select("g")
+        )
+        expire_del_versions(pending_root)
+        _vacuum_del_log(spark, f"{root}/del")
+
+        dup = spark.read.parquet(*_flat_state_paths(dup_root)).select("g")
+        dpos = (
+            spark.read.parquet(*_flat_state_paths(pos_root))
+            .join(dup, "g")
+            .select("doc_id", "pos")
+        )
+        return spans_from_flagged(dpos)
+
+    return _run_incremental(
+        "stream_substr_takedown", sf_dir, state_root, delta, setup, finish
     )
-    out = _persist_result(spans_from_flagged(dpos), "stream_substr_takedown")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
 
 
 REGISTRY["stream_substr_takedown"] = QuerySpec(
@@ -7486,8 +6853,6 @@ def stream_contam_takedown(
     gram set, and the serve counts each test doc's distinct grams with
     LIVE train support — certified against the contamination oracle
     recomputed on the corpus minus the deleted train docs."""
-    import shutil
-
     from tailsql_spark.operators.textstats import contam_is_test
 
     t = load_tables(spark, sf_dir)
@@ -7499,87 +6864,46 @@ def stream_contam_takedown(
     is_del = F.col("doc_id") % CONTAM_TAKEDOWN_MOD == CONTAM_TAKEDOWN_RESIDUE
     delta = _takedown_delta(train_docs, is_del)
 
-    state_root, _owned_state = _resolve_state_root("cttake", state_root)
-    train_root = f"{state_root}/train_pairs"
-    hits_root = f"{state_root}/hits"
-    del_root = f"{state_root}/del"
-    test_grams = _doc_5grams(test_docs)
-    test_grams_path = f"{state_root}/test_grams"
-    test_grams.write.mode("overwrite").parquet(test_grams_path)
-    sizes = (
-        spark.read.parquet(test_grams_path)
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_grams"))
-    )
-    test_grams.limit(0).write.mode("overwrite").parquet(f"{train_root}/seed")
-    test_grams.limit(0).write.mode("overwrite").parquet(f"{hits_root}/seed")
-    spark.createDataFrame([], "doc_id long").write.mode("overwrite").parquet(
-        f"{del_root}/seed"
-    )
-    src_dir = _stage_stream_source(
-        delta, "cttake", state_root, _owned_state, corpus_tag=sf_dir
-    )
-    process = _takedown_processor(
-        _contam_batch_processor(
-            train_root, hits_root, test_grams_path, del_root=del_root
-        ),
-        del_root,
-        key="doc_id",
-    )
-    stream = (
-        spark.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_contam_takedown")
-    finally:
-        q.stop()
-
-    # OFFLINE physical purge: deleted docs' (doc_id, gram) rows are
-    # content — anti-join fold; hits reference gram TEXT, so hit rows
-    # whose gram lost ALL live train support fold away too (dead-gram
-    # anti-join), which also dedupes any live-reappearance re-fires.
-    dels_df = (
-        spark.read.parquet(*_del_state_paths(del_root)).select("doc_id").distinct()
-    )
-    purge_flat_family(spark, train_root, dels_df, col="doc_id")
-    expire_del_versions(train_root)
-    live_g = (
-        spark.read.parquet(*_flat_state_paths(train_root)).select("g").distinct()
-    )
-    hits_all = spark.read.parquet(*_flat_state_paths(hits_root))
-    _rewrite_flat_family(
-        spark, hits_root, hits_all.join(live_g, "g", "left_semi").distinct()
-    )
-    expire_del_versions(hits_root)
-    _compact_del_log(spark, del_root, "doc_id", None)
-    expire_del_versions(del_root)
-
-    hits = spark.read.parquet(*_flat_state_paths(hits_root)).distinct()
-    per_doc = hits.groupBy("doc_id").agg(F.count("*").alias("n_hit"))
-    result = (
-        sizes.join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_grams",
-            F.coalesce(F.col("n_hit"), F.lit(0)).cast("long").alias("n_hit"),
-            F.round(
-                F.coalesce(F.col("n_hit"), F.lit(0)) * 1.0 / F.col("n_grams"), 6
-            ).alias("contamination_pct"),
+    def setup(root):
+        test_grams = _doc_5grams(test_docs)
+        test_grams.write.mode("overwrite").parquet(f"{root}/test_grams")
+        test_grams.limit(0).write.mode("overwrite").parquet(
+            f"{root}/train_pairs/seed"
         )
+        test_grams.limit(0).write.mode("overwrite").parquet(f"{root}/hits/seed")
+        _del_log_seed(spark, f"{root}/del")
+        return _takedown_processor(
+            _contam_batch_processor(
+                f"{root}/train_pairs", f"{root}/hits", f"{root}/test_grams",
+                del_root=f"{root}/del",
+            ),
+            f"{root}/del",
+        )
+
+    def finish(root):
+        train_root, hits_root = f"{root}/train_pairs", f"{root}/hits"
+        # OFFLINE physical purge: deleted docs' (doc_id, gram) rows are
+        # content — anti-join fold; hits reference gram TEXT, so hit rows
+        # whose gram lost ALL live train support fold away too (dead-gram
+        # anti-join), which also dedupes any live-reappearance re-fires.
+        purge_flat_family(spark, train_root, _del_ids(spark, f"{root}/del"))
+        expire_del_versions(train_root)
+        live_g = (
+            spark.read.parquet(*_flat_state_paths(train_root)).select("g").distinct()
+        )
+        hits_all = spark.read.parquet(*_flat_state_paths(hits_root))
+        _rewrite_flat_family(
+            spark, hits_root, hits_all.join(live_g, "g", "left_semi").distinct()
+        )
+        expire_del_versions(hits_root)
+        _vacuum_del_log(spark, f"{root}/del")
+
+        hits = spark.read.parquet(*_flat_state_paths(hits_root)).distinct()
+        return _contam_report(spark, f"{root}/test_grams", hits)
+
+    return _run_incremental(
+        "stream_contam_takedown", sf_dir, state_root, delta, setup, finish
     )
-    out = _persist_result(result, "stream_contam_takedown")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
 
 
 def _contam_takedown_oracle() -> str:
@@ -7623,94 +6947,61 @@ def stream_semdedup_takedown(
     parameter: it is NOT retrained on takedown (production shape), so
     the oracle keeps the full-corpus Lloyd trajectory and restricts
     only membership to the live vectors."""
-    import shutil
-
-    from tailsql_spark.operators.mlprep import lloyd_loop
-
     t = load_tables(spark, sf_dir)
     emb = t["embeddings"].select("vec_id", "embedding")
     is_del = (
         F.col("vec_id") % SEMDEDUP_TAKEDOWN_MOD == SEMDEDUP_TAKEDOWN_RESIDUE
     )
     delta = _takedown_delta(emb, is_del, key="vec_id")
-    state_root, _owned_state = _resolve_state_root("sdtake", state_root)
-    members_root = f"{state_root}/members"
-    pairs_root = f"{state_root}/pairs"
-    del_root = f"{state_root}/del"
-    cent_path = f"{state_root}/centroids"
 
-    _, cent = lloyd_loop(spark, sf_dir)
-    cent.write.mode("overwrite").parquet(cent_path)
-    spark.createDataFrame(
-        [], "vec_id long, cell long, v array<double>, nrm double"
-    ).write.mode("overwrite").parquet(f"{members_root}/seed")
-    spark.createDataFrame([], "vec_id long, p long").write.mode(
-        "overwrite"
-    ).parquet(f"{pairs_root}/seed")
-    spark.createDataFrame([], "vec_id long").write.mode("overwrite").parquet(
-        f"{del_root}/seed"
-    )
-    src_dir = _stage_stream_source(
-        delta, "sdtake", state_root, _owned_state, corpus_tag=sf_dir
-    )
-    process = _takedown_processor(
-        _semdedup_batch_processor(
-            members_root, None, cent_path, del_root=del_root, pairs_root=pairs_root
-        ),
-        del_root,
-        key="vec_id",
-    )
-    stream = (
-        spark.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_semdedup_takedown")
-    finally:
-        q.stop()
+    def setup(root):
+        members_root, cent_path = _semdedup_seed(spark, sf_dir, root)
+        spark.createDataFrame([], "vec_id long, p long").write.mode(
+            "overwrite"
+        ).parquet(f"{root}/pairs/seed")
+        _del_log_seed(spark, f"{root}/del", "vec_id")
+        return _takedown_processor(
+            _semdedup_batch_processor(
+                members_root, None, cent_path,
+                del_root=f"{root}/del", pairs_root=f"{root}/pairs",
+            ),
+            f"{root}/del",
+            key="vec_id",
+        )
 
-    # OFFLINE physical purge: member rows carry the VECTORS — content;
-    # the pair log is id-only but references deleted endpoints, so it
-    # folds twice (vec_id, then the prune-cause column p).
-    dels_df = (
-        spark.read.parquet(*_del_state_paths(del_root)).select("vec_id").distinct()
-    )
-    purge_flat_family(spark, members_root, dels_df, col="vec_id")
-    expire_del_versions(members_root)
-    purge_flat_family(spark, pairs_root, dels_df, col="vec_id")
-    purge_flat_family(
-        spark, pairs_root, dels_df.withColumnRenamed("vec_id", "p"), col="p"
-    )
-    expire_del_versions(pairs_root)
-    _compact_del_log(spark, del_root, "vec_id", None)
-    expire_del_versions(del_root)
+    def finish(root):
+        members_root, pairs_root = f"{root}/members", f"{root}/pairs"
+        # OFFLINE physical purge: member rows carry the VECTORS — content;
+        # the pair log is id-only but references deleted endpoints, so it
+        # folds twice (vec_id, then the prune-cause column p).
+        dels_df = _del_ids(spark, f"{root}/del", "vec_id")
+        purge_flat_family(spark, members_root, dels_df, col="vec_id")
+        expire_del_versions(members_root)
+        purge_flat_family(spark, pairs_root, dels_df, col="vec_id")
+        purge_flat_family(
+            spark, pairs_root, dels_df.withColumnRenamed("vec_id", "p"), col="p"
+        )
+        expire_del_versions(pairs_root)
+        _vacuum_del_log(spark, f"{root}/del", "vec_id")
 
-    live = spark.read.parquet(*_flat_state_paths(members_root)).select(
-        "vec_id", "cell"
+        live = spark.read.parquet(*_flat_state_paths(members_root)).select(
+            "vec_id", "cell"
+        )
+        pruned = (
+            spark.read.parquet(*_flat_state_paths(pairs_root))
+            .groupBy("vec_id")
+            .agg(F.min("p").alias("pruned_by"))
+        )
+        return live.join(pruned, "vec_id", "left").select(
+            "vec_id",
+            "cell",
+            F.col("pruned_by").isNull().alias("is_kept"),
+            "pruned_by",
+        )
+
+    return _run_incremental(
+        "stream_semdedup_takedown", sf_dir, state_root, delta, setup, finish
     )
-    pruned = (
-        spark.read.parquet(*_flat_state_paths(pairs_root))
-        .groupBy("vec_id")
-        .agg(F.min("p").alias("pruned_by"))
-    )
-    result = live.join(pruned, "vec_id", "left").select(
-        "vec_id",
-        "cell",
-        F.col("pruned_by").isNull().alias("is_kept"),
-        "pruned_by",
-    )
-    out = _persist_result(result, "stream_semdedup_takedown")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
 
 
 def _semdedup_takedown_oracle() -> str:
@@ -7787,42 +7078,26 @@ def stream_quality_gate_binned(
     gate a growing corpus actually runs: the threshold re-derives per
     increment from constant-size mergeable state instead of re-ranking
     the corpus per release."""
-    import shutil
-
     from tailsql_spark.operators.corpus import binned_gate_from_hist
 
     t = load_tables(spark, sf_dir)
     docs = t["documents"].select("doc_id", "lang", "text")
-    state_root, _owned_state = _resolve_state_root("binnedgate", state_root)
-    hist_root = f"{state_root}/hist"
-    spark.createDataFrame([], "lang string, bin long, c long").write.mode(
-        "overwrite"
-    ).parquet(f"{hist_root}/seed")
-    src_dir = _stage_stream_source(docs, "binnedgate", state_root, _owned_state, corpus_tag=sf_dir)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
+
+    def setup(root):
+        spark.createDataFrame([], "lang string, bin long, c long").write.mode(
+            "overwrite"
+        ).parquet(f"{root}/hist/seed")
+        return _binned_gate_batch_processor(f"{root}/hist")
+
+    def finish(root):
+        # read = the family's own fold merge over base + post-fold deltas
+        # (r15: shared with sketch_maintain's fold)
+        paths = _flat_state_paths(f"{root}/hist")
+        return binned_gate_from_hist(_hist_partial_merge(spark.read.parquet(*paths)))
+
+    return _run_incremental(
+        "stream_quality_gate_binned", sf_dir, state_root, docs, setup, finish
     )
-    q = (
-        stream.writeStream.foreachBatch(_binned_gate_batch_processor(hist_root))
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_quality_gate_binned")
-    finally:
-        q.stop()
-    # read = the family's own fold merge over base + post-fold deltas
-    # (r15: shared with sketch_maintain's fold)
-    hist = _hist_partial_merge(spark.read.parquet(*_flat_state_paths(hist_root)))
-    result = binned_gate_from_hist(hist)
-    out = _persist_result(result, "stream_quality_gate_binned")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
 
 
 from tailsql_spark.operators.corpus import REGISTRY as _CORPUS_REG  # noqa: E402
@@ -7876,42 +7151,28 @@ def stream_rate_anomaly(
     oracle.  Anomaly state is |types| × |hours| counters regardless of
     event volume — the monitoring table a 100 TB log pipeline keeps
     hot while the raw stream ages out."""
-    import shutil
-
     from tailsql_spark.plans.streaming_sql import rate_anomaly_from_counts
 
     t = load_tables(spark, sf_dir)
     ev = t["events"].select("event_type", "ts")
-    state_root, _owned_state = _resolve_state_root("rateanom", state_root)
-    cnt_root = f"{state_root}/cnt"
-    spark.createDataFrame([], "event_type string, h timestamp, cnt long").write.mode(
-        "overwrite"
-    ).parquet(f"{cnt_root}/seed")
-    src_dir = _stage_stream_source(ev, "rateanom", state_root, _owned_state, corpus_tag=sf_dir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
+
+    def setup(root):
+        spark.createDataFrame(
+            [], "event_type string, h timestamp, cnt long"
+        ).write.mode("overwrite").parquet(f"{root}/cnt/seed")
+        return _rate_anomaly_batch_processor(f"{root}/cnt")
+
+    def finish(root):
+        # read = the family's own fold merge over base + post-fold deltas
+        # (r15: shared with sketch_maintain's fold)
+        paths = _flat_state_paths(f"{root}/cnt")
+        return rate_anomaly_from_counts(
+            _cnt_partial_merge(spark.read.parquet(*paths))
+        )
+
+    return _run_incremental(
+        "stream_rate_anomaly", sf_dir, state_root, ev, setup, finish
     )
-    q = (
-        stream.writeStream.foreachBatch(_rate_anomaly_batch_processor(cnt_root))
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        _await_or_raise(q, "stream_rate_anomaly")
-    finally:
-        q.stop()
-    # read = the family's own fold merge over base + post-fold deltas
-    # (r15: shared with sketch_maintain's fold)
-    cnts = _cnt_partial_merge(spark.read.parquet(*_flat_state_paths(cnt_root)))
-    result = rate_anomaly_from_counts(cnts)
-    out = _persist_result(result, "stream_rate_anomaly")
-    if _owned_state:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _fs_rmtree(state_root)
-    return out
 
 
 from tailsql_spark.plans.streaming_sql import _RATE_ANOMALY_SQL as _RATE_ANOMALY_STREAM  # noqa: E402

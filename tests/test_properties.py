@@ -1071,6 +1071,43 @@ def test_flat_state_machine_serve_equals_model(spark, data, tmp_path_factory):
     shutil.rmtree(str(base), ignore_errors=True)
 
 
+def test_flat_purge_twice_keeps_folded_horizon(spark, tmp_path):
+    """The shrunk counterexample of the state machine above, pinned: a
+    second purge after the vacuum reclaimed the folded dirs must keep
+    ``folded_below_bid``, or a replay of the folded batch is served
+    beside the base that already holds its rows (the same rule for a
+    twice-compacted tombstone log)."""
+    from tailsql_spark.plans.streaming_exec import (
+        _bdir,
+        _compact_del_log,
+        _del_meta_read,
+        _flat_state_paths,
+        expire_del_versions,
+        purge_flat_family,
+    )
+
+    fam, dlog = str(tmp_path / "fam"), str(tmp_path / "del")
+    for root in (fam, dlog):
+        spark.createDataFrame([], "doc_id long").write.parquet(f"{root}/seed")
+        spark.createDataFrame([(0,)], "doc_id long").write.parquet(
+            f"{root}/{_bdir(0)}"
+        )
+    dels = spark.createDataFrame([], "doc_id long")
+    for _ in range(2):
+        purge_flat_family(spark, fam, dels)
+        expire_del_versions(fam)
+        _compact_del_log(spark, dlog, "doc_id", None)
+        expire_del_versions(dlog)
+    assert _del_meta_read(fam)["folded_below_bid"] == 1
+    assert _del_meta_read(dlog)["folded_below_bid"] == 1
+    # replay of the folded batch 0: its dir is below the horizon, unread
+    spark.createDataFrame([(0,)], "doc_id long").write.mode("overwrite").parquet(
+        f"{fam}/{_bdir(0)}"
+    )
+    served = [r.doc_id for r in spark.read.parquet(*_flat_state_paths(fam)).collect()]
+    assert served == [0]
+
+
 @settings(
     max_examples=5, deadline=None, suppress_health_check=[HealthCheck.too_slow]
 )

@@ -504,11 +504,61 @@ def test_stream_result_survives_scratch_cleanup(spark, oracle_sf_dir):
         if ".collect()" in line and "planning-metadata" not in line
     ]
     assert unaudited == [], f"unaudited driver collect(s): {unaudited}"
+    # static guard: every incremental builder drains through the ONE
+    # runner (_run_incremental → _drain) — a second checkpointLocation or
+    # availableNow trigger means a hand-rolled stream lifecycle grew back
+    assert src.count("checkpointLocation") == 1
+    assert src.count(".trigger(availableNow=True)") == 1
 
     out = streaming_exec.stream_contamination(spark, oracle_sf_dir)
     # scratch dirs are gone by now; the result must still materialize
     rows = out.collect()
     assert len(rows) > 0
+
+
+def test_runner_failure_cleans_owned_root_keeps_caller_root(spark, tmp_path):
+    """A processor that raises mid-stream must surface its error, delete
+    an OWNED state root (staged source + checkpoint + state families)
+    instead of leaking it under the tempdir, and leave a CALLER-owned
+    root in place for inspection and resume."""
+    import os
+    import tempfile
+
+    import pytest
+
+    from tailsql_spark.plans.streaming_exec import _run_incremental
+
+    frame = spark.range(16).withColumnRenamed("id", "doc_id")
+
+    def setup(root):
+        spark.createDataFrame([], "doc_id long").write.mode("overwrite").parquet(
+            f"{root}/fam/seed"
+        )
+
+        def process(batch_df, batch_id):
+            raise RuntimeError("processor boom")
+
+        return process
+
+    def finish(root):
+        raise AssertionError("finish must not run after a failed drain")
+
+    def owned_dirs():
+        return {d for d in os.listdir(tempfile.gettempdir()) if d.startswith("tailsql_")}
+
+    before = owned_dirs()
+    with pytest.raises(Exception, match="processor boom"):
+        _run_incremental(
+            "stream_failing_probe", "corpus", None, frame, setup, finish
+        )
+    assert owned_dirs() - before == set()
+
+    root = str(tmp_path / "caller_root")
+    with pytest.raises(Exception, match="processor boom"):
+        _run_incremental(
+            "stream_failing_probe", "corpus", root, frame, setup, finish
+        )
+    assert {"src", "src_corpus", "fam", "ckpt"} <= set(os.listdir(root))
 
 
 def test_incremental_state_root_parameterized(spark, sf_dir, tmp_path):

@@ -2072,7 +2072,7 @@ def test_curation_takedown_replay_absence_and_rebuild_equivalence(
         _audio_fp_batch_processor,
         _phash_batch_processor,
         _unified_batch_processor,
-        _unified_takedown_processor,
+        _takedown_processor,
         _video_fp_batch_processor,
     )
 
@@ -2114,7 +2114,7 @@ def test_curation_takedown_replay_absence_and_rebuild_equivalence(
             _audio_fp_batch_processor(f"{root}/fpa"),
             _video_fp_batch_processor(f"{root}/fpv"),
         )
-        process = _unified_takedown_processor(inner, del_root)
+        process = _takedown_processor(inner, del_root)
         for bid, b in delta_batches:
             process(b, bid)
         return del_root
@@ -2469,7 +2469,7 @@ def test_curation_takedown_physically_purges_content_state(spark, oracle_sf_dir)
         _audio_fp_batch_processor,
         _phash_batch_processor,
         _unified_batch_processor,
-        _unified_takedown_processor,
+        _takedown_processor,
         _video_fp_batch_processor,
         expire_del_versions,
         expire_state_versions,
@@ -2500,7 +2500,7 @@ def test_curation_takedown_physically_purges_content_state(spark, oracle_sf_dir)
                 f"{root}/{sub}/seed"
             )
         del_root = f"{root}/del"
-        process = _unified_takedown_processor(
+        process = _takedown_processor(
             _unified_batch_processor(
                 _curation_batch_processor(
                     _minhash_bucketed_processor(
@@ -2608,7 +2608,7 @@ def test_curation_maintain_composed_loop(spark, oracle_sf_dir):
         _state_meta_read,
         _unified_batch_processor,
         _unified_curation_serve,
-        _unified_takedown_processor,
+        _takedown_processor,
         _video_fp_batch_processor,
         acquire_family_lease,
         curation_maintain,
@@ -2639,7 +2639,7 @@ def test_curation_maintain_composed_loop(spark, oracle_sf_dir):
                 f"{root}/{sub}/seed"
             )
         del_root = f"{root}/del"
-        process = _unified_takedown_processor(
+        process = _takedown_processor(
             _unified_batch_processor(
                 _curation_batch_processor(
                     _minhash_bucketed_processor(

@@ -54,7 +54,7 @@ def seed_and_maintain(spark, docs_path: str, runs: int) -> dict:
         _minhash_bucketed_processor,
         _phash_batch_processor,
         _unified_batch_processor,
-        _unified_takedown_processor,
+        _takedown_processor,
         _video_fp_batch_processor,
         curation_maintain,
     )
@@ -86,7 +86,7 @@ def seed_and_maintain(spark, docs_path: str, runs: int) -> dict:
                     f"{root}/{sub}/seed"
                 )
             del_root = f"{root}/del"
-            process = _unified_takedown_processor(
+            process = _takedown_processor(
                 _unified_batch_processor(
                     _curation_batch_processor(
                         _minhash_bucketed_processor(
