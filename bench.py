@@ -135,6 +135,25 @@ def _calibration_sample(spark) -> float:
     return time.perf_counter() - t0
 
 
+def count_spark_drivers(ps_out: str) -> int:
+    """Live Spark driver JVMs in ``ps -eo comm,args`` output: lines whose
+    EXECUTABLE is exactly ``java`` and whose arguments name SparkSubmit.
+    A shell or grep whose argument string merely mentions the class name
+    (e.g. a harness wrapper that also inspects for Spark JVMs), or a
+    command whose name only ends in "java", is not a live driver and
+    must not flag the run as contaminated; blank lines are skipped."""
+    n = 0
+    for line in ps_out.splitlines():
+        parts = line.split(None, 1)
+        if (
+            len(parts) == 2
+            and parts[0] == "java"
+            and "org.apache.spark.deploy.SparkSubmit" in parts[1]
+        ):
+            n += 1
+    return n
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -165,18 +184,10 @@ def main() -> None:
     try:
         import subprocess
 
-        out = subprocess.run(
-            ["ps", "-eo", "comm,args"], capture_output=True, text=True, timeout=10
-        ).stdout
-        # match only processes whose EXECUTABLE is java: a shell or grep
-        # whose argument string merely mentions the class name (e.g. a
-        # harness wrapper that also inspects for Spark JVMs) is not a
-        # live driver and must not flag the run as contaminated
-        concurrent_spark = sum(
-            1
-            for line in out.splitlines()
-            if line.split(None, 1)[0].endswith("java")
-            and "org.apache.spark.deploy.SparkSubmit" in line
+        concurrent_spark = count_spark_drivers(
+            subprocess.run(
+                ["ps", "-eo", "comm,args"], capture_output=True, text=True, timeout=10
+            ).stdout
         )
     except Exception:
         concurrent_spark = -1  # scan unavailable; never block the bench

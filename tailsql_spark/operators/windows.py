@@ -1,4 +1,4 @@
-"""Tumbling / sliding / session window assignment (reference operator #9).
+"""Window spec for the live loop (reference operator #9).
 
 The reference buffers the merged row stream and emits ``[]LRow`` batches
 on a ``SIZE:SLIDE:IDX_OF_TS`` spec (``/root/reference/sql/squeryer.go:
@@ -9,27 +9,17 @@ event-time column (-1 = processing time).
 Known reference bug NOT replicated (SURVEY §2A): its event-time
 extractor returns ``time.Time.Nanosecond()`` — the offset within the
 current second — so reference event-time sliding windows are broken.
-This module implements real event time over the parsed timestamp column.
+The live loop implements real event time over the parsed timestamp column.
 
-Spark mapping: ``F.window(ts, size[, slide])`` assigns rows to windows
-JVM-side; sliding windows explode each row into ``size/slide``
-assignments exactly like the reference's multi-window membership
-(``sql/squeryer.go:183-195``). Processing time uses the ingest
-timestamp. Watermarks (absent in the reference — processing-time
-windows can't be late) are exposed for the event-time path.
-
-Scale note: windowed aggregation shuffles on (window, keys). At 100 TB
-that is the intended partitioning — window start is monotonically
-increasing so old state retires; skewed keys within a window are handled
-by AQE skew-join/agg splitting (enabled in session.py).
+The spec is all this module holds: the live loop
+(``tailsql_spark/streaming/squeryer.py``) buffers rows per window,
+retires them past the ``SIZE`` horizon, and emits on the ``SLIDE``
+period (``SIZE`` for tumbling windows) from these fields.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
 
 @dataclass(frozen=True)
@@ -68,51 +58,3 @@ class WindowSpec:
                     raise ValueError(f"IDX_OF_TS {idx} out of range for {columns}")
                 ts_field = columns[idx]
         return cls(size_sec=size, slide_sec=slide, ts_field=ts_field)
-
-
-def window_column(spec: WindowSpec, ts_col: Column | None = None) -> Column:
-    """Build the ``F.window`` column for a spec.
-
-    ``ts_col`` defaults to the spec's event-time field, else processing
-    time (``current_timestamp()`` — evaluated per micro-batch, which is
-    trigger-aligned, matching the reference's processing-time domain).
-    """
-    if ts_col is None:
-        ts_col = F.col(spec.ts_field) if spec.ts_field else F.current_timestamp()
-    size = f"{spec.size_sec} seconds"
-    if spec.is_tumbling:
-        return F.window(ts_col, size)
-    return F.window(ts_col, size, f"{spec.slide_sec} seconds")
-
-
-def assign_windows(
-    df: DataFrame,
-    spec: WindowSpec,
-    ts_col: str | None = None,
-    watermark: str | None = None,
-) -> DataFrame:
-    """Attach ``window_start`` / ``window_end`` columns (exploding rows
-    into every sliding window they belong to, like the reference's
-    multi-membership buffers)."""
-    col_name = ts_col or spec.ts_field
-    if watermark and col_name:
-        df = df.withWatermark(col_name, watermark)
-    w = window_column(spec, F.col(col_name) if col_name else None)
-    return (
-        df.withColumn("__w", w)
-        .withColumn("window_start", F.col("__w.start"))
-        .withColumn("window_end", F.col("__w.end"))
-        .drop("__w")
-    )
-
-
-def session_windows(
-    df: DataFrame, ts_col: str, gap_sec: int, keys: list[str] | None = None
-) -> DataFrame:
-    """Session windows (absent in the reference — strict extension).
-
-    Batch and streaming both supported via ``F.session_window``.
-    """
-    sw = F.session_window(F.col(ts_col), f"{gap_sec} seconds")
-    group = ([F.col(k) for k in keys] if keys else []) + [sw]
-    return df.groupBy(*group)

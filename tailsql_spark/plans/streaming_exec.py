@@ -14,6 +14,7 @@ perturb the hash (same policy as the batch money aggregates).
 
 from __future__ import annotations
 
+import contextlib
 import tempfile
 from collections.abc import Callable
 
@@ -134,7 +135,7 @@ def _resolve_state_root(name: str, state_root: str | None) -> tuple[str, bool]:
     location that survives the run, so a later run resumes the same
     index and checkpoint — the production incremental mode.  All state
     I/O below the root goes through Spark's Hadoop-FS-aware
-    readers/writers plus the `_fs_list`/`_fs_rmtree` dispatchers, so
+    readers/writers plus the `_fs_list_dirs`/`_fs_rmtree` dispatchers, so
     the same certified code path serves local disk and object stores.
     One root belongs to ONE logical pipeline instance: the checkpoint
     under it pins the source the stream reads, so reuse means
@@ -149,22 +150,6 @@ def _resolve_state_root(name: str, state_root: str | None) -> tuple[str, bool]:
     if state_root is not None:
         return state_root.rstrip("/"), False
     return tempfile.mkdtemp(prefix=f"tailsql_{name}_state_"), True
-
-
-def _fs_list(root: str) -> list[str]:
-    """Child names under ``root`` — POSIX listdir for plain paths, the
-    Hadoop FileSystem API for URI roots (hdfs/s3a/file), resolved via
-    the active session's JVM.  foreachBatch processors run on the
-    driver, so the JVM handle is always available where this is
-    called."""
-    if "://" not in root:
-        import os
-
-        return os.listdir(root)
-    spark = SparkSession.getActiveSession()
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(root)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return [st.getPath().getName() for st in fs.listStatus(jpath)]
 
 
 def _fs_rmtree(path: str) -> None:
@@ -792,36 +777,48 @@ REGISTRY["stream_interval_join"] = QuerySpec(
 def _bdir(bid: int) -> str:
     """Per-batch state dir name — THE single definition of the layout
     every processor writes and every composer/read path lists; the
-    numeric-id parse in _mh_state_paths/_latest_snapshot_path tolerates
-    pad-width drift on READ, but writers share this one spelling so
-    drift cannot start."""
+    numeric-id parse in ``_batch_dirs`` tolerates pad-width drift on
+    READ, but writers share this one spelling so drift cannot start."""
     return f"b{bid:05d}"
 
 
-def _mh_state_paths(root: str, exclude_bid: int | None = None) -> list:
-    """All per-batch state dirs under ``root`` (always includes the
-    schema seed), excluding ``b{exclude_bid}`` — a replayed batch must
-    see the index exactly as it stood BEFORE its original run.
+def _batch_dirs(root: str) -> list[tuple[int, str]]:
+    """``(bid, listed name)`` of every per-batch ``b#####`` dir under a
+    state family's ``root``, sorted by NUMERIC bid — THE single parse
+    of the per-batch layout.  Ids compare as numbers, never as names:
+    zero-padded names sort wrong lexicographically once ids pass the
+    pad width (b100000 < b99999 as strings), and a name-format
+    comparison would fail to match a dir written with a different pad
+    width (b7 for bid 7), double-counting its rows on replay.  The
+    listed name is kept so a returned path is the dir that actually
+    exists, not a reconstruction from one writer's pad width.
+    ``base_v{N}`` starts with 'b' but fails the all-digits test;
+    ``seed`` fails the prefix test.  Listing goes through
+    ``_fs_list_dirs``: POSIX for plain roots, the Hadoop FileSystem
+    API for ``hdfs://`` / ``s3a://`` / ``file://`` roots — the layout
+    and replay discipline are identical on both."""
+    return sorted(
+        (int(d[1:]), d)
+        for d in _fs_list_dirs(root)
+        if d.startswith("b") and d[1:].isdigit()
+    )
 
-    Listing/pruning go through `_fs_list`/`_fs_rmtree` (shared by
-    _latest_snapshot_path and _prune_snapshots): POSIX primitives for
-    plain local roots, the Hadoop FileSystem API for `hdfs://` /
-    `s3a://` / `file://` state roots — the snapshot layout, numeric-id
-    rule, and replay discipline are identical on both; only the
-    list/delete dispatch is FS-specific."""
-    paths = [f"{root}/seed"]
-    for d in sorted(_fs_list(root)):
-        # exclusion compares PARSED numeric ids, the same rule as
-        # _latest_snapshot_path: a name-format comparison would fail to
-        # exclude a dir written with a different pad width (e.g. b7 for
-        # bid 7), double-counting its rows on replay
-        if (
-            d.startswith("b")
-            and d[1:].isdigit()
-            and (exclude_bid is None or int(d[1:]) != exclude_bid)
-        ):
-            paths.append(f"{root}/{d}")
-    return paths
+
+def _seed(spark: SparkSession, root: str, schema) -> str:
+    """Write a family's empty schema seed at ``{root}/seed`` (so the
+    first batch's history read resolves a schema) and return ``root``.
+    ``schema`` is a DDL string or a ``StructType``."""
+    spark.createDataFrame([], schema).write.mode("overwrite").parquet(f"{root}/seed")
+    return root
+
+
+#: Row schemas that several families share: near-dup pair outputs,
+#: BM25 postings + corpus counters, dHash rows, CDC/frame postings.
+_PAIRS_SCHEMA = "id_a long, id_b long, jaccard double"
+_BM25_POST_SCHEMA = "tok string, doc_id long, tf long, dl long"
+_BM25_STAT_SCHEMA = "n_docs long, sum_dl long"
+_PHASH_SCHEMA = "doc_id long, b0 long, b1 long, b2 long, b3 long"
+_FP_SCHEMA = "doc_id long, fh string"
 
 
 def _persist_result(df, name: str):
@@ -962,19 +959,15 @@ def _mh_seed_state(docs, state_root: str) -> tuple:
     three root paths."""
     from tailsql_spark.operators.dedup import minhash_signatures, shingles_col
 
-    ex_root = f"{state_root}/ex"
-    sig_root = f"{state_root}/sig"
-    out_root = f"{state_root}/pairs"
-    empty = docs.limit(0)
-    empty_ex = empty.select(
+    spark = docs.sparkSession
+    empty_ex = docs.limit(0).select(
         "doc_id", F.explode_outer(shingles_col(F.col("text"))).alias("s")
     ).filter(F.col("s").isNotNull())
-    empty_ex.write.mode("overwrite").parquet(f"{ex_root}/seed")
-    minhash_signatures(empty_ex).write.mode("overwrite").parquet(f"{sig_root}/seed")
-    empty_ex.selectExpr(
-        "doc_id AS id_a", "doc_id AS id_b", "CAST(0.0 AS DOUBLE) AS jaccard"
-    ).limit(0).write.mode("overwrite").parquet(f"{out_root}/seed")
-    return ex_root, sig_root, out_root
+    return (
+        _seed(spark, f"{state_root}/ex", empty_ex.schema),
+        _seed(spark, f"{state_root}/sig", minhash_signatures(empty_ex).schema),
+        _seed(spark, f"{state_root}/pairs", _PAIRS_SCHEMA),
+    )
 
 
 def stream_dedup_minhash(
@@ -1012,7 +1005,7 @@ def stream_dedup_minhash(
     return _run_incremental(
         "stream_dedup_minhash", sf_dir, state_root, docs,
         lambda root: _minhash_batch_processor(*_mh_seed_state(docs, root)),
-        lambda root: spark.read.parquet(*_mh_state_paths(f"{root}/pairs")),
+        lambda root: spark.read.parquet(*_flat_state_paths(f"{root}/pairs")),
     )
 
 
@@ -1048,16 +1041,10 @@ def _latest_snapshot_path(root: str, exclude_bid: int | None) -> str:
     freeze the snapshot pick in a long-running stream. Shared by the
     incremental clustering (label snapshots) and incremental ANN
     (top-k snapshots) processors."""
-    # keep (id, listed name) pairs: the path returned must be the dir
-    # that actually exists, not a reconstruction from one writer's pad
-    # width (a b7 or b0000007 writer would otherwise break the read)
-    bids = sorted(
-        (int(d[1:]), d)
-        for d in _fs_list(root)
-        if d.startswith("b") and d[1:].isdigit()
-        and (exclude_bid is None or int(d[1:]) < exclude_bid)
-    )
-    return f"{root}/{bids[-1][1]}" if bids else f"{root}/seed"
+    names = [
+        d for b, d in _batch_dirs(root) if exclude_bid is None or b < exclude_bid
+    ]
+    return f"{root}/{names[-1]}" if names else f"{root}/seed"
 
 
 def _prune_snapshots(root: str, keep_from_bid: int) -> None:
@@ -1067,8 +1054,8 @@ def _prune_snapshots(root: str, keep_from_bid: int) -> None:
     pruning, a long-running stream accumulates one full-state copy per
     micro-batch and the 'bounded state' claim silently becomes
     O(batches)."""
-    for d in _fs_list(root):
-        if d.startswith("b") and d[1:].isdigit() and int(d[1:]) < keep_from_bid:
+    for b, d in _batch_dirs(root):
+        if b < keep_from_bid:
             _fs_rmtree(f"{root}/{d}")
 
 
@@ -1088,7 +1075,7 @@ def _cc_batch_processor(edges_root: str, labels_root: str):
         )
         # the edge accumulator INCLUDES this batch's (idempotent) write;
         # the label seed EXCLUDES this batch — replay-safe warm start
-        all_pairs = sess.read.parquet(*_mh_state_paths(edges_root))
+        all_pairs = sess.read.parquet(*_flat_state_paths(edges_root))
         seed = sess.read.parquet(_latest_snapshot_path(labels_root, bid))
         labels = connected_components(all_pairs, seed_labels=seed)
         labels.write.mode("overwrite").parquet(f"{labels_root}/{sub}")
@@ -1128,11 +1115,10 @@ def stream_dedup_clusters(
     pairs = dedup_minhash_lsh_pairs(spark, sf_dir)
 
     def setup(root):
-        pairs.limit(0).write.mode("overwrite").parquet(f"{root}/edges/seed")
-        spark.createDataFrame([], "doc_id long, cluster_id long").write.mode(
-            "overwrite"
-        ).parquet(f"{root}/labels/seed")
-        return _cc_batch_processor(f"{root}/edges", f"{root}/labels")
+        return _cc_batch_processor(
+            _seed(spark, f"{root}/edges", pairs.schema),
+            _seed(spark, f"{root}/labels", "doc_id long, cluster_id long"),
+        )
 
     def finish(root):
         labels = spark.read.parquet(_latest_snapshot_path(f"{root}/labels", None))
@@ -1279,9 +1265,10 @@ def stream_ann_topk(
             F.col("nrm").alias("qn"),
         )
         queries.write.mode("overwrite").parquet(f"{root}/queries")
-        spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, rnk long"
-        ).write.mode("overwrite").parquet(f"{root}/topk/seed")
+        _seed(
+            spark, f"{root}/topk",
+            "query_id long, neighbor_id long, cosine double, rnk long",
+        )
         return _ann_batch_processor(
             f"{root}/topk", f"{root}/queries", f"{root}/seeds"
         )
@@ -1359,7 +1346,7 @@ def _contam_batch_processor(
         sub = _bdir(bid)
         if del_root is None:
             gb = _doc_5grams(batch_df).select("g").distinct()
-            hist = sess.read.parquet(*_mh_state_paths(train_root, bid)).select("g")
+            hist = sess.read.parquet(*_flat_state_paths(train_root, bid)).select("g")
             new_grams = gb.join(hist, "g", "left_anti").persist()
             state_rows = new_grams.select("g")
         else:
@@ -1436,16 +1423,14 @@ def stream_contamination(
     def setup(root):
         test_grams = _doc_5grams(test_docs)
         test_grams.write.mode("overwrite").parquet(f"{root}/test_grams")
-        test_grams.select("g").limit(0).write.mode("overwrite").parquet(
-            f"{root}/train_grams/seed"
-        )
-        test_grams.limit(0).write.mode("overwrite").parquet(f"{root}/hits/seed")
+        _seed(spark, f"{root}/train_grams", test_grams.select("g").schema)
+        _seed(spark, f"{root}/hits", test_grams.schema)
         return _contam_batch_processor(
             f"{root}/train_grams", f"{root}/hits", f"{root}/test_grams"
         )
 
     def finish(root):
-        hits = spark.read.parquet(*_mh_state_paths(f"{root}/hits"))
+        hits = spark.read.parquet(*_flat_state_paths(f"{root}/hits"))
         return _contam_report(spark, f"{root}/test_grams", hits)
 
     return _run_incremental(
@@ -1559,7 +1544,7 @@ def _semdedup_batch_processor(
             .persist()
         )
         if del_root is None:
-            hist = sess.read.parquet(*_mh_state_paths(members_root, bid))
+            hist = sess.read.parquet(*_flat_state_paths(members_root, bid))
         else:
             hist = sess.read.parquet(
                 *_flat_state_paths(members_root, bid)
@@ -1641,9 +1626,7 @@ def stream_dedup_semantic(
 
     def setup(root):
         members_root, cent_path = _semdedup_seed(spark, sf_dir, root)
-        spark.createDataFrame(
-            [], "vec_id long, cell long, pruned_by long"
-        ).write.mode("overwrite").parquet(f"{root}/snap/seed")
+        _seed(spark, f"{root}/snap", "vec_id long, cell long, pruned_by long")
         return _semdedup_batch_processor(members_root, f"{root}/snap", cent_path)
 
     def finish(root):
@@ -1670,9 +1653,7 @@ def _semdedup_seed(spark: SparkSession, sf_dir: str, root: str) -> tuple[str, st
     members_root, cent_path = f"{root}/members", f"{root}/centroids"
     _, cent = lloyd_loop(spark, sf_dir)
     cent.write.mode("overwrite").parquet(cent_path)
-    spark.createDataFrame(
-        [], "vec_id long, cell long, v array<double>, nrm double"
-    ).write.mode("overwrite").parquet(f"{members_root}/seed")
+    _seed(spark, members_root, "vec_id long, cell long, v array<double>, nrm double")
     return members_root, cent_path
 
 
@@ -1815,8 +1796,8 @@ def stream_substring_spans(
     docs = t["documents"].select("doc_id", "text")
 
     def finish(root):
-        dup = spark.read.parquet(*_mh_state_paths(f"{root}/dup")).select("g")
-        pos = spark.read.parquet(*_mh_state_paths(f"{root}/pos"))
+        dup = spark.read.parquet(*_flat_state_paths(f"{root}/dup")).select("g")
+        pos = spark.read.parquet(*_flat_state_paths(f"{root}/pos"))
         return spans_from_flagged(pos.join(dup, "g").select("doc_id", "pos"))
 
     return _run_incremental(
@@ -1830,12 +1811,12 @@ def _substr_seed(docs: DataFrame, root: str) -> tuple[str, str, str]:
     their three roots."""
     from tailsql_spark.operators.dedup import doc_pos_grams
 
-    pos_root, dup_root, pending_root = f"{root}/pos", f"{root}/dup", f"{root}/pending"
     empty_pg = doc_pos_grams(docs.limit(0))
-    empty_pg.write.mode("overwrite").parquet(f"{pos_root}/seed")
-    empty_pg.select("g").write.mode("overwrite").parquet(f"{dup_root}/seed")
-    empty_pg.select("g").write.mode("overwrite").parquet(f"{pending_root}/seed")
-    return pos_root, dup_root, pending_root
+    return (
+        _seed(docs.sparkSession, f"{root}/pos", empty_pg.schema),
+        _seed(docs.sparkSession, f"{root}/dup", empty_pg.select("g").schema),
+        _seed(docs.sparkSession, f"{root}/pending", empty_pg.select("g").schema),
+    )
 
 
 from tailsql_spark.operators.dedup import REGISTRY as _DEDUP_REGISTRY  # noqa: E402
@@ -1933,7 +1914,7 @@ def stream_curation_survivors(
         )
 
     def finish(root):
-        attrs = spark.read.parquet(*_mh_state_paths(f"{root}/attrs"))
+        attrs = spark.read.parquet(*_flat_state_paths(f"{root}/attrs"))
         # the label snapshot grows with everything ingested: gate the
         # broadcast hint on its actual on-disk footprint (r17, guide §3.1)
         lab_path = _latest_snapshot_path(f"{root}/labels", None)
@@ -1951,19 +1932,14 @@ def stream_curation_survivors(
 def _curation_graph_seed(spark: SparkSession, root: str) -> tuple[str, str, str]:
     """Seed the curation composition's edge log, label snapshots and
     quality-attribute log under ``root``; returns their three roots."""
-    edges_root, labels_root, attrs_root = (
-        f"{root}/edges", f"{root}/labels", f"{root}/attrs"
+    return (
+        _seed(spark, f"{root}/edges", "id_a long, id_b long"),
+        _seed(spark, f"{root}/labels", "doc_id long, cluster_id long"),
+        _seed(
+            spark, f"{root}/attrs",
+            "doc_id long, lang string, fingerprint string, n_tokens long",
+        ),
     )
-    spark.createDataFrame([], "id_a long, id_b long").write.mode("overwrite").parquet(
-        f"{edges_root}/seed"
-    )
-    spark.createDataFrame([], "doc_id long, cluster_id long").write.mode(
-        "overwrite"
-    ).parquet(f"{labels_root}/seed")
-    spark.createDataFrame(
-        [], "doc_id long, lang string, fingerprint string, n_tokens long"
-    ).write.mode("overwrite").parquet(f"{attrs_root}/seed")
-    return edges_root, labels_root, attrs_root
 
 
 from tailsql_spark.operators.corpus import _curation_oracle as _CURATION_ORACLE  # noqa: E402
@@ -2028,14 +2004,13 @@ def stream_bpe_pair_counts(
     docs = t["documents"].select("doc_id", "text")
 
     def setup(root):
-        spark.createDataFrame([], "pair string, n long").write.mode(
-            "overwrite"
-        ).parquet(f"{root}/counts/seed")
-        return _bpe_pairs_batch_processor(f"{root}/counts")
+        return _bpe_pairs_batch_processor(
+            _seed(spark, f"{root}/counts", "pair string, n long")
+        )
 
     def finish(root):
         return (
-            spark.read.parquet(*_mh_state_paths(f"{root}/counts"))
+            spark.read.parquet(*_flat_state_paths(f"{root}/counts"))
             .groupBy("pair")
             .agg(F.sum("n").alias("n"))
             .orderBy(F.desc("n"), F.asc("pair"))
@@ -2334,16 +2309,9 @@ def _bucket_manifest_write(
 def _bucket_manifest_seed(empty_frame, root: str) -> None:
     """Schema seed for a family's manifest (empty, so the first batch's
     recursive manifest read resolves a schema)."""
-    (
-        empty_frame.select(
-            F.lit(0).cast("long").alias("bid"),
-            F.lit(0).cast("long").alias("nb"),
-            F.lit(0).cast("long").alias("bucket"),
-            F.lit("").alias("path"),
-        )
-        .limit(0)
-        .write.mode("overwrite")
-        .parquet(f"{root}/_manifest/seed")
+    _seed(
+        empty_frame.sparkSession, f"{root}/_manifest",
+        "bid long, nb long, bucket long, path string",
     )
 
 
@@ -2538,7 +2506,6 @@ def _fs_rmfile(path: str) -> None:
     local branch is shutil.rmtree, which silently no-ops on a plain
     file under ignore_errors)."""
     if "://" not in path:
-        import contextlib
         import os
 
         with contextlib.suppress(FileNotFoundError):
@@ -2610,8 +2577,38 @@ def wait_family_lease(
             time.sleep(poll_sec)
 
 
+@contextlib.contextmanager
+def family_lease(root: str, holder: str, wait_sec: float = 0.0):
+    """Hold the family's compaction lease for the ``with`` body — THE
+    lease scope every fold, purge, maintain pass and leased ingest
+    batch uses.  ``wait_sec=0`` raises :class:`FamilyLeaseHeld` on a
+    held lease (the independent-cron semantics); ``wait_sec>0`` blocks
+    up to that long via :func:`wait_family_lease` (the co-scheduled
+    semantics).  The release is holder-verified, so a holder that was
+    TTL-reclaimed mid-pass never deletes the reclaimant's lease."""
+    if wait_sec > 0:
+        wait_family_lease(root, holder=holder, timeout_sec=wait_sec)
+    else:
+        acquire_family_lease(root, holder=holder)
+    try:
+        yield
+    finally:
+        release_family_lease(root, holder=holder)
+
+
+def _lease_holder(kind: str, bid: int | None = None) -> str:
+    """Lease holder id: ``{kind}:b{bid}`` for a pass inside batch
+    ``bid`` (a crashed batch's REPLAY re-enters its own lease at once),
+    ``{kind}:{pid}`` for an OFFLINE pass — acquire treats an equal
+    holder as that replay and reclaims immediately, so offline passes
+    must never share one id across processes."""
+    import os
+
+    return f"{kind}:b{int(bid)}" if bid is not None else f"{kind}:{os.getpid()}"
+
+
 def _rebucket_family(
-    sess, root: str, col: str, key, exclude_bid: int, meta: dict,
+    sess, root: str, col: str, key, exclude_bid: int | None, meta: dict,
     del_root: str | None = None, del_col: str = "doc_id",
     force: bool = False,
 ) -> dict:
@@ -2652,15 +2649,16 @@ def _rebucket_family(
     is what keeps every per-batch probe reading a touched-bucket
     FRACTION that shrinks as the corpus grows instead of degenerating
     to a full scan at a fixed bucket count."""
-    new_nb = state_bucket_count(int(meta["rows"]))
-    minor = new_nb <= int(meta["nb"])
-    if minor and force:
-        # OFFLINE forced compaction (the takedown purge path): fold now
-        # at the unchanged bucket count regardless of the dial/delta
-        # thresholds.  Callers pass an exclude_bid above every
-        # committed bid (nothing excluded) and run between streams.
-        new_nb = int(meta["nb"])
-    elif minor:
+    if force:
+        # OFFLINE forced compaction (the maintain / takedown purge
+        # path): fold now regardless of the dial/delta thresholds.  It
+        # runs between streams, so no in-flight bid exists to exclude
+        # (a caller's above-every-bid sentinel means the same), and the
+        # lease holder is pid-keyed: a bid-keyed sentinel holder would
+        # read as a replay of every other offline fold of the family and
+        # reclaim its live lease at once.
+        exclude_bid = None
+    elif state_bucket_count(int(meta["rows"])) <= int(meta["nb"]):
         # MINOR fold (r13): no dial crossing, but delta dirs may have
         # piled up since the last fold.  Probe the manifest for the
         # committed delta-tier count only every Nth batch (bid-
@@ -2682,12 +2680,9 @@ def _rebucket_family(
         )
         if ndeltas < MINOR_FOLD_MAX_DELTAS:
             return meta
-        new_nb = int(meta["nb"])
     # the fold MUTATES versioned state: take the family lease for its
     # duration so a concurrent offline purge cannot interleave (r14)
-    _holder = f"fold:b{int(exclude_bid)}"
-    acquire_family_lease(root, holder=_holder)
-    try:
+    with family_lease(root, _lease_holder("fold", exclude_bid)):
         # r15 (ADVICE): re-resolve the family pointer INSIDE the lease —
         # a caller-provided pre-lease snapshot goes stale when another
         # maintain run folds+vacuums between the caller's meta read and
@@ -2701,14 +2696,16 @@ def _rebucket_family(
         ver = int(meta["version"]) + 1
         man = sess.read.option("recursiveFileLookup", "true").parquet(
             _manifest_dir(root, int(meta["version"]))
-        ).filter(F.col("bid") != int(exclude_bid))
+        )
+        if exclude_bid is not None:
+            man = man.filter(F.col("bid") != int(exclude_bid))
         # planning-metadata: every state leaf dir of the family (dir-counted)
         paths = [r.path for r in man.select("path").distinct().collect()]  # planning-metadata
         base_dir = f"{root}/base_v{ver}"
         src = sess.read.parquet(f"{root}/seed", *paths)
         if del_root is not None:
             dels = (
-                sess.read.parquet(*_del_state_paths(del_root, exclude_bid))
+                sess.read.parquet(*_flat_state_paths(del_root, exclude_bid))
                 .select(del_col)
                 .distinct()
             )
@@ -2728,13 +2725,11 @@ def _rebucket_family(
         if del_root is not None:
             # tombstone-log compaction BEFORE the family meta commit: a
             # crash in between leaves base_v{ver} invisible (meta still
-            # points at the old version) and a duplicated-but-complete del
-            # read — both rewritten idempotently by the retried fold
+            # points at the old version) and a compacted-but-complete del
+            # log — the retried fold rewrites both idempotently
             _compact_del_log(sess, del_root, del_col, exclude_bid)
         meta = {"version": ver, "nb": new_nb, "rows": int(meta["rows"])}
         _state_meta_write(root, meta)  # the commit point
-    finally:
-        release_family_lease(root, holder=_holder)
     return meta
 
 
@@ -2777,26 +2772,6 @@ def expire_state_versions(sess, root: str) -> list[str]:
     return deleted
 
 
-def _del_state_paths(root: str, exclude_bid: int | None = None) -> list[str]:
-    """All dirs of a TOMBSTONE-LOG family: the schema seed, the
-    per-batch ``b#####`` delete dirs (same numeric-id parse and replay
-    exclusion as ``_mh_state_paths``), plus any ``base_v*`` compacted
-    dirs a fold has written.  Reading base + not-yet-expired per-batch
-    dirs together can only duplicate ids — harmless, the log is
-    consumed exclusively through anti-joins / distinct."""
-    paths = [f"{root}/seed"]
-    for d in sorted(_fs_list_dirs(root)):
-        if (
-            d.startswith("b")
-            and d[1:].isdigit()
-            and (exclude_bid is None or int(d[1:]) != exclude_bid)
-        ):
-            paths.append(f"{root}/{d}")
-        elif d.startswith("base_v") and d[6:].isdigit():
-            paths.append(f"{root}/{d}")
-    return paths
-
-
 def _del_meta_read(root: str) -> dict:
     """The tombstone log's compaction pointer: {version,
     folded_below_bid}.  version selects the live ``base_v{version}``
@@ -2818,112 +2793,54 @@ def _del_meta_read(root: str) -> dict:
 def _compact_del_log(sess, root: str, col: str, exclude_bid: int | None) -> None:
     """Fold the accumulated tombstone log into one consolidated,
     DEDUPED ``base_v{N}`` dir (distinct ids — a doc deleted in three
-    batches stores one row) and commit the del meta pointer.  N is the
-    log's OWN monotone counter (del meta version + 1), independent of
-    any state family's fold version: one del log may serve several
+    batches stores one row) through :func:`_rewrite_flat_family`.  N is
+    the log's OWN monotone counter (del meta version + 1), independent
+    of any state family's fold version: one del log may serve several
     families (the curation composition shares one across the band,
     posting, and attribute states) whose folds fire at different
-    times.  The set
-    stays COMPLETE: ids are never dropped, because a 'D' must keep
-    out-ranking a later-arriving 'I' for the same id at serve time
-    (batch order is not guaranteed), so the serve-time anti-join stays
-    total while the log's footprint becomes O(distinct deletions) and
-    the folded per-batch dirs become reclaimable garbage for
-    ``expire_del_versions``.
-
-    Crash safety: base write (overwrite, idempotent) then meta commit;
-    a crash in between leaves base + unfolded dirs BOTH readable via
-    ``_del_state_paths`` — duplicate ids, which the anti-join/distinct
-    consumers ignore — and the next fold rewrites both.  Lease-guarded
-    (r14): one del log can serve several families whose folds fire
-    independently, so concurrent compactions of the LOG itself must
-    serialize."""
-    # bid-keyed when called from a fold so a crashed fold's REPLAY
-    # re-enters its own lease; pid-keyed for offline (bid-less)
-    # compactions so concurrent offline runs conflict loudly
-    _holder = (
-        f"del-compact:b{int(exclude_bid)}"
-        if exclude_bid is not None
-        else f"del-compact:{__import__('os').getpid()}"
+    times, so concurrent compactions of the LOG itself serialize on
+    its own lease.  ``exclude_bid`` is the in-flight batch of a fold
+    that runs inside a batch: its delete dir stays out of the base and
+    the horizon clamps at it, and the lease is bid-keyed so a crashed
+    fold's REPLAY re-enters its own lease; ``None`` (offline) folds
+    every dir under a pid-keyed lease."""
+    # no coalesce(1): the distinct's own partitioning writes a handful
+    # of files at test scale and stays parallel when the deletion set
+    # is genuinely large
+    _rewrite_flat_family(
+        sess, root, lambda live: live.select(col).distinct(),
+        "del-compact", exclude_bid,
     )
-    acquire_family_lease(root, holder=_holder)
-    try:
-        meta = _del_meta_read(root)
-        ver = int(meta["version"]) + 1
-        dels = (
-            sess.read.parquet(*_del_state_paths(root, exclude_bid))
-            .select(col)
-            .distinct()
-        )
-        # no coalesce(1): the distinct's own partitioning writes a handful
-        # of files at test scale and stays parallel when the deletion set
-        # is genuinely large
-        dels.write.mode("overwrite").parquet(f"{root}/base_v{ver}")
-        import json
-
-        # the recorded horizon must never exceed the largest dir that
-        # actually existed at fold time: a forced offline fold passes a
-        # sentinel exclude_bid above every real bid, and recording THAT
-        # would let a later expire reclaim post-fold delete dirs that were
-        # never folded (silent tombstone loss)
-        folded_below = _max_bid(root) + 1
-        if exclude_bid is not None:
-            folded_below = min(folded_below, int(exclude_bid))
-        # ...and must never fall below the committed horizon: once
-        # expire_del_versions reclaimed the folded dirs, a second fold
-        # sees none of them, and a horizon that fell back would serve a
-        # replayed old batch dir beside the base that already holds it
-        folded_below = max(folded_below, int(meta["folded_below_bid"]))
-        _fs_write_text_atomic(
-            f"{root}/_meta.json",
-            json.dumps({"version": int(ver), "folded_below_bid": folded_below}),
-        )
-    finally:
-        release_family_lease(root, holder=_holder)
-
-
-def _max_bid(root: str) -> int:
-    """Largest per-batch bid present under a state family's root (−1
-    when none) — metadata-sized directory listing only."""
-    bids = [
-        int(d[1:])
-        for d in _fs_list_dirs(root)
-        if d.startswith("b") and d[1:].isdigit()
-    ]
-    return max(bids) if bids else -1
 
 
 def _flat_state_paths(root: str, exclude_bid: int | None = None) -> list[str]:
-    """Meta-aware read of a FLAT per-batch state family (attrs /
-    modality posting logs): without a compaction pointer this is
-    exactly the ``_mh_state_paths`` listing (seed + every ``b#####``
-    dir); after a ``purge_flat_family`` it reads the live
-    ``base_v{version}`` plus ONLY the post-fold delta dirs
-    (bid >= folded_below_bid) — never both copies of a folded row,
-    because these families' rows are COUNTED downstream (posting df,
-    group sizes), where the tombstone log's duplicate tolerance does
-    not apply.  Crash-safe: the base becomes visible only through the
-    atomically-committed meta pointer.
+    """THE read listing of a per-batch state family: the schema seed,
+    the live ``base_v{version}`` once a fold committed the
+    {version, folded_below_bid} pointer, and ONLY the post-fold delta
+    dirs (bid >= folded_below_bid) — never both copies of a folded
+    row, because flat families' rows are COUNTED downstream (posting
+    df, group sizes).  Without a pointer this is the seed plus every
+    ``b#####`` dir.  Serves flat content families, additive-partial
+    logs and tombstone logs alike (a superseded base or a folded dir
+    the vacuum has not reclaimed yet holds only ids the committed base
+    already holds).  Crash-safe: the base becomes visible only through
+    the atomically-committed meta pointer.
 
-    ``exclude_bid`` (r14) applies the same replay rule as
-    ``_mh_state_paths``: a processor's HISTORY read excludes the
-    replaying batch's own delta dir.  The base never needs excluding —
-    purges run offline with the stream drained, so every folded bid is
-    strictly below any bid that can still replay."""
+    ``exclude_bid`` applies the replay rule: a processor's HISTORY read
+    excludes the replaying batch's own delta dir — a replayed batch
+    must see the state exactly as it stood BEFORE its original run.
+    The base never needs excluding: offline folds run with the stream
+    drained, and an in-batch fold clamps the horizon at its own bid,
+    so every folded bid is strictly below any bid that can still
+    replay."""
     meta = _del_meta_read(root)
     ver, below = int(meta["version"]), int(meta["folded_below_bid"])
-    paths = [f"{root}/seed"]
-    if ver > 0:
-        paths.append(f"{root}/base_v{ver}")
-    for d in sorted(_fs_list_dirs(root)):
-        if (
-            d.startswith("b")
-            and d[1:].isdigit()
-            and int(d[1:]) >= below
-            and (exclude_bid is None or int(d[1:]) != int(exclude_bid))
-        ):
-            paths.append(f"{root}/{d}")
-    return paths
+    paths = [f"{root}/seed"] + ([f"{root}/base_v{ver}"] if ver > 0 else [])
+    return paths + [
+        f"{root}/{d}"
+        for b, d in _batch_dirs(root)
+        if b >= below and (exclude_bid is None or b != int(exclude_bid))
+    ]
 
 
 def purge_flat_family(sess, root: str, dels, col: str = "doc_id") -> None:
@@ -2932,69 +2849,78 @@ def purge_flat_family(sess, root: str, dels, col: str = "doc_id") -> None:
     posting logs (ph / audio / video) cannot get from a dial fold
     (they are unbucketed by design; their per-row state is a handful
     of ints/hashes).  Folds every live dir MINUS the delete set into
-    one consolidated ``base_v{N}`` and commits the same
-    {version, folded_below_bid} pointer the tombstone log uses, so
-    ``_flat_state_paths`` serves the base + post-fold deltas and
+    one consolidated ``base_v{N}`` through :func:`_rewrite_flat_family`,
+    so ``_flat_state_paths`` serves the base + post-fold deltas and
     ``expire_del_versions`` reclaims the folded dirs.  These families
     hold CONTENT-DERIVED state (fingerprints, perceptual hashes, CDC
     frames), which is what a compliance takedown must actually erase;
     the id-only graph state (edges, label snapshots) is metadata and
     is instead filtered/recomputed at serve.  Run OFFLINE, never while
-    the family's stream is live (same window as every other fold) —
-    and lease-enforced: the family's path SNAPSHOT is resolved INSIDE
-    the lease (r14 review: a snapshot taken outside it could fold a
-    stale pre-concurrent-purge path list, resurrecting rows another
-    purge just erased)."""
-    import os
-
-    _holder = f"flat-purge:{os.getpid()}"
-    acquire_family_lease(root, holder=_holder)
-    try:
-        live = sess.read.parquet(*_flat_state_paths(root))
-        purged = live.join(F.broadcast(dels.select(col)), col, "left_anti")
-        _rewrite_flat_family_locked(sess, root, purged)
-    finally:
-        release_family_lease(root, holder=_holder)
+    the family's stream is live (same window as every other fold)."""
+    _rewrite_flat_family(
+        sess, root,
+        lambda live: live.join(F.broadcast(dels.select(col)), col, "left_anti"),
+        "flat-purge",
+    )
 
 
-def _rewrite_flat_family(sess, root: str, frame) -> None:
-    """Commit ``frame`` as the new consolidated ``base_v{N}`` of a FLAT
-    per-batch state family under the {version, folded_below_bid}
-    pointer discipline — the generic fold `purge_flat_family` is the
-    anti-join instance of.  Takedown purges that must REBUILD a
-    derived family (the substring dup/pending gram sets, whose
-    membership is not monotone under deletion) pass the recomputed
-    frame directly.  Same crash safety as every fold: base write
-    (overwrite, idempotent) then atomic meta commit; `_flat_state_paths`
-    serves the base + post-fold deltas only after the pointer lands.
-    Takes the family lease for the write+commit (r14): a concurrent
-    purge or live fold against the same family raises instead of
-    interleaving half-committed versions.  When ``frame`` reads the
-    SAME family being rewritten, resolve its paths under the lease —
-    ``purge_flat_family`` does; rebuild-style callers whose frame reads
-    a DIFFERENT (already-purged) family are unaffected."""
-    import os
+def _rewrite_flat_family(
+    sess, root: str, fold, kind: str = "flat-rewrite",
+    exclude_bid: int | None = None,
+) -> None:
+    """THE base commit of a per-batch state family under the
+    {version, folded_below_bid} pointer: commit ``fold(live)`` — where
+    ``live`` reads the family's current ``_flat_state_paths`` — as the
+    next consolidated ``base_v{N+1}``, then swap the pointer.  Every
+    fold is an instance: the tombstone-log compaction
+    (``_compact_del_log``: distinct ids), the anti-join purge
+    (``purge_flat_family``), the additive-partial fold
+    (``fold_partial_log``), and takedown REBUILDS of a derived family
+    whose membership is not monotone under deletion (the substring
+    dup/pending gram sets pass a recomputed frame and ignore ``live``).
 
-    _holder = f"flat-rewrite:{os.getpid()}"
-    acquire_family_lease(root, holder=_holder)
-    try:
-        _rewrite_flat_family_locked(sess, root, frame)
-    finally:
-        release_family_lease(root, holder=_holder)
+    Lease-enforced (r14): the whole read-write-commit runs under the
+    family lease (holder ``_lease_holder(kind, exclude_bid)``), and
+    ``live`` is resolved INSIDE it — a path snapshot taken outside
+    could fold a stale pre-concurrent-purge list, resurrecting rows
+    another purge just erased.  A concurrent fold or purge of the same
+    family raises instead of interleaving half-committed versions.
 
+    Crash safety: base write (overwrite, idempotent) then atomic
+    pointer commit.  A crash in between leaves the old pointer serving
+    the old (complete) state and an invisible base; the retried fold
+    rewrites both.
 
-def _rewrite_flat_family_locked(sess, root: str, frame) -> None:
+    The recorded horizon is the largest bid listed before the read
+    plus one — it must never exceed the largest dir that actually
+    existed at fold time, or a later expire would reclaim post-fold
+    dirs that were never folded (silent tombstone loss), so a caller's
+    ``exclude_bid`` above every real bid is never recorded as such.  It
+    is clamped at ``exclude_bid`` (the in-flight batch's dir is not in
+    the base) and never falls below the committed horizon: once
+    ``expire_del_versions`` reclaimed the folded dirs a second fold
+    sees none of them, and a horizon that fell back would serve a
+    replayed old batch dir beside the base that already holds it.
+
+    No id is ever dropped from a tombstone log's base: a 'D' must keep
+    out-ranking a later-arriving 'I' for the same id at serve time
+    (batch order is not guaranteed), so the serve-time anti-join stays
+    total while the log's footprint becomes O(distinct deletions)."""
     import json
 
-    meta = _del_meta_read(root)
-    ver = int(meta["version"]) + 1
-    frame.write.mode("overwrite").parquet(f"{root}/base_v{ver}")
-    # the horizon never falls back (see _compact_del_log)
-    folded_below = max(_max_bid(root) + 1, int(meta["folded_below_bid"]))
-    _fs_write_text_atomic(
-        f"{root}/_meta.json",
-        json.dumps({"version": int(ver), "folded_below_bid": folded_below}),
-    )
+    with family_lease(root, _lease_holder(kind, exclude_bid)):
+        meta = _del_meta_read(root)
+        ver = int(meta["version"]) + 1
+        folded_below = max((b for b, _ in _batch_dirs(root)), default=-1) + 1
+        live = sess.read.parquet(*_flat_state_paths(root, exclude_bid))
+        fold(live).write.mode("overwrite").parquet(f"{root}/base_v{ver}")
+        if exclude_bid is not None:
+            folded_below = min(folded_below, int(exclude_bid))
+        folded_below = max(folded_below, int(meta["folded_below_bid"]))
+        _fs_write_text_atomic(
+            f"{root}/_meta.json",
+            json.dumps({"version": ver, "folded_below_bid": folded_below}),
+        )
 
 
 def expire_del_versions(root: str) -> list[str]:
@@ -3009,15 +2935,15 @@ def expire_del_versions(root: str) -> list[str]:
     touched.  Returns the deleted paths for audit."""
     meta = _del_meta_read(root)
     ver, below = int(meta["version"]), int(meta["folded_below_bid"])
+    dead = [d for b, d in _batch_dirs(root) if b < below] + [
+        d
+        for d in _fs_list_dirs(root)
+        if d.startswith("base_v") and d[6:].isdigit() and int(d[6:]) < ver
+    ]
     deleted: list[str] = []
-    for d in sorted(_fs_list_dirs(root)):
-        full = f"{root}/{d}"
-        if d.startswith("b") and d[1:].isdigit() and int(d[1:]) < below:
-            deleted.append(full)
-            _fs_rmtree(full)
-        elif d.startswith("base_v") and d[6:].isdigit() and int(d[6:]) < ver:
-            deleted.append(full)
-            _fs_rmtree(full)
+    for d in sorted(dead):
+        deleted.append(f"{root}/{d}")
+        _fs_rmtree(f"{root}/{d}")
     return deleted
 
 
@@ -3033,19 +2959,15 @@ def _mh_bucketed_seed(docs, state_root: str) -> tuple:
         shingles_col,
     )
 
-    bands_root = f"{state_root}/bands"
-    ex_root = f"{state_root}/ex"
-    out_root = f"{state_root}/pairs"
-    empty = docs.limit(0)
-    empty_ex = empty.select(
+    spark = docs.sparkSession
+    empty_ex = docs.limit(0).select(
         "doc_id", F.explode_outer(shingles_col(F.col("text"))).alias("s")
     ).filter(F.col("s").isNotNull())
-    empty_ex.write.mode("overwrite").parquet(f"{ex_root}/seed")
-    sig0 = minhash_signatures(empty_ex)
-    band_long(sig0).write.mode("overwrite").parquet(f"{bands_root}/seed")
-    empty_ex.selectExpr(
-        "doc_id AS id_a", "doc_id AS id_b", "CAST(0.0 AS DOUBLE) AS jaccard"
-    ).limit(0).write.mode("overwrite").parquet(f"{out_root}/seed")
+    ex_root = _seed(spark, f"{state_root}/ex", empty_ex.schema)
+    bands_root = _seed(
+        spark, f"{state_root}/bands", band_long(minhash_signatures(empty_ex)).schema
+    )
+    out_root = _seed(spark, f"{state_root}/pairs", _PAIRS_SCHEMA)
     _bucket_manifest_seed(empty_ex, bands_root)
     _bucket_manifest_seed(empty_ex, ex_root)
     return bands_root, ex_root, out_root
@@ -3252,7 +3174,7 @@ def stream_dedup_minhash_bucketed(
     return _run_incremental(
         "stream_dedup_minhash_bucketed", sf_dir, state_root, docs,
         lambda root: _minhash_bucketed_processor(*_mh_bucketed_seed(docs, root)),
-        lambda root: spark.read.parquet(*_mh_state_paths(f"{root}/pairs")),
+        lambda root: spark.read.parquet(*_flat_state_paths(f"{root}/pairs")),
     )
 
 
@@ -3330,9 +3252,7 @@ def stream_kmv_sketch(
 
 def _kmv_seed(spark: SparkSession, root: str):
     """Seed the KMV partial log at ``{root}/sk``; returns its processor."""
-    spark.createDataFrame([], "day string, h long").write.mode("overwrite").parquet(
-        f"{root}/sk/seed"
-    )
+    _seed(spark, f"{root}/sk", "day string, h long")
     return _kmv_batch_processor(f"{root}/sk")
 
 
@@ -3499,10 +3419,9 @@ def stream_heavy_hitters(
     docs = t["documents"].select("doc_id", "text")
 
     def setup(root):
-        spark.createDataFrame([], "tok string, cnt_est long").write.mode(
-            "overwrite"
-        ).parquet(f"{root}/hh/seed")
-        return _hh_batch_processor(f"{root}/hh")
+        return _hh_batch_processor(
+            _seed(spark, f"{root}/hh", "tok string, cnt_est long")
+        )
 
     def finish(root):
         # read = the family's own fold merge over base + post-fold deltas
@@ -3601,10 +3520,9 @@ def stream_countmin_sketch(
     docs = t["documents"].select("doc_id", "text")
 
     def setup(root):
-        spark.createDataFrame([], "d int, cell long, c long").write.mode(
-            "overwrite"
-        ).parquet(f"{root}/cm/seed")
-        return _cms_batch_processor(f"{root}/cm")
+        return _cms_batch_processor(
+            _seed(spark, f"{root}/cm", "d int, cell long, c long")
+        )
 
     def finish(root):
         # read = the family's own fold merge over base + post-fold deltas
@@ -3818,17 +3736,14 @@ def stream_bm25_topk(
     docs = t["documents"].select("doc_id", "text")
 
     def setup(root):
-        spark.createDataFrame(
-            [], "tok string, doc_id long, tf long, dl long"
-        ).write.mode("overwrite").parquet(f"{root}/post/seed")
-        spark.createDataFrame([], "n_docs long, sum_dl long").write.mode(
-            "overwrite"
-        ).parquet(f"{root}/stat/seed")
-        return _bm25_batch_processor(f"{root}/post", f"{root}/stat")
+        return _bm25_batch_processor(
+            _seed(spark, f"{root}/post", _BM25_POST_SCHEMA),
+            _seed(spark, f"{root}/stat", _BM25_STAT_SCHEMA),
+        )
 
     def finish(root):
-        postings = spark.read.parquet(*_mh_state_paths(f"{root}/post"))
-        stats = spark.read.parquet(*_mh_state_paths(f"{root}/stat")).agg(
+        postings = spark.read.parquet(*_flat_state_paths(f"{root}/post"))
+        stats = spark.read.parquet(*_flat_state_paths(f"{root}/stat")).agg(
             F.sum("n_docs").alias("n_docs"), F.sum("sum_dl").alias("sum_dl")
         )
         dfreq = postings.groupBy("tok").agg(F.count("*").alias("df"))
@@ -3980,58 +3895,48 @@ def ivf_purge_takedowns(sess: SparkSession, cells_root: str, del_root: str) -> d
     the scheduled purge doubles as its small-file compaction — live
     files collapse to one base tier regardless of how many batches
     have landed, serve unchanged."""
-    _holder = f"ivf-purge:{__import__('os').getpid()}"
-    acquire_family_lease(cells_root, holder=_holder)
-    try:
-        return _ivf_purge_takedowns_locked(sess, cells_root, del_root)
-    finally:
-        release_family_lease(cells_root, holder=_holder)
-
-
-def _ivf_purge_takedowns_locked(
-    sess: SparkSession, cells_root: str, del_root: str
-) -> dict:
-    meta = _state_meta_read(cells_root)
-    ver = int(meta["version"])
-    man = sess.read.option("recursiveFileLookup", "true").parquet(
-        _manifest_dir(cells_root, ver)
-    )
-    # planning-metadata: live nb tiers (1 row: the frozen cell count)
-    nbs = [int(r.nb) for r in man.select("nb").distinct().collect() if r.nb]  # planning-metadata
-    nc = max(nbs) if nbs else N_STATE_BUCKETS
-    # planning-metadata: every committed leaf dir of the family
-    paths = [r.path for r in man.select("path").distinct().collect()]  # planning-metadata
-    src = sess.read.parquet(f"{cells_root}/seed", *paths)
-    dels = _del_ids(sess, del_root, "vec_id")
-    purged = src.join(F.broadcast(dels), "vec_id", "left_anti").withColumn(
-        "cell", F.col("ccell")
-    )
-    newver = ver + 1
-    base_dir = f"{cells_root}/base_v{newver}"
-    (
-        purged.repartition(min(int(nc), 64), "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(base_dir)
-    )
-    _bucket_manifest_write(
-        purged, cells_root, "cell", bid=-newver, nb=int(nc), version=newver,
-        data_dir=base_dir, sub="base",
-    )
-    _compact_del_log(sess, del_root, "vec_id", None)
-    # carry the quantizer pointer through the purge (r14 review): a
-    # routine compaction after a re-train must NOT revert seeds_version
-    # to the staged quantizer — the purge rewrites cells laid out by
-    # the CURRENT seeds, and serving them under the old ones is exactly
-    # the new-cells-under-old-seeds mismatch the atomic cutover forbids
-    new_meta = {
-        "version": newver,
-        "nb": int(nc),
-        "rows": int(meta.get("rows", 0)),
-        "seeds_version": int(meta.get("seeds_version", 0)),
-    }
-    _state_meta_write(cells_root, new_meta)  # the commit point
-    return new_meta
+    with family_lease(cells_root, _lease_holder("ivf-purge")):
+        meta = _state_meta_read(cells_root)
+        ver = int(meta["version"])
+        man = sess.read.option("recursiveFileLookup", "true").parquet(
+            _manifest_dir(cells_root, ver)
+        )
+        # planning-metadata: live nb tiers (1 row: the frozen cell count)
+        nbs = [int(r.nb) for r in man.select("nb").distinct().collect() if r.nb]  # planning-metadata
+        nc = max(nbs) if nbs else N_STATE_BUCKETS
+        # planning-metadata: every committed leaf dir of the family
+        paths = [r.path for r in man.select("path").distinct().collect()]  # planning-metadata
+        src = sess.read.parquet(f"{cells_root}/seed", *paths)
+        dels = _del_ids(sess, del_root, "vec_id")
+        purged = src.join(F.broadcast(dels), "vec_id", "left_anti").withColumn(
+            "cell", F.col("ccell")
+        )
+        newver = ver + 1
+        base_dir = f"{cells_root}/base_v{newver}"
+        (
+            purged.repartition(min(int(nc), 64), "cell")
+            .write.mode("overwrite")
+            .partitionBy("cell")
+            .parquet(base_dir)
+        )
+        _bucket_manifest_write(
+            purged, cells_root, "cell", bid=-newver, nb=int(nc), version=newver,
+            data_dir=base_dir, sub="base",
+        )
+        _compact_del_log(sess, del_root, "vec_id", None)
+        # carry the quantizer pointer through the purge (r14 review): a
+        # routine compaction after a re-train must NOT revert seeds_version
+        # to the staged quantizer — the purge rewrites cells laid out by
+        # the CURRENT seeds, and serving them under the old ones is exactly
+        # the new-cells-under-old-seeds mismatch the atomic cutover forbids
+        new_meta = {
+            "version": newver,
+            "nb": int(nc),
+            "rows": int(meta.get("rows", 0)),
+            "seeds_version": int(meta.get("seeds_version", 0)),
+        }
+        _state_meta_write(cells_root, new_meta)  # the commit point
+        return new_meta
 
 
 #: Cell-occupancy imbalance (max/mean) above which the FROZEN coarse
@@ -4151,131 +4056,115 @@ def ivf_retrain_quantizer(
     is the caller's gate (pytest drives ``_recall_vs_brute`` over the
     re-trained serve; the drift test asserts imbalance back under the
     threshold)."""
-    _holder = f"ivf-retrain:{__import__('os').getpid()}"
-    acquire_family_lease(cells_root, holder=_holder)
-    try:
-        return _ivf_retrain_quantizer_locked(
-            sess, cells_root, seeds_path, del_root, n_iters
-        )
-    finally:
-        release_family_lease(cells_root, holder=_holder)
-
-
-def _ivf_retrain_quantizer_locked(
-    sess: SparkSession,
-    cells_root: str,
-    seeds_path: str,
-    del_root: str | None,
-    n_iters: int,
-) -> dict:
     from tailsql_spark.operators.similarity import assign_cells, norm
     from tailsql_spark.operators.similarity import ivf_cell_count
 
-    meta = _state_meta_read(cells_root)
-    ver = int(meta["version"])
-    man = sess.read.option("recursiveFileLookup", "true").parquet(
-        _manifest_dir(cells_root, ver)
-    )
-    # planning-metadata: every committed leaf dir of the family
-    paths = [r.path for r in man.select("path").distinct().collect()]  # planning-metadata
-    src = sess.read.parquet(f"{cells_root}/seed", *paths).select(
-        "vec_id", "v", "nrm"
-    )
-    if del_root is not None:
-        dels = _del_ids(sess, del_root, "vec_id")
-        src = src.join(F.broadcast(dels), "vec_id", "left_anti")
-    src = src.persist()
-    n_live = src.count()
-    nc = ivf_cell_count(int(n_live))
-    # deterministic init: the nc lowest live vec_ids
-    seeds = (
-        src.orderBy("vec_id")
-        .limit(int(nc))
-        .select(
-            F.col("vec_id").alias("seed_id"),
-            F.col("v").alias("sv"),
-            F.col("nrm").alias("sn"),
+    with family_lease(cells_root, _lease_holder("ivf-retrain")):
+        meta = _state_meta_read(cells_root)
+        ver = int(meta["version"])
+        man = sess.read.option("recursiveFileLookup", "true").parquet(
+            _manifest_dir(cells_root, ver)
         )
-    )
-    # TRAIN-SIDE SAMPLE (r14): every Lloyd iteration is an |V|×|C|
-    # assignment.  The mean updates only need a representative sample
-    # (the FAISS discipline: O(100) training points per centroid), so
-    # past ``IVF_TRAIN_PER_CELL`` live vectors per cell — the
-    # post-IVF_CELL_MAX regime, where |C| is frozen and occupancy
-    # grows without bound — the intermediate iterations assign a
-    # deterministic hash-sample and ONLY the final assignment, the
-    # one that becomes the committed base, pays the full |V|×|C|
-    # pass.  Below the cap the dial keeps occupancy under the budget,
-    # the sample is the whole corpus, and behavior is bit-identical
-    # to the unsampled walk.
-    train = src
-    sample_n = IVF_TRAIN_PER_CELL * int(nc)
-    if int(n_live) > sample_n:
-        p = int(n_live) // sample_n
-        train = src.filter(F.pmod(F.xxhash64("vec_id"), F.lit(p)) == 0)
-    newver = ver + 1
-    spool = f"{cells_root}/_retrain_spool_v{newver}"
-    assigned = None
-    for r in range(int(n_iters)):
-        # lineage truncation per round (the lloyd_loop spool lesson)
-        seeds.write.mode("overwrite").parquet(f"{spool}/s{r}")
-        seeds = sess.read.parquet(f"{spool}/s{r}")
-        assigned = assign_cells(
-            src if r == int(n_iters) - 1 else train, seeds
+        # planning-metadata: every committed leaf dir of the family
+        paths = [r.path for r in man.select("path").distinct().collect()]  # planning-metadata
+        src = sess.read.parquet(f"{cells_root}/seed", *paths).select(
+            "vec_id", "v", "nrm"
         )
-        if r < int(n_iters) - 1:
-            per_el = (
-                assigned.select("cell", F.posexplode("v").alias("pos", "x"))
-                .groupBy("cell", "pos")
-                .agg(F.avg("x").alias("m"))
+        if del_root is not None:
+            dels = _del_ids(sess, del_root, "vec_id")
+            src = src.join(F.broadcast(dels), "vec_id", "left_anti")
+        src = src.persist()
+        n_live = src.count()
+        nc = ivf_cell_count(int(n_live))
+        # deterministic init: the nc lowest live vec_ids
+        seeds = (
+            src.orderBy("vec_id")
+            .limit(int(nc))
+            .select(
+                F.col("vec_id").alias("seed_id"),
+                F.col("v").alias("sv"),
+                F.col("nrm").alias("sn"),
             )
-            seeds = (
-                per_el.groupBy("cell")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                        lambda s: s["m"],
-                    ).alias("sv")
-                )
-                .select(
-                    F.col("cell").alias("seed_id"),
-                    "sv",
-                    norm(F.col("sv")).alias("sn"),
-                )
+        )
+        # TRAIN-SIDE SAMPLE (r14): every Lloyd iteration is an |V|×|C|
+        # assignment.  The mean updates only need a representative sample
+        # (the FAISS discipline: O(100) training points per centroid), so
+        # past ``IVF_TRAIN_PER_CELL`` live vectors per cell — the
+        # post-IVF_CELL_MAX regime, where |C| is frozen and occupancy
+        # grows without bound — the intermediate iterations assign a
+        # deterministic hash-sample and ONLY the final assignment, the
+        # one that becomes the committed base, pays the full |V|×|C|
+        # pass.  Below the cap the dial keeps occupancy under the budget,
+        # the sample is the whole corpus, and behavior is bit-identical
+        # to the unsampled walk.
+        train = src
+        sample_n = IVF_TRAIN_PER_CELL * int(nc)
+        if int(n_live) > sample_n:
+            p = int(n_live) // sample_n
+            train = src.filter(F.pmod(F.xxhash64("vec_id"), F.lit(p)) == 0)
+        newver = ver + 1
+        spool = f"{cells_root}/_retrain_spool_v{newver}"
+        assigned = None
+        for r in range(int(n_iters)):
+            # lineage truncation per round (the lloyd_loop spool lesson)
+            seeds.write.mode("overwrite").parquet(f"{spool}/s{r}")
+            seeds = sess.read.parquet(f"{spool}/s{r}")
+            assigned = assign_cells(
+                src if r == int(n_iters) - 1 else train, seeds
             )
-    new_seeds_dir = f"{seeds_path}_v{newver}"
-    # persist in the staged quantizer's column shape (vec_id, v, nrm)
-    # so every reader's rename-to-seed projection works unchanged
-    seeds.select(
-        F.col("seed_id").alias("vec_id"),
-        F.col("sv").alias("v"),
-        F.col("sn").alias("nrm"),
-    ).write.mode("overwrite").parquet(new_seeds_dir)
-    final = assigned.withColumn("ccell", F.col("cell").cast("long"))
-    base_dir = f"{cells_root}/base_v{newver}"
-    (
-        final.select("vec_id", "v", "nrm", "ccell", "cell")
-        .repartition(min(int(nc), 64), "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(base_dir)
-    )
-    _bucket_manifest_write(
-        final, cells_root, "cell", bid=-newver, nb=int(nc), version=newver,
-        data_dir=base_dir, sub="base",
-    )
-    if del_root is not None:
-        _compact_del_log(sess, del_root, "vec_id", None)
-    src.unpersist()
-    _fs_rmtree(spool)
-    new_meta = {
-        "version": newver,
-        "nb": int(nc),
-        "rows": int(n_live),
-        "seeds_version": newver,
-    }
-    _state_meta_write(cells_root, new_meta)  # the atomic cutover
-    return new_meta
+            if r < int(n_iters) - 1:
+                per_el = (
+                    assigned.select("cell", F.posexplode("v").alias("pos", "x"))
+                    .groupBy("cell", "pos")
+                    .agg(F.avg("x").alias("m"))
+                )
+                seeds = (
+                    per_el.groupBy("cell")
+                    .agg(
+                        F.transform(
+                            F.array_sort(F.collect_list(F.struct("pos", "m"))),
+                            lambda s: s["m"],
+                        ).alias("sv")
+                    )
+                    .select(
+                        F.col("cell").alias("seed_id"),
+                        "sv",
+                        norm(F.col("sv")).alias("sn"),
+                    )
+                )
+        new_seeds_dir = f"{seeds_path}_v{newver}"
+        # persist in the staged quantizer's column shape (vec_id, v, nrm)
+        # so every reader's rename-to-seed projection works unchanged
+        seeds.select(
+            F.col("seed_id").alias("vec_id"),
+            F.col("sv").alias("v"),
+            F.col("sn").alias("nrm"),
+        ).write.mode("overwrite").parquet(new_seeds_dir)
+        final = assigned.withColumn("ccell", F.col("cell").cast("long"))
+        base_dir = f"{cells_root}/base_v{newver}"
+        (
+            final.select("vec_id", "v", "nrm", "ccell", "cell")
+            .repartition(min(int(nc), 64), "cell")
+            .write.mode("overwrite")
+            .partitionBy("cell")
+            .parquet(base_dir)
+        )
+        _bucket_manifest_write(
+            final, cells_root, "cell", bid=-newver, nb=int(nc), version=newver,
+            data_dir=base_dir, sub="base",
+        )
+        if del_root is not None:
+            _compact_del_log(sess, del_root, "vec_id", None)
+        src.unpersist()
+        _fs_rmtree(spool)
+        new_meta = {
+            "version": newver,
+            "nb": int(nc),
+            "rows": int(n_live),
+            "seeds_version": newver,
+        }
+        _state_meta_write(cells_root, new_meta)  # the atomic cutover
+        return new_meta
 
 
 #: Mean recall@RECALL_K the serving index must hold — the SAME floor
@@ -4434,9 +4323,7 @@ def bm25_maintain(
     meta0 = _state_meta_read(post_root)
     ver0 = int(meta0["version"])
     has_deltas = _bucketed_has_deltas(sess, post_root, meta0)
-    has_new_dels = del_root is not None and _has_unfolded_batch_dirs(
-        _del_state_paths(del_root)
-    )
+    has_new_dels = del_root is not None and bool(_batch_dirs(del_root))
     report: dict = {
         "folded": False,
         "purged": False,
@@ -4449,7 +4336,7 @@ def bm25_maintain(
         return report  # healthy: base-only state, tombstones folded
     meta1 = _rebucket_family(
         sess, post_root, "tb", bm25_term_hash_col("tok"),
-        exclude_bid=10**9, meta=meta0, del_root=del_root, force=True,
+        exclude_bid=None, meta=meta0, del_root=del_root, force=True,
     )
     expire_state_versions(sess, post_root)
     if del_root is not None:
@@ -4492,18 +4379,12 @@ def _bucketed_has_deltas(sess, root: str, meta: dict | None = None) -> bool:
 
 
 def _n_batch_dirs(paths: list[str]) -> int:
-    """Count of per-batch ``b<bid>`` dirs in a live path list
-    (``base_v{N}`` starts with 'b' but fails the all-digits test;
-    ``seed`` fails the prefix test) — the number a maintenance report
-    should call "unfolded delta dirs"."""
-    import os as _os
-
-    return sum(
-        1
-        for p in paths
-        if _os.path.basename(p.rstrip("/")).startswith("b")
-        and _os.path.basename(p.rstrip("/"))[1:].isdigit()
-    )
+    """Count of per-batch ``b<bid>`` dirs in a family's
+    ``_flat_state_paths`` listing (``paths[0]`` is always its seed) —
+    the number a maintenance report should call "unfolded delta
+    dirs"; seed and ``base_v{N}`` are not unfolded work."""
+    root = paths[0].rsplit("/", 1)[0]
+    return len(set(paths) & {f"{root}/{d}" for _, d in _batch_dirs(root)})
 
 
 def _has_unfolded_batch_dirs(paths: list[str]) -> bool:
@@ -4523,15 +4404,10 @@ def _del_log_signature(del_root: str) -> dict:
     r14 ADVICE asked for (conservative: a pure compaction also changes
     it and triggers one extra idempotent purge, never a missed one)."""
     meta = _del_meta_read(del_root)
-    bids = sorted(
-        int(d[1:])
-        for d in _fs_list_dirs(del_root)
-        if d.startswith("b") and d[1:].isdigit()
-    )
     return {
         "version": int(meta["version"]),
         "folded_below_bid": int(meta["folded_below_bid"]),
-        "bids": bids,
+        "bids": [b for b, _ in _batch_dirs(del_root)],
     }
 
 
@@ -4616,109 +4492,98 @@ def curation_maintain(
     in-flight bid.  ``tools/live_maintain_soak.py`` exercises the
     interleaving for hundreds of live batches, including a kill -9 of
     this pass mid-fold with ingest running."""
-    import os as _os
-
-    holder = f"curation-maintain:{_os.getpid()}"
-    if wait_ingest_sec > 0:
-        wait_family_lease(state_root, holder=holder, timeout_sec=wait_ingest_sec)
-    else:
-        acquire_family_lease(state_root, holder=holder)
-    try:
-        return _curation_maintain_locked(sess, state_root)
-    finally:
-        release_family_lease(state_root, holder=holder)
-
-
-def _curation_maintain_locked(sess: SparkSession, state_root: str) -> dict:
-    del_root = f"{state_root}/del"
-    flat_roots = {n: f"{state_root}/{n}" for n in ("attrs", "ph", "fpa", "fpv")}
-    bucketed = {
-        "bands": (f"{state_root}/bands", "bb", F.xxhash64("band_hash")),
-        "ex": (f"{state_root}/ex", "xb", F.col("doc_id")),
-    }
-    has_new_dels = _has_unfolded_batch_dirs(_del_state_paths(del_root))
-    # per-family purge FRESHNESS (r15, r14 ADVICE): the del log is
-    # shared across all six families, whose del-aware folds fire
-    # independently — a mid-stream fold of one family can compact new
-    # tombstones into the del base ('no unfolded del dirs') while a
-    # base-only sibling still holds the tombstoned bytes.  Each family
-    # therefore records the del-log signature at its last certified
-    # purge; a differing current signature forces its purge even when
-    # the log itself looks folded.
-    del_sig = _del_log_signature(del_root)
-    needs: dict[str, bool] = {}
-    for name, root in flat_roots.items():
-        needs[name] = (
-            has_new_dels
-            or _del_purge_stale(root, del_sig)
-            or _has_unfolded_batch_dirs(_flat_state_paths(root))
-        )
-    for name, (root, _c, _k) in bucketed.items():
-        needs[name] = (
-            has_new_dels
-            or _del_purge_stale(root, del_sig)
-            or _bucketed_has_deltas(sess, root)
-        )
-    report: dict = {
-        "noop": not any(needs.values()),
-        "families": {n: {"folded": bool(needs[n])} for n in needs},
-    }
-    if report["noop"]:
-        return report  # healthy: base-only everywhere, tombstones folded
-
-    dels_df = _del_ids(sess, del_root)
-    report["dels"] = dels_df.count()
-    for name, root in flat_roots.items():
-        if needs[name]:
-            purge_flat_family(sess, root, dels_df)
-            expire_del_versions(root)
-    for name, (root, colname, key) in bucketed.items():
-        if needs[name]:
-            _rebucket_family(
-                sess, root, colname, key, exclude_bid=10**9,
-                meta=_state_meta_read(root), del_root=del_root, force=True,
+    with family_lease(
+        state_root, _lease_holder("curation-maintain"), wait_sec=wait_ingest_sec
+    ):
+        del_root = f"{state_root}/del"
+        flat_roots = {n: f"{state_root}/{n}" for n in ("attrs", "ph", "fpa", "fpv")}
+        bucketed = {
+            "bands": (f"{state_root}/bands", "bb", F.xxhash64("band_hash")),
+            "ex": (f"{state_root}/ex", "xb", F.col("doc_id")),
+        }
+        has_new_dels = bool(_batch_dirs(del_root))
+        # per-family purge FRESHNESS (r15, r14 ADVICE): the del log is
+        # shared across all six families, whose del-aware folds fire
+        # independently — a mid-stream fold of one family can compact new
+        # tombstones into the del base ('no unfolded del dirs') while a
+        # base-only sibling still holds the tombstoned bytes.  Each family
+        # therefore records the del-log signature at its last certified
+        # purge; a differing current signature forces its purge even when
+        # the log itself looks folded.
+        del_sig = _del_log_signature(del_root)
+        needs: dict[str, bool] = {}
+        for name, root in flat_roots.items():
+            needs[name] = (
+                has_new_dels
+                or _del_purge_stale(root, del_sig)
+                or _has_unfolded_batch_dirs(_flat_state_paths(root))
             )
-            expire_state_versions(sess, root)
-    expire_del_versions(del_root)
+        for name, (root, _c, _k) in bucketed.items():
+            needs[name] = (
+                has_new_dels
+                or _del_purge_stale(root, del_sig)
+                or _bucketed_has_deltas(sess, root)
+            )
+        report: dict = {
+            "noop": not any(needs.values()),
+            "families": {n: {"folded": bool(needs[n])} for n in needs},
+        }
+        if report["noop"]:
+            return report  # healthy: base-only everywhere, tombstones folded
 
-    # purge invariant, re-read from the LIVE (compacted) tombstone log:
-    # zero tombstoned rows may remain in any live content family.
-    dels_live = _del_ids(sess, del_root)
-    for name, root in flat_roots.items():
-        live = sess.read.parquet(*_flat_state_paths(root))
-        leaked = live.join(F.broadcast(dels_live), "doc_id", "left_semi").count()
-        if leaked:
-            raise RuntimeError(
-                f"curation_maintain: purge invariant violated — {leaked} "
-                f"tombstoned rows remain in live flat family {name!r}"
-            )
-    for name, (root, _c, _k) in bucketed.items():
-        ver = int(_state_meta_read(root)["version"])
-        if ver == 0 or not _fs_exists(f"{root}/base_v{ver}"):
-            # never folded (seed-only family, needs=False), or folded
-            # EMPTY: a freshness-forced fold of a family with no live
-            # rows writes a zero-row base whose dir the vacuum
-            # immediately reclaims (no manifest row references it) —
-            # nothing exists to leak in either case (r15)
-            continue
-        base = sess.read.parquet(f"{root}/base_v{ver}")
-        leaked = base.join(F.broadcast(dels_live), "doc_id", "left_semi").count()
-        if leaked:
-            raise RuntimeError(
-                f"curation_maintain: purge invariant violated — {leaked} "
-                f"tombstoned rows remain in live bucketed family {name!r}"
-            )
-    report["tombstoned_in_live"] = 0
-    # record each family's purge mark AFTER the final del vacuum and
-    # the invariant check: the signature written is the one the NEXT
-    # pass's needs probe will read, and the zero-leak assertion above
-    # is what makes writing it truthful.  Marks cover every family in
-    # the composition — the ones folded this pass and the ones whose
-    # freshness test already matched.
-    final_sig = _del_log_signature(del_root)
-    for root in list(flat_roots.values()) + [r for r, _c, _k in bucketed.values()]:
-        _purge_mark_write(root, final_sig)
-    return report
+        dels_df = _del_ids(sess, del_root)
+        report["dels"] = dels_df.count()
+        for name, root in flat_roots.items():
+            if needs[name]:
+                purge_flat_family(sess, root, dels_df)
+                expire_del_versions(root)
+        for name, (root, colname, key) in bucketed.items():
+            if needs[name]:
+                _rebucket_family(
+                    sess, root, colname, key, exclude_bid=None,
+                    meta=_state_meta_read(root), del_root=del_root, force=True,
+                )
+                expire_state_versions(sess, root)
+        expire_del_versions(del_root)
+
+        # purge invariant, re-read from the LIVE (compacted) tombstone log:
+        # zero tombstoned rows may remain in any live content family.
+        dels_live = _del_ids(sess, del_root)
+        for name, root in flat_roots.items():
+            live = sess.read.parquet(*_flat_state_paths(root))
+            leaked = live.join(F.broadcast(dels_live), "doc_id", "left_semi").count()
+            if leaked:
+                raise RuntimeError(
+                    f"curation_maintain: purge invariant violated — {leaked} "
+                    f"tombstoned rows remain in live flat family {name!r}"
+                )
+        for name, (root, _c, _k) in bucketed.items():
+            ver = int(_state_meta_read(root)["version"])
+            if ver == 0 or not _fs_exists(f"{root}/base_v{ver}"):
+                # never folded (seed-only family, needs=False), or folded
+                # EMPTY: a freshness-forced fold of a family with no live
+                # rows writes a zero-row base whose dir the vacuum
+                # immediately reclaims (no manifest row references it) —
+                # nothing exists to leak in either case (r15)
+                continue
+            base = sess.read.parquet(f"{root}/base_v{ver}")
+            leaked = base.join(F.broadcast(dels_live), "doc_id", "left_semi").count()
+            if leaked:
+                raise RuntimeError(
+                    f"curation_maintain: purge invariant violated — {leaked} "
+                    f"tombstoned rows remain in live bucketed family {name!r}"
+                )
+        report["tombstoned_in_live"] = 0
+        # record each family's purge mark AFTER the final del vacuum and
+        # the invariant check: the signature written is the one the NEXT
+        # pass's needs probe will read, and the zero-leak assertion above
+        # is what makes writing it truthful.  Marks cover every family in
+        # the composition — the ones folded this pass and the ones whose
+        # freshness test already matched.
+        final_sig = _del_log_signature(del_root)
+        for root in list(flat_roots.values()) + [r for r, _c, _k in bucketed.values()]:
+            _purge_mark_write(root, final_sig)
+        return report
 
 
 # ---------------------------------------------------------------------------
@@ -4828,17 +4693,7 @@ def fold_partial_log(sess, root: str, family: str) -> None:
     commit — a crash in between leaves the old pointer serving the
     old (complete) log, and the retried fold rewrites both.  Offline,
     never while the family's stream is live."""
-    import os
-
-    _holder = f"partial-fold:{os.getpid()}"
-    acquire_family_lease(root, holder=_holder)
-    try:
-        folded = PARTIAL_LOG_FAMILIES[family](
-            sess.read.parquet(*_flat_state_paths(root))
-        )
-        _rewrite_flat_family_locked(sess, root, folded)
-    finally:
-        release_family_lease(root, holder=_holder)
+    _rewrite_flat_family(sess, root, PARTIAL_LOG_FAMILIES[family], "partial-fold")
 
 
 def sketch_maintain(sess, root: str, family: str) -> dict:
@@ -4955,9 +4810,7 @@ def _ivf_index_seed(
         else:
             seeds = embd.filter(F.col("vec_id") < nc).select("vec_id", "v", "nrm")
         seeds.write.mode("overwrite").parquet(seeds_path)
-    spark.createDataFrame(
-        [], "vec_id long, v array<double>, nrm double, ccell long"
-    ).write.mode("overwrite").parquet(f"{cells_root}/seed")
+    _seed(spark, cells_root, "vec_id long, v array<double>, nrm double, ccell long")
     _bucket_manifest_seed(spark.createDataFrame([], "x long"), cells_root)
     return cells_root, seeds_path
 
@@ -5011,7 +4864,7 @@ def _ivf_index_serve(
         F.col("nrm").alias("cn"),
     )
     if del_root is not None:
-        dels = spark.read.parquet(*_del_state_paths(del_root)).select(
+        dels = spark.read.parquet(*_flat_state_paths(del_root)).select(
             F.col("vec_id").alias("neighbor_id")
         )
         cand = cand.join(F.broadcast(dels), "neighbor_id", "left_anti")
@@ -5099,7 +4952,7 @@ def stream_ivf_takedown(
 
     def setup(root):
         cells_root, seeds_path = _ivf_index_seed(spark, emb, root)
-        _del_log_seed(spark, f"{root}/del", "vec_id")
+        _seed(spark, f"{root}/del", "vec_id long")
         return _ivf_index_processor(cells_root, seeds_path, f"{root}/del")
 
     def finish(root):
@@ -5152,7 +5005,7 @@ def _ivf_retrain_oracle() -> str:
     ``stream_ivf_retrain`` serve runs over: the live corpus (takedowns
     excluded), the cell count RE-DIALED from the live row count (the
     shared CASE ladder), seeds = the nc lowest LIVE vec_ids (exactly
-    ``_ivf_retrain_quantizer_locked``'s deterministic init), max-cosine
+    ``ivf_retrain_quantizer``'s deterministic init), max-cosine
     assignment with the lowest-seed-id tiebreak (``assign_cells``' one
     rule), then the standard 2-probe multiprobe top-3.  The mean-update
     Lloyd iterations are deliberately NOT replayed: the certified row
@@ -5272,7 +5125,7 @@ def stream_ivf_retrain(
 
     def setup(root):
         cells_root, seeds_path = _ivf_index_seed(spark, emb, root, degenerate=True)
-        _del_log_seed(spark, f"{root}/del", "vec_id")
+        _seed(spark, f"{root}/del", "vec_id long")
         return _ivf_index_processor(cells_root, seeds_path, f"{root}/del")
 
     def finish(root):
@@ -5337,13 +5190,10 @@ def _bm25_index_seed(
     post_root = f"{state_root}/post"
     stat_root = f"{state_root}/stat"
     del_root = f"{state_root}/del"
-    empty_post = spark.createDataFrame([], "tok string, doc_id long, tf long, dl long")
-    empty_post.write.mode("overwrite").parquet(f"{post_root}/seed")
-    spark.createDataFrame([], "n_docs long, sum_dl long").write.mode(
-        "overwrite"
-    ).parquet(f"{stat_root}/seed")
-    _del_log_seed(spark, del_root)
-    _bucket_manifest_seed(empty_post, post_root)
+    _seed(spark, post_root, _BM25_POST_SCHEMA)
+    _seed(spark, stat_root, _BM25_STAT_SCHEMA)
+    _seed(spark, del_root, "doc_id long")
+    _bucket_manifest_seed(spark.createDataFrame([], _BM25_POST_SCHEMA), post_root)
     return post_root, stat_root, del_root
 
 
@@ -5456,7 +5306,7 @@ def _bm25_index_processor(post_root: str, stat_root: str, del_root: str | None =
             dl_col = F.size(F.split(F.lower("text"), " ")).cast("long").alias("dl")
             del_rows = batch_df.filter(F.col("op") == "D").dropDuplicates(["doc_id"])
             if del_root is not None:
-                seen = sess.read.parquet(*_del_state_paths(del_root, bid)).select(
+                seen = sess.read.parquet(*_flat_state_paths(del_root, bid)).select(
                     "doc_id"
                 )
                 del_rows = del_rows.join(F.broadcast(seen), "doc_id", "left_anti")
@@ -5528,7 +5378,7 @@ def _bm25_index_serve(
     )
     postings = sess.read.parquet(*paths).filter(F.col("tok").isin(toks))
     if del_root is not None:
-        dels = sess.read.parquet(*_del_state_paths(del_root)).select("doc_id")
+        dels = sess.read.parquet(*_flat_state_paths(del_root)).select("doc_id")
         postings = postings.join(F.broadcast(dels), "doc_id", "left_anti")
     # Stats clamp: a pathological tombstone feed (a spurious 'D' with
     # no matching insert anywhere) can drive the signed partials' sums
@@ -5538,7 +5388,7 @@ def _bm25_index_serve(
     # tokenized doc has dl >= 1, so well-formed feeds always satisfy
     # both and the clamp is provably inert on certified workloads).
     n_docs_c = F.greatest(F.lit(1).cast("long"), F.sum("n_docs"))
-    stats = sess.read.parquet(*_mh_state_paths(stat_root)).agg(
+    stats = sess.read.parquet(*_flat_state_paths(stat_root)).agg(
         n_docs_c.alias("n_docs"),
         F.greatest(n_docs_c, F.sum("sum_dl")).alias("sum_dl"),
     )
@@ -5756,14 +5606,11 @@ def stream_phash_dedup(
     images = media.select("doc_id", "payload")
 
     def setup(root):
-        spark.createDataFrame(
-            [], "doc_id long, b0 long, b1 long, b2 long, b3 long"
-        ).write.mode("overwrite").parquet(f"{root}/ph/seed")
-        return _phash_batch_processor(f"{root}/ph")
+        return _phash_batch_processor(_seed(spark, f"{root}/ph", _PHASH_SCHEMA))
 
     def finish(root):
         bcols = [f"b{k}" for k in range(PHASH_BANDS)]
-        ph = spark.read.parquet(*_mh_state_paths(f"{root}/ph"))
+        ph = spark.read.parquet(*_flat_state_paths(f"{root}/ph"))
         grp = ph.groupBy(*bcols).agg(
             F.min("doc_id").alias("canonical_doc"), F.count("*").alias("n_docs")
         )
@@ -5850,13 +5697,10 @@ def stream_audio_fp_dedup(
     audio = media.select("doc_id", "payload")
 
     def setup(root):
-        spark.createDataFrame([], "doc_id long, fh string").write.mode(
-            "overwrite"
-        ).parquet(f"{root}/fp/seed")
-        return _audio_fp_batch_processor(f"{root}/fp")
+        return _audio_fp_batch_processor(_seed(spark, f"{root}/fp", _FP_SCHEMA))
 
     def finish(root):
-        ff = spark.read.parquet(*_mh_state_paths(f"{root}/fp"))
+        ff = spark.read.parquet(*_flat_state_paths(f"{root}/fp"))
         return audio_near_groups(audio.select("doc_id"), ff)
 
     return _run_incremental(
@@ -5920,10 +5764,8 @@ def stream_audio_takedown(
     delta = _takedown_delta(audio, is_del)
 
     def setup(root):
-        spark.createDataFrame([], "doc_id long, fh string").write.mode(
-            "overwrite"
-        ).parquet(f"{root}/fp/seed")
-        _del_log_seed(spark, f"{root}/del")
+        _seed(spark, f"{root}/fp", _FP_SCHEMA)
+        _seed(spark, f"{root}/del", "doc_id long")
         return _takedown_processor(
             _audio_fp_batch_processor(f"{root}/fp"), f"{root}/del"
         )
@@ -6015,13 +5857,10 @@ def stream_video_dedup(
     videos = media.select("doc_id", "payload")
 
     def setup(root):
-        spark.createDataFrame([], "doc_id long, fh string").write.mode(
-            "overwrite"
-        ).parquet(f"{root}/fp/seed")
-        return _video_fp_batch_processor(f"{root}/fp")
+        return _video_fp_batch_processor(_seed(spark, f"{root}/fp", _FP_SCHEMA))
 
     def finish(root):
-        ff = spark.read.parquet(*_mh_state_paths(f"{root}/fp"))
+        ff = spark.read.parquet(*_flat_state_paths(f"{root}/fp"))
         # every video yields >= 1 sampled frame (n_frames >= 1), so the
         # merged postings' distinct doc set IS the streamed video id set —
         # no separate id log needed
@@ -6107,10 +5946,8 @@ def stream_video_takedown(
     delta = _takedown_delta(videos, is_del)
 
     def setup(root):
-        spark.createDataFrame([], "doc_id long, fh string").write.mode(
-            "overwrite"
-        ).parquet(f"{root}/fp/seed")
-        _del_log_seed(spark, f"{root}/del")
+        _seed(spark, f"{root}/fp", _FP_SCHEMA)
+        _seed(spark, f"{root}/del", "doc_id long")
         return _takedown_processor(
             _video_fp_batch_processor(f"{root}/fp"), f"{root}/del"
         )
@@ -6196,14 +6033,16 @@ def _unified_batch_processor(
         # lock, so the pid added no safety.  The wait budget is also
         # dialable now (TAILSQL_LEASE_WAIT_SEC, ADVICE r16 low #4) for
         # deployments whose maintain passes exceed 600 s.
-        _ingest_holder = f"ingest:b{batch_id}"
-        if ingest_lease_root is not None:
-            wait_family_lease(
+        lease = (
+            contextlib.nullcontext()
+            if ingest_lease_root is None
+            else family_lease(
                 ingest_lease_root,
-                holder=_ingest_holder,
-                timeout_sec=float(_os.environ.get("TAILSQL_LEASE_WAIT_SEC", 600.0)),
+                _lease_holder("ingest", batch_id),
+                wait_sec=float(_os.environ.get("TAILSQL_LEASE_WAIT_SEC", 600.0)),
             )
-        try:
+        )
+        with lease:
             text_process(batch_df, batch_id)
             media = synth_media_rows(batch_df)
             ph_process(
@@ -6224,9 +6063,6 @@ def _unified_batch_processor(
                 ),
                 batch_id,
             )
-        finally:
-            if ingest_lease_root is not None:
-                release_family_lease(ingest_lease_root, holder=_ingest_holder)
 
     return process
 
@@ -6259,21 +6095,14 @@ def _unified_curation_layout(
     edges_root, labels_root, attrs_root = _curation_graph_seed(spark, state_root)
     del_root = f"{state_root}/del"
     # modality sub-states (the stream_{phash,audio_fp,video}_dedup layouts)
-    ph_root = f"{state_root}/ph"
-    fpa_root = f"{state_root}/fpa"
-    fpv_root = f"{state_root}/fpv"
-    spark.createDataFrame(
-        [], "doc_id long, b0 long, b1 long, b2 long, b3 long"
-    ).write.mode("overwrite").parquet(f"{ph_root}/seed")
-    for r in (fpa_root, fpv_root):
-        spark.createDataFrame([], "doc_id long, fh string").write.mode(
-            "overwrite"
-        ).parquet(f"{r}/seed")
+    ph_root = _seed(spark, f"{state_root}/ph", _PHASH_SCHEMA)
+    fpa_root = _seed(spark, f"{state_root}/fpa", _FP_SCHEMA)
+    fpv_root = _seed(spark, f"{state_root}/fpv", _FP_SCHEMA)
     # the tombstone log is part of the layout even with no takedown
     # traffic (r16): curation_maintain reads it unconditionally, so a
     # co-scheduled maintenance pass against a takedown-free deployment
     # must find an (empty) seeded log, not FileNotFoundError
-    _del_log_seed(spark, del_root)
+    _seed(spark, del_root, "doc_id long")
 
     process = _unified_batch_processor(
         _curation_batch_processor(
@@ -6414,14 +6243,14 @@ def _unified_curation_serve(
     from tailsql_spark.plans.catalog import source_bytes
 
     if del_root is not None and edges_root is not None:
-        edges = spark.read.parquet(*_mh_state_paths(edges_root))
+        edges = spark.read.parquet(*_flat_state_paths(edges_root))
         edges = edges.join(
             F.broadcast(dels.select(F.col("doc_id").alias("id_a"))), "id_a", "left_anti"
         ).join(
             F.broadcast(dels.select(F.col("doc_id").alias("id_b"))), "id_b", "left_anti"
         )
         labels = connected_components(edges)
-        _lab_bytes = sum(source_bytes(p) for p in _mh_state_paths(edges_root))
+        _lab_bytes = sum(source_bytes(p) for p in _flat_state_paths(edges_root))
     else:
         _lab_path = _latest_snapshot_path(labels_root, None)
         labels = spark.read.parquet(_lab_path)
@@ -6544,16 +6373,9 @@ def _takedown_processor(inner_process, del_root: str, key: str = "doc_id"):
     return process
 
 
-def _del_log_seed(spark: SparkSession, del_root: str, key: str = "doc_id") -> None:
-    """Seed an empty tombstone log (one ``key`` column) at ``del_root``."""
-    spark.createDataFrame([], f"{key} long").write.mode("overwrite").parquet(
-        f"{del_root}/seed"
-    )
-
-
 def _del_ids(sess: SparkSession, del_root: str, key: str = "doc_id") -> DataFrame:
     """The distinct tombstoned ``key`` ids across the whole del log."""
-    return sess.read.parquet(*_del_state_paths(del_root)).select(key).distinct()
+    return sess.read.parquet(*_flat_state_paths(del_root)).select(key).distinct()
 
 
 def _vacuum_del_log(sess: SparkSession, del_root: str, key: str = "doc_id") -> None:
@@ -6712,7 +6534,7 @@ def stream_minhash_takedown(
 
     def setup(root):
         ex_root, sig_root, out_root = _mh_seed_state(docs, root)
-        _del_log_seed(spark, f"{root}/del")
+        _seed(spark, f"{root}/del", "doc_id long")
         return _takedown_processor(
             _minhash_batch_processor(
                 ex_root, sig_root, out_root, del_root=f"{root}/del"
@@ -6782,7 +6604,7 @@ def stream_substr_takedown(
     delta = _takedown_delta(docs, is_del)
 
     def setup(root):
-        _del_log_seed(spark, f"{root}/del")
+        _seed(spark, f"{root}/del", "doc_id long")
         return _takedown_processor(
             _substr_batch_processor(
                 *_substr_seed(docs, root), del_root=f"{root}/del"
@@ -6803,11 +6625,11 @@ def stream_substr_takedown(
         live_pos = spark.read.parquet(*_flat_state_paths(pos_root))
         live_counts = live_pos.groupBy("g").agg(F.count("*").alias("c"))
         _rewrite_flat_family(
-            spark, dup_root, live_counts.filter(F.col("c") >= 2).select("g")
+            spark, dup_root, lambda _: live_counts.filter(F.col("c") >= 2).select("g")
         )
         expire_del_versions(dup_root)
         _rewrite_flat_family(
-            spark, pending_root, live_counts.filter(F.col("c") == 1).select("g")
+            spark, pending_root, lambda _: live_counts.filter(F.col("c") == 1).select("g")
         )
         expire_del_versions(pending_root)
         _vacuum_del_log(spark, f"{root}/del")
@@ -6867,11 +6689,9 @@ def stream_contam_takedown(
     def setup(root):
         test_grams = _doc_5grams(test_docs)
         test_grams.write.mode("overwrite").parquet(f"{root}/test_grams")
-        test_grams.limit(0).write.mode("overwrite").parquet(
-            f"{root}/train_pairs/seed"
-        )
-        test_grams.limit(0).write.mode("overwrite").parquet(f"{root}/hits/seed")
-        _del_log_seed(spark, f"{root}/del")
+        _seed(spark, f"{root}/train_pairs", test_grams.schema)
+        _seed(spark, f"{root}/hits", test_grams.schema)
+        _seed(spark, f"{root}/del", "doc_id long")
         return _takedown_processor(
             _contam_batch_processor(
                 f"{root}/train_pairs", f"{root}/hits", f"{root}/test_grams",
@@ -6891,9 +6711,8 @@ def stream_contam_takedown(
         live_g = (
             spark.read.parquet(*_flat_state_paths(train_root)).select("g").distinct()
         )
-        hits_all = spark.read.parquet(*_flat_state_paths(hits_root))
         _rewrite_flat_family(
-            spark, hits_root, hits_all.join(live_g, "g", "left_semi").distinct()
+            spark, hits_root, lambda hits: hits.join(live_g, "g", "left_semi").distinct()
         )
         expire_del_versions(hits_root)
         _vacuum_del_log(spark, f"{root}/del")
@@ -6956,10 +6775,8 @@ def stream_semdedup_takedown(
 
     def setup(root):
         members_root, cent_path = _semdedup_seed(spark, sf_dir, root)
-        spark.createDataFrame([], "vec_id long, p long").write.mode(
-            "overwrite"
-        ).parquet(f"{root}/pairs/seed")
-        _del_log_seed(spark, f"{root}/del", "vec_id")
+        _seed(spark, f"{root}/pairs", "vec_id long, p long")
+        _seed(spark, f"{root}/del", "vec_id long")
         return _takedown_processor(
             _semdedup_batch_processor(
                 members_root, None, cent_path,
@@ -7084,10 +6901,9 @@ def stream_quality_gate_binned(
     docs = t["documents"].select("doc_id", "lang", "text")
 
     def setup(root):
-        spark.createDataFrame([], "lang string, bin long, c long").write.mode(
-            "overwrite"
-        ).parquet(f"{root}/hist/seed")
-        return _binned_gate_batch_processor(f"{root}/hist")
+        return _binned_gate_batch_processor(
+            _seed(spark, f"{root}/hist", "lang string, bin long, c long")
+        )
 
     def finish(root):
         # read = the family's own fold merge over base + post-fold deltas
@@ -7157,10 +6973,9 @@ def stream_rate_anomaly(
     ev = t["events"].select("event_type", "ts")
 
     def setup(root):
-        spark.createDataFrame(
-            [], "event_type string, h timestamp, cnt long"
-        ).write.mode("overwrite").parquet(f"{root}/cnt/seed")
-        return _rate_anomaly_batch_processor(f"{root}/cnt")
+        return _rate_anomaly_batch_processor(
+            _seed(spark, f"{root}/cnt", "event_type string, h timestamp, cnt long")
+        )
 
     def finish(root):
         # read = the family's own fold merge over base + post-fold deltas

@@ -429,19 +429,14 @@ class TailNStreamReader(DataSourceStreamReader):
         Returns {path: bytes | None}; None marks a file that vanished
         between scan and probe (the established OSError tolerance).
 
-        SERIAL by default, deliberately: on local disk the probe is a
-        warm-page-cache open+read — ~7 us of mostly GIL-held work —
-        and a thread pool makes it strictly WORSE (r16 A/B, 10k files:
-        serial 0.07 s, 4 threads 1.5 s, 16 threads 3.1 s — classic GIL
-        thrash on non-blocking 'syscalls').  The measured serial knee
-        is therefore the honest per-driver fleet cap: ~14 us/file
-        steady state, ~1.4 s/trigger at 100k files (SCALING.md r16).
-        On a HIGH-LATENCY filesystem (NFS/FUSE-mounted object store)
-        each probe genuinely blocks and threads do help — that
-        deployment sets TAILSQL_PROBE_POOL to a worker count and this
-        seam fans out; it is a dial, not a default, because the local
-        measurement says the default must be serial."""
-        import os as _os
+        SERIAL, deliberately: on local disk the probe is a warm-page-
+        cache open+read — ~7 us of mostly GIL-held work — and a thread
+        pool makes it strictly WORSE (r16 A/B, 10k files: serial
+        0.07 s, 4 threads 1.5 s, 16 threads 3.1 s — classic GIL thrash
+        on non-blocking 'syscalls').  The measured serial knee is
+        therefore the honest per-driver fleet cap: ~14 us/file steady
+        state, ~1.4 s/trigger at 100k files (SCALING.md r16); past it,
+        shard the glob across streams."""
 
         def probe(p: str):
             try:
@@ -450,13 +445,7 @@ class TailNStreamReader(DataSourceStreamReader):
             except OSError:
                 return p, None
 
-        workers = int(_os.environ.get("TAILSQL_PROBE_POOL", "0"))
-        if workers <= 1 or len(scan) < 64:
-            return dict(probe(p) for p, _ in scan)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=workers) as ex:
-            return dict(ex.map(probe, [p for p, _ in scan], chunksize=64))
+        return dict(probe(p) for p, _ in scan)
 
     def latestOffset(self) -> dict:
         out: dict[str, int] = {}

@@ -70,7 +70,7 @@ def test_kill_mid_fold_serve_eq_batch_per_family(spark, tmp_path, monkeypatch):
         pump.start()
 
         # 3. deterministic kill point: the first flat family folded is
-        # ``attrs`` (``_curation_maintain_locked``'s dict order); its
+        # ``attrs`` (``curation_maintain``'s dict order); its
         # fold writes ``base_v*`` and only THEN commits ``_meta.json``
         # atomically.  The directory appears at parquet-write start, so
         # first sight of it is strictly inside the fold's crash window.

@@ -982,7 +982,6 @@ def test_flat_state_machine_serve_equals_model(spark, data, tmp_path_factory):
         _bdir,
         _compact_del_log,
         _del_meta_read,
-        _del_state_paths,
         _flat_state_paths,
         expire_del_versions,
         purge_flat_family,
@@ -1023,7 +1022,7 @@ def test_flat_state_machine_serve_equals_model(spark, data, tmp_path_factory):
             next_bid += 1
         elif op == "purge":
             dels_df = (
-                spark.read.parquet(*_del_state_paths(dlog))
+                spark.read.parquet(*_flat_state_paths(dlog))
                 .select("doc_id")
                 .distinct()
             )
@@ -1052,7 +1051,7 @@ def test_flat_state_machine_serve_equals_model(spark, data, tmp_path_factory):
 
     live = spark.read.parquet(*_flat_state_paths(fam))
     dels = (
-        spark.read.parquet(*_del_state_paths(dlog)).select("doc_id").distinct()
+        spark.read.parquet(*_flat_state_paths(dlog)).select("doc_id").distinct()
     )
     served = sorted(
         r.doc_id
@@ -1140,7 +1139,7 @@ def test_bucketed_manifest_state_machine_serve_equals_model(
         _bucket_manifest_paths,
         _bucket_manifest_seed,
         _bucket_manifest_write,
-        _del_state_paths,
+        _flat_state_paths,
         _rebucket_family,
         _state_meta_read,
         expire_del_versions,
@@ -1227,7 +1226,7 @@ def test_bucketed_manifest_state_machine_serve_equals_model(
 
     meta = _state_meta_read(fam)
     dels = (
-        spark.read.parquet(*_del_state_paths(dlog)).select("doc_id").distinct()
+        spark.read.parquet(*_flat_state_paths(dlog)).select("doc_id").distinct()
     )
     all_keys = spark.createDataFrame([(k,) for k in range(31)], "k long")
     paths = _bucket_manifest_paths(

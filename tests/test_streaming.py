@@ -509,6 +509,39 @@ def test_stream_result_survives_scratch_cleanup(spark, oracle_sf_dir):
     # availableNow trigger means a hand-rolled stream lifecycle grew back
     assert src.count("checkpointLocation") == 1
     assert src.count(".trigger(availableNow=True)") == 1
+    # static guard: ONE per-batch state layout — the b##### parse lives
+    # only in _batch_dirs, the lease is taken only through family_lease
+    # (and the blocking wait it builds on), and the per-family listings,
+    # the second directory lister and the *_locked splits stay deleted
+    import ast
+
+    top = [
+        (n.name, n.lineno, n.end_lineno)
+        for n in ast.parse(src).body
+        if isinstance(n, ast.FunctionDef)
+    ]
+
+    def owners(pattern):
+        return {
+            name
+            for i, line in enumerate(src.splitlines(), 1)
+            if pattern in line and not line.lstrip().startswith("def ")
+            for name, first, last in top
+            if first <= i <= last
+        }
+
+    assert owners("[1:].isdigit()") == {"_batch_dirs"}
+    assert owners("acquire_family_lease(") == {"family_lease", "wait_family_lease"}
+    for gone in (
+        "_mh_state_paths",
+        "_del_state_paths",
+        "_fs_list",
+        "_rewrite_flat_family_locked",
+        "_ivf_purge_takedowns_locked",
+        "_ivf_retrain_quantizer_locked",
+        "_curation_maintain_locked",
+    ):
+        assert not hasattr(streaming_exec, gone), gone
 
     out = streaming_exec.stream_contamination(spark, oracle_sf_dir)
     # scratch dirs are gone by now; the result must still materialize
@@ -613,20 +646,20 @@ def test_wrapper_reinvoke_same_root_is_noop_resume(spark, sf_dir, tmp_path):
 
 
 def test_fs_dispatchers_hadoop_branch(spark, tmp_path):
-    """_fs_list/_fs_rmtree's URI branch (the code path hdfs://s3a://
+    """_fs_list_dirs/_fs_rmtree's URI branch (the code path hdfs://s3a://
     roots take) driven directly over file:// — list children, delete a
     subtree recursively, leave siblings intact."""
     import os
 
-    from tailsql_spark.plans.streaming_exec import _fs_list, _fs_rmtree
+    from tailsql_spark.plans.streaming_exec import _fs_list_dirs, _fs_rmtree
 
     (tmp_path / "a" / "inner").mkdir(parents=True)
     (tmp_path / "a" / "inner" / "f.txt").write_text("x")
     (tmp_path / "b").mkdir()
     root = f"file://{tmp_path}"
-    assert sorted(_fs_list(root)) == ["a", "b"]
+    assert sorted(_fs_list_dirs(root)) == ["a", "b"]
     _fs_rmtree(f"{root}/a")
-    assert sorted(_fs_list(root)) == ["b"]
+    assert sorted(_fs_list_dirs(root)) == ["b"]
     assert not os.path.exists(tmp_path / "a")
 
 

@@ -26,7 +26,7 @@ def test_minhash_processor_replay_idempotent(spark, oracle_sf_dir):
     from tailsql_spark.plans.catalog import load_tables
     from tailsql_spark.plans.streaming_exec import (
         _mh_seed_state,
-        _mh_state_paths,
+        _flat_state_paths,
         _minhash_batch_processor,
     )
 
@@ -43,7 +43,7 @@ def test_minhash_processor_replay_idempotent(spark, oracle_sf_dir):
         process(half, 0)
         process(rest, 1)
         process(rest, 1)
-        got = _pairs(spark.read.parquet(*_mh_state_paths(out_root)))
+        got = _pairs(spark.read.parquet(*_flat_state_paths(out_root)))
         want = _pairs(_DEDUP["dedup_minhash_lsh"].build(spark, oracle_sf_dir))
         assert got == want, (
             f"replayed incremental result diverged from batch: "
@@ -225,7 +225,7 @@ def test_contam_processor_replay_idempotent(spark, oracle_sf_dir):
     from tailsql_spark.plans.streaming_exec import (
         _contam_batch_processor,
         _doc_5grams,
-        _mh_state_paths,
+        _flat_state_paths,
     )
 
     docs = load_tables(spark, oracle_sf_dir)["documents"]
@@ -255,7 +255,7 @@ def test_contam_processor_replay_idempotent(spark, oracle_sf_dir):
         process(b0, 0)
         process(b1, 1)
         process(b1, 1)
-        hits = spark.read.parquet(*_mh_state_paths(f"{root}/hits"))
+        hits = spark.read.parquet(*_flat_state_paths(f"{root}/hits"))
         got = (
             hits.groupBy("doc_id")
             .agg(F2.count("*").alias("n_hit"))
@@ -308,7 +308,7 @@ def test_minhash_stream_kill_and_resume(spark, oracle_sf_dir):
     from tailsql_spark.plans.catalog import load_tables
     from tailsql_spark.plans.streaming_exec import (
         _mh_seed_state,
-        _mh_state_paths,
+        _flat_state_paths,
         _minhash_batch_processor,
     )
 
@@ -334,7 +334,7 @@ def test_minhash_stream_kill_and_resume(spark, oracle_sf_dir):
             )
 
         _kill_then_resume(start, out_root)
-        got = _pairs(spark.read.parquet(*_mh_state_paths(out_root)))
+        got = _pairs(spark.read.parquet(*_flat_state_paths(out_root)))
         want = _pairs(_DEDUP["dedup_minhash_lsh"].build(spark, oracle_sf_dir))
         assert got == want, (
             f"resumed state diverged: extra={got - want}, missing={want - got}"
@@ -490,7 +490,7 @@ def test_substr_processor_replay_idempotent(spark, oracle_sf_dir):
     )
     from tailsql_spark.plans.catalog import load_tables
     from tailsql_spark.plans.streaming_exec import (
-        _mh_state_paths,
+        _flat_state_paths,
         _substr_batch_processor,
     )
 
@@ -511,8 +511,8 @@ def test_substr_processor_replay_idempotent(spark, oracle_sf_dir):
         process(b0, 0)
         process(b1, 1)
         process(b1, 1)
-        dup = spark.read.parquet(*_mh_state_paths(f"{root}/dup")).select("g")
-        pos = spark.read.parquet(*_mh_state_paths(f"{root}/pos"))
+        dup = spark.read.parquet(*_flat_state_paths(f"{root}/dup")).select("g")
+        pos = spark.read.parquet(*_flat_state_paths(f"{root}/pos"))
         got = sorted(
             spans_from_flagged(pos.join(dup, "g").select("doc_id", "pos")).collect()
         )
@@ -537,7 +537,7 @@ def test_curation_processor_replay_idempotent(spark, oracle_sf_dir):
         _curation_batch_processor,
         _latest_snapshot_path,
         _mh_seed_state,
-        _mh_state_paths,
+        _flat_state_paths,
         _minhash_batch_processor,
     )
 
@@ -576,7 +576,7 @@ def test_curation_processor_replay_idempotent(spark, oracle_sf_dir):
 
         from tailsql_spark.operators.corpus import clean_keep_attrs, survivor_budgets
 
-        attrs = spark.read.parquet(*_mh_state_paths(attrs_root))
+        attrs = spark.read.parquet(*_flat_state_paths(attrs_root))
         cleaned = clean_keep_attrs(attrs)
         labels = spark.read.parquet(_latest_snapshot_path(labels_root, None))
         got = sorted(map(tuple, survivor_budgets(cleaned, labels).collect()))
@@ -695,7 +695,7 @@ def test_minhash_shared_root_continues_across_runs(spark, oracle_sf_dir, tmp_pat
     from tailsql_spark.plans.streaming_exec import (
         _await_or_raise,
         _mh_seed_state,
-        _mh_state_paths,
+        _flat_state_paths,
         _minhash_batch_processor,
     )
 
@@ -728,13 +728,13 @@ def test_minhash_shared_root_continues_across_runs(spark, oracle_sf_dir, tmp_pat
     half.repartition(2).write.mode("append").parquet(src)
     run_once()
     n_batches_first = sum(d.startswith("b") for d in os.listdir(sig_root))
-    first = _pairs(spark.read.parquet(*_mh_state_paths(out_root)))
+    first = _pairs(spark.read.parquet(*_flat_state_paths(out_root)))
 
     rest.repartition(2).write.mode("append").parquet(src)
     run_once()
     n_batches_second = sum(d.startswith("b") for d in os.listdir(sig_root))
 
-    got = _pairs(spark.read.parquet(*_mh_state_paths(out_root)))
+    got = _pairs(spark.read.parquet(*_flat_state_paths(out_root)))
     want = _pairs(_DEDUP["dedup_minhash_lsh"].build(spark, oracle_sf_dir))
     assert got == want, f"extra={got - want}, missing={want - got}"
     # the second invocation RESUMED: new batch dirs appended, the first
@@ -813,7 +813,7 @@ def test_bucketed_processor_replay_idempotent(spark, oracle_sf_dir):
     from tailsql_spark.plans.catalog import load_tables
     from tailsql_spark.plans.streaming_exec import (
         _mh_bucketed_seed,
-        _mh_state_paths,
+        _flat_state_paths,
         _minhash_bucketed_processor,
     )
 
@@ -829,7 +829,7 @@ def test_bucketed_processor_replay_idempotent(spark, oracle_sf_dir):
         process(half, 0)
         process(rest, 1)
         process(rest, 1)
-        got = _pairs(spark.read.parquet(*_mh_state_paths(out_root)))
+        got = _pairs(spark.read.parquet(*_flat_state_paths(out_root)))
         want = _pairs(_DEDUP["dedup_minhash_lsh"].build(spark, oracle_sf_dir))
         assert got == want, (
             f"replayed bucketed result diverged from batch: "
@@ -853,7 +853,7 @@ def test_bucketed_rebucket_dial_mid_stream(spark, oracle_sf_dir, monkeypatch):
     from tailsql_spark.plans.streaming_exec import (
         N_STATE_BUCKETS,
         _mh_bucketed_seed,
-        _mh_state_paths,
+        _flat_state_paths,
         _minhash_bucketed_processor,
         _state_meta_read,
     )
@@ -877,7 +877,7 @@ def test_bucketed_rebucket_dial_mid_stream(spark, oracle_sf_dir, monkeypatch):
         #                    excludes the replaying bid and the delta
         #                    re-append lands in the current version
         assert _state_meta_read(bands_root)["version"] >= meta_b["version"]
-        got = _pairs(spark.read.parquet(*_mh_state_paths(out_root)))
+        got = _pairs(spark.read.parquet(*_flat_state_paths(out_root)))
         want = _pairs(_DEDUP["dedup_minhash_lsh"].build(spark, oracle_sf_dir))
         assert got == want, (
             f"dialed bucketed result diverged from batch: "
@@ -929,7 +929,7 @@ def test_rebucket_crash_before_commit_invisible_then_vacuum(
         # the next batch refolds idempotently over the same version
         process(rest, 1)
         assert SE._state_meta_read(bands_root)["version"] >= 1
-        got = _pairs(spark.read.parquet(*SE._mh_state_paths(out_root)))
+        got = _pairs(spark.read.parquet(*SE._flat_state_paths(out_root)))
         want = _pairs(_DEDUP["dedup_minhash_lsh"].build(spark, oracle_sf_dir))
         assert got == want, f"extra={got - want}, missing={want - got}"
 
@@ -1078,7 +1078,7 @@ def test_bm25_processor_replay_idempotent(spark, oracle_sf_dir):
     from tailsql_spark.plans.catalog import load_tables
     from tailsql_spark.plans.streaming_exec import (
         _bm25_batch_processor,
-        _mh_state_paths,
+        _flat_state_paths,
     )
 
     docs = load_tables(spark, oracle_sf_dir)["documents"].select("doc_id", "text")
@@ -1099,8 +1099,8 @@ def test_bm25_processor_replay_idempotent(spark, oracle_sf_dir):
         process(half, 0)  # simulated post-crash replay
         process(rest, 1)
         process(rest, 1)
-        postings = spark.read.parquet(*_mh_state_paths(post_root))
-        stats = spark.read.parquet(*_mh_state_paths(stat_root)).agg(
+        postings = spark.read.parquet(*_flat_state_paths(post_root))
+        stats = spark.read.parquet(*_flat_state_paths(stat_root)).agg(
             F.sum("n_docs").alias("n_docs"), F.sum("sum_dl").alias("sum_dl")
         )
         dfreq = postings.groupBy("tok").agg(F.count("*").alias("df"))
@@ -1303,7 +1303,7 @@ def test_phash_processor_replay_idempotent(spark, oracle_sf_dir):
         synth_media,
     )
     from tailsql_spark.plans.streaming_exec import (
-        _mh_state_paths,
+        _flat_state_paths,
         _phash_batch_processor,
     )
 
@@ -1327,7 +1327,7 @@ def test_phash_processor_replay_idempotent(spark, oracle_sf_dir):
         process(rest, 1)
         process(rest, 1)
         bcols = [f"b{k}" for k in range(PHASH_BANDS)]
-        ph = spark.read.parquet(*_mh_state_paths(ph_root))
+        ph = spark.read.parquet(*_flat_state_paths(ph_root))
         grp = ph.groupBy(*bcols).agg(
             F.min("doc_id").alias("canonical_doc"), F.count("*").alias("n_docs")
         )
@@ -1353,7 +1353,7 @@ def test_audio_fp_processor_replay_idempotent(spark, oracle_sf_dir):
     )
     from tailsql_spark.plans.streaming_exec import (
         _audio_fp_batch_processor,
-        _mh_state_paths,
+        _flat_state_paths,
     )
 
     audio = (
@@ -1375,7 +1375,7 @@ def test_audio_fp_processor_replay_idempotent(spark, oracle_sf_dir):
         process(half, 0)  # simulated post-crash replay
         process(rest, 1)
         process(rest, 1)
-        ff = spark.read.parquet(*_mh_state_paths(fp_root))
+        ff = spark.read.parquet(*_flat_state_paths(fp_root))
         got = {
             tuple(r)
             for r in audio_near_groups(audio.select("doc_id"), ff).collect()
@@ -1404,7 +1404,7 @@ def test_video_fp_processor_replay_idempotent(spark, oracle_sf_dir):
         synth_media,
     )
     from tailsql_spark.plans.streaming_exec import (
-        _mh_state_paths,
+        _flat_state_paths,
         _video_fp_batch_processor,
     )
 
@@ -1427,7 +1427,7 @@ def test_video_fp_processor_replay_idempotent(spark, oracle_sf_dir):
         process(half, 0)  # simulated post-crash replay
         process(rest, 1)
         process(rest, 1)
-        ff = spark.read.parquet(*_mh_state_paths(fp_root))
+        ff = spark.read.parquet(*_flat_state_paths(fp_root))
         got = {
             tuple(r)
             for r in audio_near_groups(
@@ -1457,7 +1457,7 @@ def test_rate_anomaly_processor_replay_idempotent(spark, oracle_sf_dir):
     events_rate_anomaly result."""
     from tailsql_spark.plans.catalog import load_tables
     from tailsql_spark.plans.streaming_exec import (
-        _mh_state_paths,
+        _flat_state_paths,
         _rate_anomaly_batch_processor,
     )
     from tailsql_spark.plans.streaming_sql import (
@@ -1481,7 +1481,7 @@ def test_rate_anomaly_processor_replay_idempotent(spark, oracle_sf_dir):
         process(half, 0)  # simulated post-crash replay
         process(rest, 1)
         process(rest, 1)
-        partials = spark.read.parquet(*_mh_state_paths(cnt_root))
+        partials = spark.read.parquet(*_flat_state_paths(cnt_root))
         cnts = partials.groupBy("event_type", "h").agg(F.sum("cnt").alias("cnt"))
         got = {tuple(r) for r in rate_anomaly_from_counts(cnts).collect()}
         want = {
@@ -2460,7 +2460,6 @@ def test_curation_takedown_physically_purges_content_state(spark, oracle_sf_dir)
         _bdir,
         _cc_batch_processor,
         _curation_batch_processor,
-        _del_state_paths,
         _flat_state_paths,
         _mh_bucketed_seed,
         _minhash_bucketed_processor,
@@ -2520,7 +2519,7 @@ def test_curation_takedown_physically_purges_content_state(spark, oracle_sf_dir)
         process(docs.filter(is_del).withColumn("op", F.lit("D")), 1)
 
         dels_df = (
-            spark.read.parquet(*_del_state_paths(del_root))
+            spark.read.parquet(*_flat_state_paths(del_root))
             .select("doc_id")
             .distinct()
         )
@@ -2554,7 +2553,7 @@ def test_curation_takedown_physically_purges_content_state(spark, oracle_sf_dir)
             assert base.filter(F.col("doc_id") % mod == res).count() == 0, fam
             assert base.count() > 0, fam
         # the tombstone SET survives compaction in full (D-before-late-I)
-        kept = spark.read.parquet(*_del_state_paths(del_root)).select("doc_id")
+        kept = spark.read.parquet(*_flat_state_paths(del_root)).select("doc_id")
         assert kept.distinct().count() == docs.filter(is_del).count()
         # a post-purge delete dir must survive a later expire verbatim
         spark.createDataFrame([(424242,)], "doc_id long").write.mode(
@@ -2564,7 +2563,7 @@ def test_curation_takedown_physically_purges_content_state(spark, oracle_sf_dir)
         assert os.path.exists(f"{del_root}/{_bdir(7)}")
         ids = {
             r.doc_id
-            for r in spark.read.parquet(*_del_state_paths(del_root))
+            for r in spark.read.parquet(*_flat_state_paths(del_root))
             .select("doc_id")
             .distinct()
             .collect()
@@ -2600,7 +2599,6 @@ def test_curation_maintain_composed_loop(spark, oracle_sf_dir):
         _bdir,
         _cc_batch_processor,
         _curation_batch_processor,
-        _del_state_paths,
         _flat_state_paths,
         _mh_bucketed_seed,
         _minhash_bucketed_processor,
@@ -2696,7 +2694,7 @@ def test_curation_maintain_composed_loop(spark, oracle_sf_dir):
             base = spark.read.parquet(f"{fam}/base_v{ver}")
             assert base.filter(F.col("doc_id") % mod == res).count() == 0, fam
             assert base.count() > 0, fam
-        kept = spark.read.parquet(*_del_state_paths(del_root)).select("doc_id")
+        kept = spark.read.parquet(*_flat_state_paths(del_root)).select("doc_id")
         assert kept.distinct().count() == docs.filter(is_del).count()
 
         # 3. the certified serve is unchanged by the purge
@@ -2924,7 +2922,7 @@ def test_substr_takedown_replayed_D_and_late_I_suppressed(spark, sf_dir):
     from tailsql_spark.plans.catalog import load_tables
     from tailsql_spark.operators.dedup import doc_pos_grams
     from tailsql_spark.plans.streaming_exec import (
-        _mh_state_paths,
+        _flat_state_paths,
         _substr_batch_processor,
         _takedown_processor,
     )
@@ -2962,16 +2960,16 @@ def test_substr_takedown_replayed_D_and_late_I_suppressed(spark, sf_dir):
         )
         process(dbatch, 1)
         state_after_first = spark.read.parquet(
-            *_mh_state_paths(f"{root}/pos")
+            *_flat_state_paths(f"{root}/pos")
         ).count()
         process(dbatch, 1)
         assert (
-            spark.read.parquet(*_mh_state_paths(f"{root}/pos")).count()
+            spark.read.parquet(*_flat_state_paths(f"{root}/pos")).count()
             == state_after_first
         )
         # batch 2: the LATE 'I' for the tombstoned doc — suppressed
         process(with_op(docs.filter(F.col("doc_id") == dead_id), "I"), 2)
-        pos = spark.read.parquet(*_mh_state_paths(f"{root}/pos"))
+        pos = spark.read.parquet(*_flat_state_paths(f"{root}/pos"))
         assert pos.filter(F.col("doc_id") == dead_id).count() == 0
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -3142,7 +3140,8 @@ def test_family_lease_guards_folds_and_purges(spark, tmp_path):
     3. the SAME holder re-entering (a replayed fold after a crash)
        reclaims immediately instead of stalling out the TTL;
     4. purge_flat_family and _compact_del_log actually refuse under a
-       held lease and succeed after release."""
+       held lease and succeed after release, and a forced offline fold
+       refuses a fresh lease another offline fold holds."""
     import json
     import time
 
@@ -3203,6 +3202,33 @@ def test_family_lease_guards_folds_and_purges(spark, tmp_path):
         _compact_del_log(spark, dlog, "doc_id", None)
     release_family_lease(dlog)
     _compact_del_log(spark, dlog, "doc_id", None)
+
+    # an OFFLINE forced fold must refuse a fresh lease another offline
+    # fold holds: the holder of every forced fold was once the sentinel
+    # "fold:b1000000000", which acquire read as this fold's own crash
+    # replay — so a second maintain took over a live lease and folded
+    from tailsql_spark.plans.streaming_exec import (
+        _bucket_manifest_seed,
+        _bucket_manifest_write,
+        _rebucket_family,
+        _state_meta_read,
+    )
+
+    bfam = str(tmp_path / "bucketed")
+    empty = spark.createDataFrame([], "doc_id long, kb long")
+    empty.write.parquet(f"{bfam}/seed")
+    _bucket_manifest_seed(empty, bfam)
+    rows = spark.createDataFrame([(1, 1), (2, 2)], "doc_id long, kb long")
+    rows.write.partitionBy("kb").parquet(f"{bfam}/b00000")
+    _bucket_manifest_write(rows, bfam, "kb", 0)
+    with open(f"{bfam}/_lease.json", "w") as fh:
+        fh.write(json.dumps({"holder": "fold:b1000000000", "ts": time.time()}))
+    with pytest.raises(FamilyLeaseHeld):
+        _rebucket_family(
+            spark, bfam, "kb", F.col("doc_id"), exclude_bid=10**9,
+            meta=_state_meta_read(bfam), force=True,
+        )
+    assert _state_meta_read(bfam)["version"] == 0
 
 
 def test_release_family_lease_verifies_holder(tmp_path):
