@@ -176,7 +176,6 @@ def main(argv: list[str] | None = None) -> int:
             path=f.path,
             pattern=f.regex,
             filter_expr=f.filter,
-            kind="tail",
             seek_to_end=not f.do_not_tail,
             max_rows_per_sec=(
                 f.throttle.max_elements / f.throttle.period_seconds

@@ -7,16 +7,16 @@ The reference throttles each source to ``MAX_ELE`` rows per
 
 Spark has no built-in lossy throttle: Structured Streaming back-pressures
 losslessly via source rate limits (``maxFilesPerTrigger`` /
-``maxOffsetsPerTrigger``). We therefore expose both semantics and
-document the divergence (SURVEY §7.3#6):
+``maxOffsetsPerTrigger``; the tail sources' ``max_bytes_per_batch``).
+The live loop's per-source budget sheds overflow through :func:`shed`,
+in one of two modes (SURVEY §7.3#6):
 
-* :func:`rate_options` — the idiomatic, lossless mapping: cap ingest
-  rate at the source. Default.
-* :func:`lossy_sample` — faithful *lossy* shedding expressed as uniform
-  sampling to an expected rows/trigger budget. Sampling is the
-  distributed analogue of "drop overflow": it needs no global counter
-  (a cross-partition token bucket would serialize the stream) and keeps
-  the kept-set unbiased, which drop-tail does not.
+* ``sample`` (default) — uniform sampling to the budget. Sampling is
+  the distributed analogue of "drop overflow": it needs no global
+  counter (a cross-partition token bucket would serialize the stream)
+  and keeps the kept-set unbiased, which drop-tail does not.
+* ``drop_tail`` — exact ``flow.Discard`` parity: the earliest rows up to
+  the budget survive.
 """
 
 from __future__ import annotations
@@ -25,54 +25,30 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def rate_options(max_elements: int, period_sec: float) -> dict[str, str]:
-    """Lossless mapping: source rate-limit options for readStream.
-
-    For the file source, ``maxFilesPerTrigger`` is the only lever; the
-    caller combines this with a trigger interval equal to ``period_sec``.
-    """
-    rate = max(1, int(max_elements / max(period_sec, 1e-9)))
-    return {"rowsPerSecond": str(rate), "maxFilesPerTrigger": "1"}
-
-
-def lossy_sample(
-    df: DataFrame,
-    max_elements: int,
-    period_sec: float,
-    observed_rate: float,
+def shed(
+    df: DataFrame, n: int, budget: float, mode: str, order_col: str | None
 ) -> DataFrame:
-    """Lossy shedding: keep ≈ ``max_elements`` per ``period_sec``.
+    """Shed an ``n``-row batch down to ``budget`` rows.
 
-    ``observed_rate`` is the caller's rows/sec estimate for this source
-    (the streaming harness measures it per micro-batch). When the input
-    is already under budget the frame passes through untouched.
-    """
-    budget = max_elements / max(period_sec, 1e-9)
-    if observed_rate <= budget:
-        return df
-    fraction = budget / observed_rate
-    return df.filter(F.rand() < fraction)
+    ``mode="sample"`` keeps each row with probability ``budget / n``
+    (≈ budget rows, unbiased per-window statistics).
 
-
-def lossy_drop_tail(df: DataFrame, budget_rows: int, order_col: str | None) -> DataFrame:
-    """EXACT drop-tail shedding: keep the first ``budget_rows`` rows of
-    the batch, discard the rest — ``flow.Discard``'s semantics
+    ``mode="drop_tail"`` keeps EXACTLY the first ``int(budget)`` rows
+    and discards the rest — ``flow.Discard``'s semantics
     (``/root/reference/sql/squeryer.go:343-352``: buffer full → new
-    elements dropped, earliest survive).
-
-    "First" needs an order a distributed batch doesn't inherently have;
-    ``order_col`` (event time when the source parses one) supplies it.
-    With no order column the keep-set is an arbitrary prefix —
-    faithful to the reference, whose kept rows are whatever arrived
-    before the buffer filled.
-
+    elements dropped, earliest survive).  "First" needs an order a
+    distributed batch doesn't inherently have; ``order_col`` (event
+    time when the source parses one) supplies it.  With no order column
+    the keep-set is an arbitrary prefix — faithful to the reference,
+    whose kept rows are whatever arrived before the buffer filled.
     Plan shape: ``orderBy().limit(n)`` compiles to TakeOrdered — each
     partition keeps its local top-``n`` and only ``n``-row heads move
     to the driver-side merge, so the cost is bounded by the BUDGET, not
-    the batch: safe at any ingest scale.  Uniform sampling
-    (:func:`lossy_sample`) remains the default because drop-tail biases
-    per-window statistics toward early rows; this mode exists for exact
-    reference parity (``throttle_mode="drop_tail"``).
+    the batch: safe at any ingest scale.  Sampling remains the default
+    because drop-tail biases per-window statistics toward early rows.
     """
-    ordered = df.orderBy(order_col) if order_col and order_col in df.columns else df
-    return ordered.limit(int(budget_rows))
+    if mode == "drop_tail":
+        if order_col and order_col in df.columns:
+            df = df.orderBy(order_col)
+        return df.limit(int(budget))
+    return df.filter(F.rand() < budget / n)

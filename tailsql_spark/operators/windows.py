@@ -39,22 +39,3 @@ class WindowSpec:
     @property
     def is_tumbling(self) -> bool:
         return self.slide_sec == 0 or self.slide_sec == self.size_sec
-
-    @classmethod
-    def parse(cls, spec: str, columns: list[str] | None = None) -> "WindowSpec":
-        """Parse the CLI form ``SIZE:SLIDE:IDX_OF_TS``.
-
-        ``IDX_OF_TS`` is a column index in the reference; we resolve it
-        against ``columns`` to a name (the Spark-native identifier).
-        """
-        parts = spec.split(":")
-        size = int(parts[0])
-        slide = int(parts[1]) if len(parts) > 1 else 0
-        ts_field = None
-        if len(parts) > 2:
-            idx = int(parts[2])
-            if idx >= 0:
-                if columns is None or idx >= len(columns):
-                    raise ValueError(f"IDX_OF_TS {idx} out of range for {columns}")
-                ts_field = columns[idx]
-        return cls(size_sec=size, slide_sec=slide, ts_field=ts_field)

@@ -10,8 +10,9 @@ semantics as a :class:`SimpleDataSourceStreamReader`:
 * offsets are byte positions — replayable and checkpointable, so a
   restarted query resumes exactly where it stopped (a strict upgrade
   over the reference, which has no recovery);
-* rotation-aware: when the file shrinks below the recorded offset the
-  reader re-opens from 0 (tail ``ReOpen``);
+* rotation-aware: when the file shrinks below the recorded offset, or
+  its inode or first bytes change, the reader re-opens from 0 (tail
+  ``ReOpen``);
 * ``seek_to_end`` mirrors tail's default start-at-EOF; ``False``
   reads from the beginning (``--do-not-tail`` still ultimately maps to
   plain batch ``spark.read.text``);
@@ -29,6 +30,14 @@ files: the ``tailn`` sibling (r13) is a PLANNER-PARTITIONED
 stats sizes to plan offsets, and every file's byte range is read BY AN
 EXECUTOR, one input partition per grown file, so tailing a thousand
 service logs distributes instead of funneling through the driver.
+
+Both formats plan and read a file through the same two functions:
+:func:`_plan_file` decides a file's next line-aligned end offset
+(rotation signals, the unchanged fast path, the per-batch byte cap),
+and :func:`_read_lines` delivers the lines of one planned [start, end)
+range (``end < start``: the file rotated, read [0, end)).  ``tailf`` is
+their single-path, driver-side user; ``tailn`` loops the planner over
+its glob and runs the range reader on executors.
 
 Usage::
 
@@ -88,6 +97,131 @@ def _complete_through(path: str, lo: int, size: int) -> int:
     return lo
 
 
+def _plan_file(
+    path: str,
+    st: os.stat_result,
+    prev: int | None,
+    max_bytes: int,
+    ident: dict[str, tuple[int, bytes]],
+) -> int | None:
+    """The per-file tail decision, shared by ``tailf`` and ``tailn``:
+    the next line-aligned end offset for ``path`` given the previous
+    plan's end ``prev`` (None: no plan yet and the stream starts at the
+    file end).  None when the file vanished between stat and read
+    (delete-based rotation is routine).
+
+    Rotation: size alone misses a delete-rotated replacement LARGER
+    than the original (it masquerades as growth, and the old offset
+    would continue INTO the new file).  ``ident`` keeps, per path, two
+    in-memory signals that unmask it — the inode (tail -F's rule;
+    defeated when the filesystem immediately REUSES the freed inode,
+    routine on tmpfs/ext4) and the file's first 64 bytes (the fluentd
+    rule: appends never change the prefix; a same-prefix replacement
+    escapes — documented heuristic).  They are deliberately NOT part of
+    the checkpointed offset (byte positions stay the replayable
+    contract), so across a restart the bigger-replacement case remains
+    undetectable.  A detected replacement plans end=0 for one batch:
+    any end >= the committed start would read as continuation, so the
+    only robust signal is an end below every possible start — the
+    batch reads nothing, and the next plan delivers the replacement
+    from 0 under the normal cap.
+
+    The 64-byte prefix probe is the ONLY per-file read a steady-state
+    trigger does.  It stays serial: on local disk it is a warm-page-
+    cache open+read of ~7 us, and a thread pool made it strictly WORSE
+    (r16 A/B, 10k files: serial 0.07 s, 4 threads 1.5 s, 16 threads
+    3.1 s — GIL thrash on non-blocking syscalls), so the serial knee is
+    the per-driver fleet cap: ~14 us/file steady state, ~1.4 s/trigger
+    at 100k files (SCALING.md r16); past it, shard the glob."""
+    try:
+        with open(path, "rb") as fh:
+            prefix = fh.read(64)
+        size = st.st_size
+        old = ident.get(path)
+        rotated = old is not None and (
+            old[0] != st.st_ino or prefix[: len(old[1])] != old[1]
+        )
+        ident[path] = (st.st_ino, prefix)
+        if rotated and prev:
+            return 0
+        if prev is None:
+            return _complete_through(path, 0, size)
+        if size == prev:
+            # UNCHANGED fast path (r15, the fleet-planning dial): ends
+            # were line-aligned when planned, so the plan is byte-
+            # identical to last trigger's — skip the ≤64 KiB backscan.
+            # Measured steady-state latestOffset: 2k×1 MB files 0.066 s
+            # → 0.021 s, 10k tiny files 0.192 s → 0.143 s (the floor is
+            # the stat+open pair); on cold object/network storage the
+            # skipped read is a round trip.  The rotation signals above
+            # still run every trigger.
+            return prev
+        if size - prev > max_bytes:
+            # planner-side backpressure: advance by at most max_bytes
+            # past the previous plan; the remainder replans next batch
+            lo = prev
+        elif size < prev and size > max_bytes:
+            # a truncated/replaced file itself over the cap: re-read
+            # from 0 (the smaller end signals rotation) in capped
+            # slices — rotation is when a log dumps the MOST data, so
+            # exempting it would void the backpressure contract
+            lo = 0
+        else:
+            return _complete_through(path, 0, size)
+        aligned = _complete_through(path, lo, lo + max_bytes)
+        # one line longer than the cap must be consumed whole
+        return aligned if aligned > lo else _complete_through(path, lo, size)
+    except OSError:
+        return None
+
+
+#: read granularity of :func:`_read_lines`: a [start, end) range is
+#: consumed in chunks of this many bytes (never one full-range
+#: ``f.read``), so a large backfill range costs bounded memory per
+#: chunk plus the emitted rows.
+READ_CHUNK = 4 << 20
+
+
+def _range_start(start: int, end: int) -> int:
+    """First byte an offset pair delivers: ``end < start`` means the
+    file rotated (truncated or replaced) — read [0, end)."""
+    return 0 if end < start else start
+
+
+def _read_lines(
+    path: str, start: int, end: int, chunk: int = READ_CHUNK
+) -> Iterator[str]:
+    """The lines of one planned [start, end) range, read in bounded
+    chunks — deterministic, so replaying an offset pair re-delivers the
+    same rows.  Ends are line-aligned by construction; a missing file
+    yields nothing (the range vanished under delete-rotation)."""
+    start = _range_start(start, end)
+    if end <= start:
+        return
+    try:
+        f = open(path, "rb")
+    except OSError:
+        return
+    with f:
+        f.seek(start)
+        remaining = end - start
+        buf = b""
+        while remaining > 0:
+            data = f.read(min(chunk, remaining))
+            if not data:
+                break  # truncated under us: emit what we have
+            remaining -= len(data)
+            buf += data
+            *lines, buf = buf.split(b"\n")
+            for ln in lines:
+                if ln != b"":
+                    yield ln.decode("utf-8", errors="replace")
+        # a trailing remainder only appears if the file shrank mid-read
+        # — emit it rather than drop bytes
+        if buf != b"":
+            yield buf.decode("utf-8", errors="replace")
+
+
 class TailFilePartition(InputPartition):
     """One grown file's byte range for one micro-batch — the planner
     unit the executors read."""
@@ -113,7 +247,8 @@ class TailFleetPartition(InputPartition):
 
 
 class TailStreamReader(SimpleDataSourceStreamReader):
-    """Byte-offset tail reader for a regular file."""
+    """Byte-offset tail reader for one regular file: the single-path,
+    driver-side user of :func:`_plan_file` and :func:`_read_lines`."""
 
     def __init__(
         self,
@@ -126,6 +261,7 @@ class TailStreamReader(SimpleDataSourceStreamReader):
         self.seek_to_end = seek_to_end
         self.max_bytes = max_bytes_per_batch
         self.start_offset = start_offset
+        self._ident: dict[str, tuple[int, bytes]] = {}
 
     def initialOffset(self) -> dict:
         # ``start_offset`` pins tail-at-OPEN semantics: without it the
@@ -141,75 +277,30 @@ class TailStreamReader(SimpleDataSourceStreamReader):
             return {"pos": os.path.getsize(self.path)}
         return {"pos": 0}
 
-    def _read_from(self, pos: int) -> tuple[list[tuple[str]], int]:
+    def _plan(self, prev: int) -> int | None:
         try:
             st = os.stat(self.path)
         except OSError:
-            return [], pos
-        size = st.st_size
-        # rotation detection (r14, parity with tailn): size alone
-        # misses a delete-rotated replacement LARGER than the original
-        # (masquerades as growth; the old offset would continue INTO
-        # the new file).  The live reader also tracks inode + first
-        # bytes — inode reuse after unlink+create is routine, and
-        # appends never change the prefix.  In-memory only: across a
-        # restart the bigger-replacement case remains undetectable
-        # (byte positions stay the checkpoint contract).
-        rotated = size < pos
-        if not rotated and pos > 0:
-            try:
-                with open(self.path, "rb") as fh:
-                    prefix = fh.read(64)
-                old_sig = getattr(self, "_sig", b"")
-                rotated = (
-                    getattr(self, "_inode", st.st_ino) != st.st_ino
-                ) or (old_sig != b"" and prefix[: len(old_sig)] != old_sig)
-                self._sig = prefix
-            except OSError:
-                return [], pos
-        else:
-            try:
-                with open(self.path, "rb") as fh:
-                    self._sig = fh.read(64)
-            except OSError:
-                return [], pos
-        self._inode = st.st_ino
-        if rotated:  # rotation/truncation → re-open from start
-            pos = 0
-        if size == pos:
-            return [], pos
-        with open(self.path, "rb") as f:
-            f.seek(pos)
-            chunk = f.read(self.max_bytes)
-        new_pos = pos + len(chunk)
-        lines = chunk.split(b"\n")
-        if not chunk.endswith(b"\n"):
-            # incomplete trailing line: leave its bytes unconsumed — the
-            # offset only ever advances past complete lines, so the
-            # reader is stateless and restart-safe
-            partial = lines.pop()
-            new_pos -= len(partial)
-        rows = [
-            (ln.decode("utf-8", errors="replace"),) for ln in lines if ln != b""
-        ]
-        return rows, new_pos
+            return None
+        return _plan_file(self.path, st, prev, self.max_bytes, self._ident)
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        rows, new_pos = self._read_from(int(start["pos"]))
-        return iter(rows), {"pos": new_pos}
+        pos = int(start["pos"])
+        end = self._plan(pos)
+        if end == 0 < pos:
+            # a replaced file (the planner's one-batch rotation signal):
+            # re-open from 0 within this same call
+            pos, end = 0, self._plan(0)
+        if end is None:
+            return iter([]), start
+        # materialized: the engine copies a prefetched batch's iterator
+        rows = [(v,) for v in _read_lines(self.path, pos, end)]
+        return iter(rows), {"pos": end}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
         # replay for recovery: deterministic re-read of [start, end)
-        pos, end_pos = int(start["pos"]), int(end["pos"])
-        if not os.path.exists(self.path) or end_pos <= pos:
-            return iter([])
-        with open(self.path, "rb") as f:
-            f.seek(pos)
-            data = f.read(end_pos - pos)
-        return iter(
-            (ln.decode("utf-8", errors="replace"),)
-            for ln in data.split(b"\n")
-            if ln != b""
+        return (
+            (v,) for v in _read_lines(self.path, int(start["pos"]), int(end["pos"]))
         )
 
 
@@ -289,19 +380,16 @@ class TailNStreamReader(DataSourceStreamReader):
       [start, end) byte range is read ON AN EXECUTOR — data bytes
       never pass through the driver, and a thousand log files fan out
       across the cluster;
-    * rotation per file: size below the recorded offset re-opens from
-      0, independently of every other file;
+    * rotation per file (:func:`_plan_file`) re-opens from 0,
+      independently of every other file;
     * ``readBetweenOffsets`` semantics come from ``partitions(start,
       end)`` + deterministic range reads, so checkpointed restart
       resumes exactly (the same strict upgrade over the reference as
       the single-file reader).
     """
 
-    #: executor-side read granularity: a partition's [start, end) range
-    #: is consumed in chunks of this many bytes (never one full-range
-    #: ``f.read``), so a large backfill range costs bounded memory
-    #: per-chunk plus the emitted rows.
-    READ_CHUNK = 4 << 20
+    #: executor-side read granularity (:func:`_read_lines`)
+    READ_CHUNK = READ_CHUNK
     #: planner-side split granularity: a file range larger than this
     #: becomes several line-aligned partitions, so one huge backfill
     #: file fans out across executors instead of pinning one task.
@@ -331,28 +419,12 @@ class TailNStreamReader(DataSourceStreamReader):
         #: plans uncapped — a bounded-memory catch-up (chunked reads +
         #: range splitting below) — and the cap engages from the
         #: second plan on.  initialOffset therefore only SEEDS this
-        #: when no plan exists yet; it never clobbers a more-advanced
-        #: one (the clobber would put the next capped end behind the
-        #: committed start — the duplicate-delivery bug the r14 review
-        #: caught empirically).
+        #: when no plan exists yet; it never clobbers or rescans past an
+        #: existing one (either puts a start behind or past the plan's
+        #: end — duplicate delivery, caught empirically in r14).
         self._last_end: dict[str, int] | None = None
-        #: in-memory rotation identity per path: a delete-rotated file
-        #: whose REPLACEMENT is larger than the original is
-        #: indistinguishable from growth by size alone (the
-        #: [0, old_size) prefix of the new file would be silently
-        #: skipped and the suffix delivered as a continuation).  Two
-        #: signals unmask it for the LIVE planner — the inode (tail
-        #: -F's rule; defeated when the filesystem immediately REUSES
-        #: the freed inode, routine on tmpfs/ext4) and the file's
-        #: first bytes (the fluentd rule: appends never change the
-        #: prefix; a same-prefix replacement escapes — documented
-        #: heuristic).  Deliberately NOT part of the checkpointed
-        #: offset (byte positions stay the replayable contract);
-        #: across a restart the bigger-replacement case remains
-        #: undetectable, the same documented limit as the single-file
-        #: reader.
-        self._inode: dict[str, int] = {}
-        self._sig: dict[str, bytes] = {}
+        #: in-memory rotation identity per path (see :func:`_plan_file`)
+        self._ident: dict[str, tuple[int, bytes]] = {}
 
     def _files(self) -> list[str]:
         import glob
@@ -401,6 +473,13 @@ class TailNStreamReader(DataSourceStreamReader):
         return out
 
     def initialOffset(self) -> dict:
+        # the engine may call latestOffset() first (observed on Spark
+        # 4.x).  A plan made there IS the start: rescanning would put a
+        # grown file's start past that plan's end — misread as rotation,
+        # every old line re-delivered — and overwriting the plan would
+        # put the next capped end BEHIND the committed start
+        if self._last_end is not None:
+            return dict(self._last_end) if self.seek_to_end else {}
         out: dict[str, int] = {}
         if self.seek_to_end:
             # tail semantics: the INITIAL file set starts at EOF
@@ -414,139 +493,25 @@ class TailNStreamReader(DataSourceStreamReader):
                     # rotation is routine) — skip; if it reappears, a
                     # later batch picks it up from 0
                     continue
-        # seed the cap baseline ONLY when no plan exists yet: the
-        # engine may call latestOffset() first (observed on Spark 4.x),
-        # and overwriting its plan here would put the next capped end
-        # BEHIND the committed start — misread as rotation, every
-        # backfill byte delivered twice
-        if self._last_end is None:
-            self._last_end = dict(out)
+        self._last_end = dict(out)
         return out
-
-    def _probe_prefixes(self, scan: list) -> dict:
-        """64-byte prefix per scanned file (the rotation signature
-        probe) — the ONLY per-file read a steady-state trigger does.
-        Returns {path: bytes | None}; None marks a file that vanished
-        between scan and probe (the established OSError tolerance).
-
-        SERIAL, deliberately: on local disk the probe is a warm-page-
-        cache open+read — ~7 us of mostly GIL-held work — and a thread
-        pool makes it strictly WORSE (r16 A/B, 10k files: serial
-        0.07 s, 4 threads 1.5 s, 16 threads 3.1 s — classic GIL thrash
-        on non-blocking 'syscalls').  The measured serial knee is
-        therefore the honest per-driver fleet cap: ~14 us/file steady
-        state, ~1.4 s/trigger at 100k files (SCALING.md r16); past it,
-        shard the glob across streams."""
-
-        def probe(p: str):
-            try:
-                with open(p, "rb") as fh:
-                    return p, fh.read(64)
-            except OSError:
-                return p, None
-
-        return dict(probe(p) for p, _ in scan)
 
     def latestOffset(self) -> dict:
         out: dict[str, int] = {}
         prev_map = self._last_end
-        scan = self._scan()
-        prefixes = self._probe_prefixes(scan)
-        for p, st in scan:
-            try:
-                size = st.st_size
-                prev = None if prev_map is None else int(prev_map.get(p, 0))
-                if prev is None and not self.seek_to_end:
-                    # engine call order: Spark 4.x calls latestOffset()
-                    # BEFORE initialOffset() on a fresh query.  For a
-                    # backfill stream the committed start is 0, so the
-                    # very FIRST plan must already honor the cap —
-                    # leaving prev=None here planned the whole
-                    # pre-existing file in one batch, defeating the
-                    # backpressure dial exactly in its documented use
-                    # case (large pre-existing logs).  seek_to_end
-                    # streams keep prev=None: their start is the file
-                    # END, and a capped end below it would misread as
-                    # rotation.
-                    prev = 0
-                # inode change = delete-rotation even when the
-                # replacement is BIGGER than the original (size alone
-                # would masquerade as growth and skip the replacement's
-                # [0, prev) prefix).  Plan end=0 for one batch: any
-                # end >= the committed start would read as continuation
-                # INTO the replacement, so the only robust signal is an
-                # end below every possible start — partitions() then
-                # plans nothing, the checkpoint commits 0, and the next
-                # plan delivers the replacement from 0 under the normal
-                # cap.
-                #
-                # UNCHANGED fast path (r15, the fleet-planning dial): a
-                # file whose size equals the previous plan's end did not
-                # grow and already ends on a complete line (ends were
-                # line-aligned when planned), so the plan is byte-
-                # identical to last trigger's — skip the ≤64 KiB
-                # line-alignment backscan.  Measured steady-state
-                # latestOffset: 2k×1 MB files 0.066 s → 0.021 s (3.2×;
-                # the backscan reads 64 KiB/file there), 10k tiny files
-                # 0.192 s → 0.143 s (the floor is the stat+open syscall
-                # pair) — and on cold object/network storage the
-                # skipped read is a round trip, not a page-cache hit.
-                # The rotation signals stay AS STRONG as before: the
-                # inode check rides the stat above, and the 64-byte
-                # prefix probe below still runs every trigger — only
-                # the backscan is skipped, and only when it provably
-                # recomputes last trigger's answer.
-                prefix = prefixes.get(p)
-                if prefix is None:
-                    continue  # vanished between scan and probe
-                old_sig = self._sig.get(p, b"")
-                rotated = (
-                    p in self._inode and self._inode[p] != st.st_ino
-                ) or (
-                    old_sig != b"" and prefix[: len(old_sig)] != old_sig
-                )
-                self._inode[p] = st.st_ino
-                self._sig[p] = prefix
-                if rotated and prev is not None and prev > 0:
-                    out[p] = 0
-                    continue
-                if prev is not None and size == prev:
-                    out[p] = prev  # unchanged: last plan's aligned end
-                    continue
-                if (
-                    prev is not None
-                    and size > prev  # not rotated/shrunk
-                    and size - prev > self.max_bytes
-                ):
-                    # planner-side backpressure: advance by at most
-                    # max_bytes past the previous plan, backed off to a
-                    # complete line; the remainder replans next batch
-                    aligned = _complete_through(p, prev, prev + self.max_bytes)
-                    if aligned <= prev:
-                        # one line longer than the cap: it must be
-                        # consumed whole — fall back to the full
-                        # alignment for this file this batch
-                        aligned = _complete_through(p, prev, size)
-                    out[p] = aligned
-                elif (
-                    prev is not None
-                    and size < prev  # delete-rotation replaced the file
-                    and size > self.max_bytes
-                ):
-                    # the replacement content is itself over the cap:
-                    # re-read from 0 (the smaller end signals rotation
-                    # to partitions()) but still in capped slices —
-                    # rotation is when a log dumps the MOST data, so
-                    # exempting it would void the backpressure contract
-                    # exactly when it matters
-                    aligned = _complete_through(p, 0, self.max_bytes)
-                    out[p] = (
-                        aligned if aligned > 0 else _complete_through(p, 0, size)
-                    )
-                else:
-                    out[p] = _complete_through(p, 0, size)
-            except OSError:
-                continue  # vanished between glob and stat/backscan
+        for p, st in self._scan():
+            prev = None if prev_map is None else prev_map.get(p, 0)
+            if prev is None and not self.seek_to_end:
+                # engine call order: Spark 4.x calls latestOffset()
+                # BEFORE initialOffset() on a fresh query.  For a
+                # backfill stream the committed start is 0, so the very
+                # FIRST plan must already honor the cap.  seek_to_end
+                # streams keep prev=None: their start is the file END,
+                # and a capped end below it would misread as rotation.
+                prev = 0
+            end = _plan_file(p, st, prev, self.max_bytes, self._ident)
+            if end is not None:
+                out[p] = end
         self._last_end = dict(out)
         return out
 
@@ -585,10 +550,8 @@ class TailNStreamReader(DataSourceStreamReader):
         parts: list[InputPartition] = []
         packable: list[tuple[str, int, int]] = []
         for p, e in end.items():
-            s = int(start.get(p, 0))
             e = int(e)
-            if e < s:  # rotation/truncation → re-read from 0
-                s = 0
+            s = _range_start(int(start.get(p, 0)), e)
             if e <= s:
                 continue
             cuts = [s, *self._split_points(p, s, e), e]
@@ -622,48 +585,17 @@ class TailNStreamReader(DataSourceStreamReader):
         return parts
 
     def read(self, partition: InputPartition) -> Iterator[tuple]:
-        # EXECUTOR-side: deterministic CHUNKED range read — bounded
-        # memory even for a multi-GiB backfill partition (the r13
-        # reader materialized the whole range in one f.read + a full
-        # split() copy).  A fleet partition iterates its packed ranges
-        # sequentially; a file partition is the single-range case.
+        # EXECUTOR-side: a fleet partition reads its packed ranges in
+        # order; a file partition is the single-range case
         if isinstance(partition, TailFleetPartition):
             ranges = partition.ranges
         else:
             ranges = [(partition.path, partition.start, partition.end)]
-
-        def _rows() -> Iterator[tuple]:
-            for path, start, end_ in ranges:
-                if not path:
-                    continue
-                try:
-                    f = open(path, "rb")
-                except OSError:
-                    continue  # vanished under delete-rotation: range gone
-                with f:
-                    f.seek(start)
-                    remaining = end_ - start
-                    buf = b""
-                    while remaining > 0:
-                        chunk = f.read(min(self.READ_CHUNK, remaining))
-                        if not chunk:
-                            break  # truncated under us: emit what we have
-                        remaining -= len(chunk)
-                        buf += chunk
-                        *lines, buf = buf.split(b"\n")
-                        for ln in lines:
-                            if ln != b"":
-                                yield (
-                                    path,
-                                    ln.decode("utf-8", errors="replace"),
-                                )
-                    # partition ends are line-aligned by construction, so
-                    # a trailing remainder only appears if the file shrank
-                    # mid-read — emit it rather than drop bytes
-                    if buf != b"":
-                        yield (path, buf.decode("utf-8", errors="replace"))
-
-        return _rows()
+        return (
+            (path, v)
+            for path, start, end in ranges
+            for v in _read_lines(path, start, end, self.READ_CHUNK)
+        )
 
     def commit(self, end: dict) -> None:
         pass  # source files are not ours to clean

@@ -55,8 +55,8 @@ from tailsql_spark.sinks.formatters import render
 class SourceSpec:
     """One followed source: path + regex DSL + optional row filter.
 
-    ``kind``: ``tail`` (tailf data source: file/FIFO/stdin), ``dir``
-    (idiomatic Spark file-stream of new files), ``batch`` (read once).
+    ``path``: a glob streams through ``tailn`` (every matching file);
+    anything else through ``tailf`` (one file, a FIFO, or stdin).
 
     ``max_rows_per_sec``: lossy throttle budget (reference operator #7,
     ``sql/squeryer.go:343-352``) — overflow is shed by uniform sampling
@@ -66,12 +66,11 @@ class SourceSpec:
     path: str
     pattern: str
     filter_expr: str | None = None
-    kind: str = "tail"
     seek_to_end: bool = False
     max_rows_per_sec: float = 0.0  # 0 → no throttle
     #: ``sample`` (default): uniform shed, unbiased per-window stats;
     #: ``drop_tail``: exact flow.Discard parity — keep the earliest
-    #: rows up to budget (operators/throttle.py:lossy_drop_tail).
+    #: rows up to budget (operators/throttle.py:shed).
     throttle_mode: str = "sample"
     compiled: CompiledPattern = field(init=False)
 
@@ -139,11 +138,8 @@ class StreamQueryer:
         self._last_batch_ts: dict[int, float] = {}
         import tempfile
 
-        # Window spool: scratch prefix for buffered batch segments.
-        # Local: a temp dir; cluster: point at HDFS/S3 scratch (the
-        # footer-stats reader resolves any pyarrow.fs URI, and falls
-        # back to a Spark-side agg rather than ever dropping a batch —
-        # see _spool_stats).
+        # Window spool: local scratch dir for buffered batch segments
+        # (its footer stats are read driver-side — see _spool_stats).
         self._spool_dir = tempfile.mkdtemp(prefix="tailsql_spool_")
 
     # ------------------------------------------------------------------
@@ -151,9 +147,7 @@ class StreamQueryer:
     # ------------------------------------------------------------------
     def _parsed_stream(self, idx: int) -> DataFrame:
         src = self.sources[idx]
-        if src.kind == "dir":
-            lines = self.spark.readStream.format("text").load(src.path)
-        elif src.kind == "tail" and any(ch in src.path for ch in "*?["):
+        if any(ch in src.path for ch in "*?["):
             # glob path → the planner-partitioned multi-file tail
             # (r13): every grown file's byte range is read by an
             # executor; the driver only stats sizes to plan offsets
@@ -218,16 +212,11 @@ class StreamQueryer:
                 dt = max(now - last, 0.2) if last is not None else 1.0
                 budget = src.max_rows_per_sec * dt
                 if n > budget:
-                    if src.throttle_mode == "drop_tail":
-                        from tailsql_spark.operators.throttle import lossy_drop_tail
+                    from tailsql_spark.operators.throttle import shed
 
-                        df2 = lossy_drop_tail(
-                            df, int(budget), self.window.ts_field
-                        ).persist()
-                    else:
-                        from pyspark.sql import functions as F
-
-                        df2 = df.filter(F.rand() < budget / n).persist()
+                    df2 = shed(
+                        df, n, budget, src.throttle_mode, self.window.ts_field
+                    ).persist()
                     df.unpersist()
                     df = df2
             self._last_batch_ts[idx] = now
@@ -275,14 +264,11 @@ class StreamQueryer:
         write.  Requires INT64 timestamps (scoped per spool write):
         INT96 columns carry no min/max statistics.
 
-        Works on any pyarrow filesystem (local path, ``file://``,
-        ``hdfs://``, ``s3://`` spool scratch); if the footer listing
-        comes back EMPTY — or the pyarrow filesystem path raises at all
-        (pyarrow built without that filesystem, credential or transient
-        I/O errors) — falls back to a Spark-side count/max agg rather
-        than reporting 0 or killing the stream: a wrong 0 here would
-        silently delete the just-ingested batch, and Spark can read any
-        spool path it just wrote."""
+        If the footer listing comes back EMPTY — or reading it raises at
+        all (transient I/O errors) — falls back to a Spark-side
+        count/max agg rather than reporting 0 or killing the stream: a
+        wrong 0 here would silently delete the just-ingested batch, and
+        Spark can read any spool path it just wrote."""
         try:
             found, n, mx = self._spool_stats_footers(path)
         except Exception:
@@ -299,27 +285,12 @@ class StreamQueryer:
 
         import pyarrow.parquet as pq
 
-        if "://" in path and not path.startswith("file:"):
-            from pyarrow import fs as pafs
-
-            filesystem, fs_path = pafs.FileSystem.from_uri(path)
-            infos = filesystem.get_file_info(pafs.FileSelector(fs_path))
-            parts = sorted(
-                i.path for i in infos if i.base_name.startswith("part-")
-            )
-
-            def read_md(p):
-                with filesystem.open_input_file(p) as f:
-                    return pq.read_metadata(f)
-
-        else:
-            parts = sorted(glob.glob(f"{path.removeprefix('file:')}/part-*"))
-            read_md = pq.read_metadata
+        parts = sorted(glob.glob(f"{path}/part-*"))
         n = 0
         mx = None
         ts_field = self.window.ts_field
         for part in parts:
-            md = read_md(part)
+            md = pq.read_metadata(part)
             n += md.num_rows
             if not ts_field or ts_field not in md.schema.names:
                 continue
@@ -361,20 +332,17 @@ class StreamQueryer:
     # ------------------------------------------------------------------
     # window emission (≡ Clean + Insert + Query + print)
     # ------------------------------------------------------------------
-    def _drop(self, b: _Buffered) -> None:
+    def _evict(self, expired) -> None:
+        """Delete every buffered segment ``expired(segment)`` selects."""
         import shutil
 
-        shutil.rmtree(b.path, ignore_errors=True)
-
-    def _evict(self, now: float) -> None:
-        horizon = now - self.window.size_sec
         for idx, buf in self._buffers.items():
             keep: list[_Buffered] = []
             for b in buf:
-                if b.ts > horizon:
-                    keep.append(b)
+                if expired(b):
+                    shutil.rmtree(b.path, ignore_errors=True)
                 else:
-                    self._drop(b)
+                    keep.append(b)
             self._buffers[idx] = keep
 
     def emit(self, now: float | None = None) -> str:
@@ -402,18 +370,15 @@ class StreamQueryer:
                 wm_us = max(maxes, default=None)
                 if wm_us is not None:
                     horizon_us = wm_us - self.window.size_sec * 1_000_000
-                    for idx, buf in self._buffers.items():
-                        keep = []
-                        for b in buf:
-                            if b.max_event_ts is not None and b.max_event_ts <= horizon_us:
-                                self._drop(b)
-                            else:
-                                keep.append(b)
-                        self._buffers[idx] = keep
+                    self._evict(
+                        lambda b: b.max_event_ts is not None
+                        and b.max_event_ts <= horizon_us
+                    )
             else:
-                self._evict(now)
+                horizon = now - self.window.size_sec
+                self._evict(lambda b: b.ts <= horizon)
             for idx, src in enumerate(self.sources):
-                paths = [b.path for b in self._buffers[idx] if b.n > 0]
+                paths = [b.path for b in self._buffers[idx]]
                 if paths:
                     view = self.spark.read.schema(src.compiled.schema).parquet(*paths)
                     # reference constraint: IDX_OF_TS with multiple tables
@@ -434,10 +399,7 @@ class StreamQueryer:
             out = render(result, self.formatter, max_rows=self.max_rows)
             if self.window.is_tumbling:
                 # tumbling boundary: next window starts empty (Clean)
-                for buf in self._buffers.values():
-                    for b in buf:
-                        self._drop(b)
-                    buf.clear()
+                self._evict(lambda b: True)
         self._emissions += 1
         self.sink(out)
         return out

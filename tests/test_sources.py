@@ -329,6 +329,28 @@ def test_tailn_vanished_file_and_giant_line(tmp_path):
     assert list(r.read(ghost)) == []
 
 
+def test_tailf_giant_line_is_consumed_whole(tmp_path):
+    """A line longer than tailf's per-batch cap is consumed whole, the
+    same fallback tailn takes — the reader must not stall at offset 0
+    re-reading a capped slice that holds no complete line."""
+    from tailsql_spark.sources.tail import TailStreamReader
+
+    log = tmp_path / "g.log"
+    lines = ["x" * 39, "s1", "s2"]  # a 40-byte first line, then two short
+    log.write_text("".join(ln + "\n" for ln in lines))
+    r = TailStreamReader(str(log), seek_to_end=False, max_bytes_per_batch=16)
+    got: list[str] = []
+    off = r.initialOffset()
+    for _ in range(10):
+        rows, nxt = r.read(off)
+        got.extend(v for (v,) in rows)
+        if nxt == off:
+            break
+        off = nxt
+    assert got == lines, got
+    assert off == {"pos": log.stat().st_size}
+
+
 def test_tailn_range_split_and_chunked_read(tmp_path):
     """r14: a backfill range larger than SPLIT_BYTES fans out into
     several line-aligned partitions, and the executor read is chunked
@@ -479,6 +501,52 @@ def test_tailf_bigger_replacement_rotation_detected(tmp_path):
     got = [v for (v,) in rows2]
     assert got == repl, got  # from 0, complete — not a mid-file suffix
     assert off2["pos"] == log.stat().st_size
+
+
+def test_tailf_rotation_batch_replays_identically(tmp_path):
+    """Exactly-once recovery rests on replaying any [start, end)
+    deterministically: after a truncate-rotate the live batch moves the
+    offset backwards (end < start), and readBetweenOffsets over the
+    same pair must re-deliver the same rows — [0, end) of the new
+    file."""
+    from tailsql_spark.sources.tail import TailStreamReader
+
+    log = tmp_path / "rot.log"
+    log.write_text("line-one\nline-two\nxx\n")  # 21 bytes
+    r = TailStreamReader(str(log), seek_to_end=False,
+                         max_bytes_per_batch=1 << 20)
+    _rows, off = r.read(r.initialOffset())
+    assert off == {"pos": 21}
+    log.write_text("ccc\n")  # truncate-rotate in place
+    rows, off2 = r.read(off)
+    live = list(rows)
+    assert live == [("ccc",)] and off2 == {"pos": 4}
+    assert list(r.readBetweenOffsets(off, off2)) == live
+
+
+def test_tailn_seek_to_end_engine_order_skips_old_lines(tmp_path):
+    """Engine order on a fresh seek_to_end query: latestOffset() plans
+    first, the file grows, then initialOffset() runs.  The start must be
+    that first plan — a rescan put the start past the plan's end, which
+    partitions() read as rotation and re-delivered every old line."""
+    from tailsql_spark.sources.tail import TailNStreamReader
+
+    d = tmp_path / "logs"
+    d.mkdir()
+    log = d / "app.log"
+    log.write_text("".join(f"old-{i}\n" for i in range(5)))
+    r = TailNStreamReader(str(d / "*.log"), seek_to_end=True,
+                          max_bytes_per_batch=1 << 20)
+    end = r.latestOffset()
+    with open(log, "a") as fh:
+        fh.write("new-1\n")
+    start = r.initialOffset()
+    got: list[str] = []
+    for _ in range(3):
+        for part in r.partitions(start, end):
+            got.extend(v for _p, v in r.read(part))
+        start, end = end, r.latestOffset()
+    assert got == ["new-1"], got
 
 
 def test_tailn_engine_call_order_first_plan_is_capped(tmp_path):

@@ -32,7 +32,7 @@ def test_run_batch_readme_demo(spark, tmp_path):
     _write(log, LINES)
     out = run_batch(
         spark,
-        [SourceSpec(path=str(log), pattern=README_RE, kind="batch")],
+        [SourceSpec(path=str(log), pattern=README_RE)],
         "select count(1) as n from t0 where time > 12275",
     )
     assert out == "n\n2"
@@ -78,10 +78,10 @@ def test_tail_source_rotation(tmp_path):
     log = tmp_path / "rot.log"
     _write(log, ["aaa", "bbb"])
     r = TailStreamReader(str(log), seek_to_end=False, max_bytes_per_batch=1 << 20)
-    rows, off = r._read_from(0)
+    rows, off = r.read({"pos": 0})
     assert [x[0] for x in rows] == ["aaa", "bbb"]
     _write(log, ["ccc"])  # rewrite smaller → rotation
-    rows, off = r._read_from(off)
+    rows, off = r.read(off)
     assert [x[0] for x in rows] == ["ccc"]
 
 
@@ -92,11 +92,11 @@ def test_tail_source_partial_line_carry(tmp_path):
     with open(log, "w") as fh:
         fh.write("complete\nhalf")
     r = TailStreamReader(str(log), seek_to_end=False, max_bytes_per_batch=1 << 20)
-    rows, off = r._read_from(0)
+    rows, off = r.read({"pos": 0})
     assert [x[0] for x in rows] == ["complete"]
     with open(log, "a") as fh:
         fh.write("line\n")
-    rows, off = r._read_from(off)
+    rows, off = r.read(off)
     assert [x[0] for x in rows] == ["halfline"]
 
 
@@ -359,41 +359,29 @@ def test_streaming_batch_equivalence_tumbling(spark, sf_dir):
 
 
 def test_stateful_running_user_stats(spark, sf_dir):
-    """Custom stateful operator (applyInPandasWithState): per-user
-    running totals across micro-batches equal the batch ground truth."""
+    """Custom stateful operator (applyInPandasWithState, the certified
+    registry row ``stream_stateful_user_totals``): per-user running
+    totals across micro-batches equal the batch ground truth."""
     from tailsql_spark.plans.catalog import load_table
-    from tailsql_spark.streaming.stateful import running_user_stats
+    from tailsql_spark.plans.registry import REGISTRY
 
     events = load_table(spark, sf_dir, "events").select("user_id", "value")
-    events.write.mode("overwrite").parquet("/tmp/_stateful_events")
-    stream = spark.readStream.schema(events.schema).parquet("/tmp/_stateful_events")
-    q = (
-        running_user_stats(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("user_stats")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
     got = {
-        r.user_id: (r.n_events, r.total_value)
-        for r in spark.sql("select * from user_stats").collect()
+        r.user_id: (r.n_events, r.total_cents)
+        for r in REGISTRY["stream_stateful_user_totals"].build(spark, sf_dir).collect()
     }
+    cents = F.round(F.col("value") * 100, 0).cast("long")
     want = {
         r.user_id: (r.n, r.s)
         for r in events.groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("s"))
+        .agg(F.count("*").alias("n"), F.sum(cents).alias("s"))
         .collect()
     }
     assert set(got) == set(want) and len(want) >= 10
     for k in want:
         assert got[k][0] == want[k][0], k
-        # pandas-per-batch vs JVM summation order differ in the last ulps
-        assert abs(got[k][1] - want[k][1]) < 1e-6, k
+        # integer cents: micro-batch order cannot perturb the sum
+        assert got[k][1] == want[k][1], k
 
 
 def test_run_batch_two_file_join(spark, tmp_path):
@@ -417,12 +405,10 @@ def test_run_batch_two_file_join(spark, tmp_path):
             SourceSpec(
                 path=str(req),
                 pattern=r"(?P<ts__date>\S+) (?P<rid__str>req-\d+) (?P<path__str>\S+) (?P<code__int>\d+) (?P<ms__int>\d+)",
-                kind="batch",
             ),
             SourceSpec(
                 path=str(ups),
                 pattern=r"(?P<ts__date>\S+) (?P<rid__str>req-\d+) (?P<backend__str>\S+) (?P<ms__int>\d+)",
-                kind="batch",
             ),
         ],
         """
