@@ -97,6 +97,23 @@ def _complete_through(path: str, lo: int, size: int) -> int:
     return lo
 
 
+def _line_end_after(path: str, pos: int, size: int) -> int | None:
+    """Smallest offset in (pos, size] that ends a complete line,
+    scanning FORWARD from ``pos`` in bounded chunks; None when no
+    newline landed yet."""
+    with open(path, "rb") as f:
+        f.seek(pos)
+        while pos < size:
+            chunk = f.read(min(65536, size - pos))
+            if not chunk:
+                break
+            nl = chunk.find(b"\n")
+            if nl >= 0:
+                return pos + nl + 1
+            pos += len(chunk)
+    return None
+
+
 def _plan_file(
     path: str,
     st: os.stat_result,
@@ -167,10 +184,22 @@ def _plan_file(
             # exempting it would void the backpressure contract
             lo = 0
         else:
-            return _complete_through(path, 0, size)
+            # growth searches from prev, never below it: a tailf start
+            # taken mid-line (seek_to_end at the raw size) must not back
+            # off to an earlier newline, which would read as rotation;
+            # only a shrink re-reads from 0
+            return _complete_through(path, prev if size > prev else 0, size)
         aligned = _complete_through(path, lo, lo + max_bytes)
-        # one line longer than the cap must be consumed whole
-        return aligned if aligned > lo else _complete_through(path, lo, size)
+        if aligned > lo:
+            return aligned
+        # one line longer than the cap is consumed whole, and the cap
+        # restarts at its newline: the batch holds that line plus at
+        # most max_bytes of whole lines, never the backlog behind it
+        # (no newline yet: wait for the line to complete)
+        end = _line_end_after(path, lo + max_bytes, size)
+        if end is None:
+            return lo
+        return _complete_through(path, end, min(size, end + max_bytes))
     except OSError:
         return None
 

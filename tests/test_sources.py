@@ -351,6 +351,59 @@ def test_tailf_giant_line_is_consumed_whole(tmp_path):
     assert off == {"pos": log.stat().st_size}
 
 
+def test_giant_line_batch_restarts_the_cap(tmp_path):
+    """The giant-line fallback restarts the cap at that line's newline:
+    the batch holds the line plus at most one cap of whole lines, in
+    both formats (a fallback planned to the file's last newline read the
+    whole backlog into one driver-side tailf batch)."""
+    from tailsql_spark.sources.tail import TailNStreamReader, TailStreamReader
+
+    log = tmp_path / "g.log"
+    lines = ["x" * 39] + [f"s{i:02d}" for i in range(20)]  # 40 + 20*4 bytes
+    log.write_text("".join(ln + "\n" for ln in lines))
+
+    n = TailNStreamReader(str(log), seek_to_end=False, max_bytes_per_batch=16)
+    assert n.latestOffset() == {str(log): 56}
+
+    r = TailStreamReader(str(log), seek_to_end=False, max_bytes_per_batch=16)
+    rows, off = r.read(r.initialOffset())
+    assert [v for (v,) in rows] == lines[:5] and off == {"pos": 56}
+    got: list[str] = []
+    for _ in range(20):
+        rows, nxt = r.read(off)
+        assert nxt["pos"] - off["pos"] <= 16
+        got.extend(v for (v,) in rows)
+        if nxt == off:
+            break
+        off = nxt
+    assert got == lines[5:]
+
+
+def test_tailf_mid_line_start_never_moves_backwards(tmp_path):
+    """A seek_to_end tailf starts at the raw file size, which may fall
+    inside a line the writer has not finished.  A partial append must
+    leave the offset where it is — backing off to an earlier newline
+    would read as rotation and re-deliver lines written before the
+    stream started."""
+    from tailsql_spark.sources.tail import TailStreamReader
+
+    log = tmp_path / "app.log"
+    log.write_text("a\nb\npart")
+    r = TailStreamReader(str(log), seek_to_end=True,
+                         max_bytes_per_batch=1 << 20)
+    off = r.initialOffset()
+    assert off == {"pos": 8}
+    with open(log, "a") as fh:
+        fh.write("ial")
+    rows, off2 = r.read(off)
+    assert list(rows) == [] and off2 == {"pos": 8}
+    with open(log, "a") as fh:
+        fh.write("\nnext\n")
+    rows, off3 = r.read(off2)
+    assert [v for (v,) in rows] == ["ial", "next"]
+    assert off3 == {"pos": log.stat().st_size}
+
+
 def test_tailn_range_split_and_chunked_read(tmp_path):
     """r14: a backfill range larger than SPLIT_BYTES fans out into
     several line-aligned partitions, and the executor read is chunked
