@@ -109,7 +109,8 @@ def unified_text_row(
     cleaned: DataFrame,
     labels: DataFrame,
     docs: DataFrame,
-    hint_broadcast: bool = True,
+    *,
+    hint_broadcast: bool,
 ) -> DataFrame:
     """The text row of the corpus-wide unified curation report:
     (media_type='text', n_total, n_survivors, n_tokens) — near-dup
@@ -139,7 +140,7 @@ def unified_text_row(
 
 
 def survivor_budgets(
-    cleaned: DataFrame, labels: DataFrame, hint_broadcast: bool = True
+    cleaned: DataFrame, labels: DataFrame, *, hint_broadcast: bool
 ) -> DataFrame:
     """Near-dup survivor drop + per-(lang, split) budgets: keep docs
     absent from the cluster label table or equal to their cluster's

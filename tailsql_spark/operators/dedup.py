@@ -242,7 +242,7 @@ def band_long(sig: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
 
 
 def lsh_candidate_pairs(
-    sig: DataFrame, hint_broadcast: bool = True, force_shuffle: bool = False
+    sig: DataFrame, *, hint_broadcast: bool, force_shuffle: bool = False
 ) -> DataFrame:
     """Band the signature and self-join per band → candidate id pairs."""
     long = band_long(sig)

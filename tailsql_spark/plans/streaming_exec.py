@@ -2306,6 +2306,62 @@ def _bucket_manifest_write(
     )
 
 
+def _bucketed_write(
+    frame, root: str, col: str, bid: int, version: int,
+    nb: int = N_STATE_BUCKETS, cap: int = 1024,
+) -> None:
+    """THE write of a bucketed state dir: the frame's rows shuffled by
+    ``col`` into min(nb, cap) bucket-PURE tasks (one file per leaf dir
+    per owning task, not one per upstream task), partitioned by
+    ``col``, then its manifest rows.  A delta (bid >= 0) lands in the
+    per-batch-id overwrite dir ``b#####``; a base (bid = -version)
+    in ``base_v{version}`` with manifest subdir ``base``.  Data before
+    manifest is the visibility invariant, so a caller writes every
+    OTHER piece of its batch (stats partials, tombstones) before
+    calling this."""
+    if bid < 0:
+        data_dir, sub = f"{root}/base_v{-bid}", "base"
+    else:
+        sub = _bdir(bid)
+        data_dir = f"{root}/{sub}"
+    frame.repartition(min(int(nb), cap), col).write.mode("overwrite").partitionBy(
+        col
+    ).parquet(data_dir)
+    _bucket_manifest_write(
+        frame, root, col, bid, nb=nb, version=version, data_dir=data_dir, sub=sub
+    )
+
+
+def _manifest_rows(sess, root: str, version: int, exclude_bid: int | None = None):
+    """THE read of a bucketed family's manifest ``version``: every
+    (bid, nb, bucket, path) row, minus the replaying batch's own rows
+    when ``exclude_bid`` is given (base versions carry negative bids,
+    so they are never excluded)."""
+    man = sess.read.option("recursiveFileLookup", "true").parquet(
+        _manifest_dir(root, version)
+    )
+    if exclude_bid is not None:
+        man = man.filter(F.col("bid") != int(exclude_bid))
+    return man
+
+
+def _manifest_leaves(
+    sess, root: str, version: int | None = None,
+    exclude_bid: int | None = None, buckets: list[int] | None = None,
+) -> tuple[list[str], list[int]]:
+    """The family's live leaf dirs (sorted) and bucket-count tiers from
+    one metadata-sized collect of :func:`_manifest_rows`, optionally
+    only the leaves holding ``buckets``.  ``version`` None reads the
+    meta pointer's current version."""
+    if version is None:
+        version = int(_state_meta_read(root)["version"])
+    man = _manifest_rows(sess, root, version, exclude_bid)
+    if buckets is not None:
+        man = man.filter(F.col("bucket").isin([int(b) for b in buckets]))
+    rows = man.select("nb", "path").distinct().collect()  # planning-metadata: ≤ dirs × buckets
+    return sorted({r.path for r in rows}), sorted({int(r.nb) for r in rows if r.nb})
+
+
 def _bucket_manifest_seed(empty_frame, root: str) -> None:
     """Schema seed for a family's manifest (empty, so the first batch's
     recursive manifest read resolves a schema)."""
@@ -2332,11 +2388,7 @@ def _bucket_manifest_paths(
     hands the scan.  The replaying batch's own rows are excluded BY
     BID, preserving the exactly-once read discipline (base versions
     carry negative bids, never excludable)."""
-    man = sess.read.option("recursiveFileLookup", "true").parquet(
-        _manifest_dir(root, version)
-    )
-    if exclude_bid is not None:
-        man = man.filter(F.col("bid") != int(exclude_bid))
+    man = _manifest_rows(sess, root, version, exclude_bid)
     # planning-metadata: distinct live bucket-count tiers (≤ 2-3 rows)
     nbs = [
         int(r.nb)
@@ -2614,35 +2666,19 @@ def _rebucket_family(
 ) -> dict:
     """Decade re-bucket (the dial, applied) AND intra-decade MINOR
     fold: consolidate every COMMITTED state dir of the family into one
-    base — bucketed at state_bucket_count(rows) when the dial crossed
+    base through :func:`_commit_bucketed_base` — bucketed by
+    pmod(``key``, nb) at state_bucket_count(rows) when the dial crossed
     a doubling, at the unchanged bucket count when only the committed
-    delta-dir count crossed MINOR_FOLD_MAX_DELTAS — under a new
-    manifest VERSION whose only initial rows are the base's (bid =
-    -version, so the replay exclusion can never drop it); the atomic
-    meta rename is the commit.
+    delta-dir count crossed MINOR_FOLD_MAX_DELTAS.
 
     Replay safety: runs at the START of a batch and EXCLUDES that
     batch's bid, so a crashed-then-replayed batch's half-committed
     delta is never folded — the replaying batch re-appends it into the
-    new version exactly as a first run would.  A crash after the base
-    write but before the meta rename leaves the new version invisible;
-    the next trigger rewrites it idempotently (mode overwrite, same
-    inputs).  Old version dirs become garbage for snapshot expiry.
+    new version exactly as a first run would.
 
-    PHYSICAL TAKEDOWN PURGE (r13): when the family carries a tombstone
-    log (``del_root``), the fold's source read anti-joins the
-    accumulated delete set on ``del_col`` BEFORE rebucketing, so the
-    consolidated base contains zero tombstoned rows — the
-    Lucene/lakehouse delete-vector-then-compact discipline, and the
-    step that actually reclaims deleted-doc bytes (serve-time
-    anti-joins alone keep results correct but let dead postings grow
-    without bound).  The in-flight bid's delete dir is excluded exactly
-    like its data dir (a replayed batch re-applies both).  At fold
-    commit the tombstone log itself is compacted to one deduped base
-    (``_compact_del_log``) — the id SET is retained in full, never
-    truncated, because a 'D' must keep winning over a later-arriving
-    'I' for the same id, so serve-time anti-joins stay total while the
-    folded per-batch delete dirs become expirable garbage.
+    With a tombstone log (``del_root``) the fold is the family's
+    PHYSICAL TAKEDOWN PURGE (r13): serve-time anti-joins alone keep
+    results correct but let dead postings grow without bound.
 
     Cost: one full-family read + one bucket shuffle + ≤ nb files — the
     classic LSM/lakehouse compaction, paid once per index DECADE, which
@@ -2670,65 +2706,75 @@ def _rebucket_family(
         bid_i = int(exclude_bid)
         if bid_i <= 0 or bid_i % MINOR_FOLD_CHECK_EVERY != 0:
             return meta
-        ndeltas = (
-            sess.read.option("recursiveFileLookup", "true")
-            .parquet(_manifest_dir(root, int(meta["version"])))
-            .filter((F.col("bid") >= 0) & (F.col("bid") != bid_i))
-            .select("bid")
-            .distinct()
-            .count()  # planning-metadata: committed delta-tier count
-        )
+        paths, _ = _manifest_leaves(sess, root, int(meta["version"]), bid_i)
+        # committed delta-tier count: one b##### dir per bid
+        ndeltas = len({p.rsplit("/", 1)[0] for p in paths if "/base_v" not in p})
         if ndeltas < MINOR_FOLD_MAX_DELTAS:
             return meta
-    # the fold MUTATES versioned state: take the family lease for its
-    # duration so a concurrent offline purge cannot interleave (r14)
-    with family_lease(root, _lease_holder("fold", exclude_bid)):
-        # r15 (ADVICE): re-resolve the family pointer INSIDE the lease —
-        # a caller-provided pre-lease snapshot goes stale when another
-        # maintain run folds+vacuums between the caller's meta read and
-        # this acquisition (the race class the r14 purge_flat_family fix
-        # closed), and acting on it would read already-vacuumed version
-        # dirs.  The fold-at bucket count re-derives from the fresh
-        # pointer: the dial count when it crossed, else the unchanged
-        # base count (covers the minor and forced paths identically).
-        meta = _state_meta_read(root)
+
+    def build(live, meta, nbs, ver):
+        # the fold-at bucket count derives from the pointer re-read
+        # inside the lease: the dial count when it crossed, else the
+        # unchanged base count (covers the minor and forced paths)
         new_nb = max(state_bucket_count(int(meta["rows"])), int(meta["nb"]))
+        return live.withColumn(col, F.pmod(key, F.lit(new_nb))), {"nb": new_nb}
+
+    return _commit_bucketed_base(
+        sess, root, col, "fold", build, exclude_bid, del_root, del_col
+    )
+
+
+def _commit_bucketed_base(
+    sess, root: str, col: str, kind: str, build,
+    exclude_bid: int | None = None, del_root: str | None = None,
+    del_col: str = "doc_id", cap: int = 1024,
+) -> dict:
+    """THE versioned base commit of a bucketed family under its
+    {version, nb, rows} pointer.  Every consolidation is an instance:
+    the dial/minor/forced fold (``_rebucket_family``), the IVF takedown
+    purge and the IVF quantizer re-train.  ``build(live, meta, nbs,
+    ver)`` gets the family's live rows, the pointer, the manifest's
+    bucket-count tiers and the version being written, and returns the
+    bucketed frame plus the pointer fields it sets (``nb`` at least);
+    every other field carries through (an IVF purge after a re-train
+    keeps its ``seeds_version``).
+
+    Lease-enforced (r14): the whole read-write-commit runs under the
+    family lease (holder ``_lease_holder(kind, exclude_bid)``), and the
+    pointer is re-read INSIDE it (r15) — a pre-lease snapshot goes
+    stale when another maintain run folds+vacuums in between, and
+    acting on it would read already-vacuumed version dirs.
+
+    ``live`` is the seed plus every leaf dir of the current manifest
+    minus ``exclude_bid``'s (the in-flight batch re-appends its own
+    delta into the new version), anti-joined with the accumulated
+    tombstone set of ``del_root`` on ``del_col`` (the in-flight bid's
+    delete dir excluded like its data dir) — the Lucene/lakehouse
+    delete-vector-then-compact discipline.  The tombstone log is then
+    compacted to one deduped base (``_compact_del_log``); its id SET is
+    retained in full, because a 'D' must keep winning over a
+    later-arriving 'I' for the same id.  The new base lands under the
+    next version's manifest (bid = -version, never excludable).
+
+    Crash safety: base write (overwrite, idempotent), then the
+    tombstone-log compaction, then the atomic pointer swap — the
+    commit.  A crash before the swap leaves the new version invisible
+    and a compacted-but-complete del log; the retried commit rewrites
+    both.  Superseded dirs are garbage for ``expire_state_versions``."""
+    with family_lease(root, _lease_holder(kind, exclude_bid)):
+        meta = _state_meta_read(root)
         ver = int(meta["version"]) + 1
-        man = sess.read.option("recursiveFileLookup", "true").parquet(
-            _manifest_dir(root, int(meta["version"]))
-        )
-        if exclude_bid is not None:
-            man = man.filter(F.col("bid") != int(exclude_bid))
-        # planning-metadata: every state leaf dir of the family (dir-counted)
-        paths = [r.path for r in man.select("path").distinct().collect()]  # planning-metadata
-        base_dir = f"{root}/base_v{ver}"
-        src = sess.read.parquet(f"{root}/seed", *paths)
+        paths, nbs = _manifest_leaves(sess, root, ver - 1, exclude_bid)
+        live = sess.read.parquet(f"{root}/seed", *paths)
         if del_root is not None:
-            dels = (
-                sess.read.parquet(*_flat_state_paths(del_root, exclude_bid))
-                .select(del_col)
-                .distinct()
-            )
             # metadata-sized set (one id per distinct deletion): broadcast
-            src = src.join(F.broadcast(dels), del_col, "left_anti")
-        rebucketed = src.withColumn(col, F.pmod(key, F.lit(new_nb)))
-        (
-            rebucketed.repartition(min(new_nb, 1024), col)
-            .write.mode("overwrite")
-            .partitionBy(col)
-            .parquet(base_dir)
-        )
-        _bucket_manifest_write(
-            rebucketed, root, col, bid=-ver, nb=new_nb, version=ver,
-            data_dir=base_dir, sub="base",
-        )
+            dels = _del_ids(sess, del_root, del_col, exclude_bid)
+            live = live.join(F.broadcast(dels), del_col, "left_anti")
+        frame, fields = build(live, meta, nbs, ver)
+        meta = {**meta, **fields, "version": ver}
+        _bucketed_write(frame, root, col, -ver, ver, int(meta["nb"]), cap)
         if del_root is not None:
-            # tombstone-log compaction BEFORE the family meta commit: a
-            # crash in between leaves base_v{ver} invisible (meta still
-            # points at the old version) and a compacted-but-complete del
-            # log — the retried fold rewrites both idempotently
             _compact_del_log(sess, del_root, del_col, exclude_bid)
-        meta = {"version": ver, "nb": new_nb, "rows": int(meta["rows"])}
         _state_meta_write(root, meta)  # the commit point
     return meta
 
@@ -2750,13 +2796,8 @@ def expire_state_versions(sess, root: str) -> list[str]:
     superseded versions is reclaiming object-store bytes."""
     import posixpath
 
-    meta = _state_meta_read(root)
-    ver = int(meta["version"])
-    man = sess.read.option("recursiveFileLookup", "true").parquet(
-        _manifest_dir(root, ver)
-    )
-    # planning-metadata: referenced leaf dirs, dir-counted
-    referenced = {r.path for r in man.select("path").distinct().collect()}  # planning-metadata
+    ver = int(_state_meta_read(root)["version"])
+    referenced, _ = _manifest_leaves(sess, root, ver)
     keep_data = {posixpath.dirname(p.rstrip("/")) for p in referenced}
     keep = keep_data | {
         f"{root}/seed",
@@ -3123,24 +3164,14 @@ def _minhash_bucketed_processor(
             .filter(jac >= JACCARD_THRESHOLD)
             .select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
         )
-        sub = _bdir(bid)
-        verified.write.mode("overwrite").parquet(f"{out_root}/{sub}")
-        # bucket-PURE state files: shuffle by the bucket column first so
-        # each leaf dir gets one file per owning task, not one per
-        # upstream task — ≤ N_STATE_BUCKETS files/family/batch
-        band_bb = band_b.withColumn("bb", bb)
-        band_bb.repartition(N_STATE_BUCKETS, "bb").write.mode("overwrite").partitionBy(
-            "bb"
-        ).parquet(f"{bands_root}/{sub}")
-        _bucket_manifest_write(
-            band_bb, bands_root, "bb", bid, version=int(meta_bands["version"])
+        verified.write.mode("overwrite").parquet(f"{out_root}/{_bdir(bid)}")
+        _bucketed_write(
+            band_b.withColumn("bb", bb), bands_root, "bb", bid,
+            int(meta_bands["version"]),
         )
-        ex_xb = ex_b.withColumn("xb", xb_of(F.col("doc_id")))
-        ex_xb.repartition(N_STATE_BUCKETS, "xb").write.mode("overwrite").partitionBy(
-            "xb"
-        ).parquet(f"{ex_root}/{sub}")
-        _bucket_manifest_write(
-            ex_xb, ex_root, "xb", bid, version=int(meta_ex["version"])
+        _bucketed_write(
+            ex_b.withColumn("xb", xb_of(F.col("doc_id"))), ex_root, "xb", bid,
+            int(meta_ex["version"]),
         )
         # advance the dial's row estimates (drives the NEXT re-bucket;
         # a replayed batch re-adds its rows — the estimate only picks a
@@ -3790,8 +3821,8 @@ def _ivf_index_processor(cells_root: str, seeds_path: str, del_root: str | None 
     by design) through the SAME ``assign_cells`` rule as the batch
     writer, and appends the (vec_id, v, nrm, ccell) rows
     partitionBy(cell) to a per-batch-id overwrite dir with a
-    data-then-manifest commit (``_bucket_manifest_write`` under the
-    frozen cell count).  No history reads — replay idempotent by
+    data-then-manifest commit (``_bucketed_write`` under the frozen
+    cell count).  No history reads — replay idempotent by
     construction; per-batch cost is one broadcast-assign over NEW
     vectors plus one small cell shuffle.
 
@@ -3830,19 +3861,14 @@ def _ivf_index_processor(cells_root: str, seeds_path: str, del_root: str | None 
         assigned = assign_cells(vec, seeds).withColumn(
             "ccell", F.col("cell").cast("long")
         )
-        sub = _bdir(bid)
-        (
-            assigned.select("vec_id", "v", "nrm", "ccell", "cell")
-            .repartition(min(int(nc), 64), "cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(f"{cells_root}/{sub}")
-        )
         if has_op and del_root is not None:
             batch_df.filter(F.col("op") == "D").select("vec_id").write.mode(
                 "overwrite"
-            ).parquet(f"{del_root}/{sub}")
-        _bucket_manifest_write(assigned, cells_root, "cell", bid, nb=int(nc), version=ver)
+            ).parquet(f"{del_root}/{_bdir(bid)}")
+        _bucketed_write(
+            assigned.select("vec_id", "v", "nrm", "ccell", "cell"), cells_root,
+            "cell", bid, ver, nb=int(nc), cap=64,
+        )
 
     return process
 
@@ -3855,17 +3881,7 @@ def _ivf_manifest_paths(sess: SparkSession, cells_root: str, probed: list[int]) 
     writer's assignment, not a pmod of a key).  Version-aware: the
     meta pointer selects the live manifest dir, so probes read the
     purged base + post-purge deltas after ``ivf_purge_takedowns``."""
-    man = sess.read.option("recursiveFileLookup", "true").parquet(
-        _manifest_dir(cells_root, int(_state_meta_read(cells_root)["version"]))
-    )
-    pruned = (
-        man.filter(F.col("bucket").isin([int(c) for c in probed]))
-        .select("path")
-        .distinct()
-    )
-    return [f"{cells_root}/seed"] + sorted(
-        r.path for r in pruned.collect()  # planning-metadata: ≤ dirs × probed cells
-    )
+    return [f"{cells_root}/seed"] + _manifest_leaves(sess, cells_root, buckets=probed)[0]
 
 
 def ivf_purge_takedowns(sess: SparkSession, cells_root: str, del_root: str) -> dict:
@@ -3874,13 +3890,14 @@ def ivf_purge_takedowns(sess: SparkSession, cells_root: str, del_root: str) -> d
     from a dial fold (the coarse quantizer is frozen, so there is no
     re-bucket to ride; re-dialing cells means re-training, a rebuild by
     design).  Rewrites the committed cell state MINUS the accumulated
-    delete set into one consolidated ``base_v{N}`` under a new manifest
-    version (atomic meta commit — the ``_rebucket_family`` discipline
-    with the purge as the point instead of the bucket count), compacts
-    the tombstone log to one deduped base (the id set is RETAINED in
-    full: a 'D' must keep winning over a later-arriving 'I'), and
-    leaves the superseded dirs as garbage for ``expire_state_versions``
-    / ``expire_del_versions``.
+    delete set into one consolidated ``base_v{N}`` through
+    :func:`_commit_bucketed_base` (the ``_rebucket_family`` commit with
+    the purge as the point instead of the bucket count, cells kept as
+    assigned), which also compacts the tombstone log and carries the
+    pointer's ``seeds_version`` through: a routine compaction after a
+    re-train must not serve the current cells under the staged seeds.
+    Superseded dirs are garbage for ``expire_state_versions`` /
+    ``expire_del_versions``.
 
     Run OFFLINE, never while the family's stream is live — unlike the
     in-batch fold it cannot exclude an in-flight bid, so a concurrent
@@ -3895,48 +3912,16 @@ def ivf_purge_takedowns(sess: SparkSession, cells_root: str, del_root: str) -> d
     the scheduled purge doubles as its small-file compaction — live
     files collapse to one base tier regardless of how many batches
     have landed, serve unchanged."""
-    with family_lease(cells_root, _lease_holder("ivf-purge")):
-        meta = _state_meta_read(cells_root)
-        ver = int(meta["version"])
-        man = sess.read.option("recursiveFileLookup", "true").parquet(
-            _manifest_dir(cells_root, ver)
-        )
-        # planning-metadata: live nb tiers (1 row: the frozen cell count)
-        nbs = [int(r.nb) for r in man.select("nb").distinct().collect() if r.nb]  # planning-metadata
+
+    def build(live, meta, nbs, ver):
+        # the frozen cell count is the manifest's nb tier
         nc = max(nbs) if nbs else N_STATE_BUCKETS
-        # planning-metadata: every committed leaf dir of the family
-        paths = [r.path for r in man.select("path").distinct().collect()]  # planning-metadata
-        src = sess.read.parquet(f"{cells_root}/seed", *paths)
-        dels = _del_ids(sess, del_root, "vec_id")
-        purged = src.join(F.broadcast(dels), "vec_id", "left_anti").withColumn(
-            "cell", F.col("ccell")
-        )
-        newver = ver + 1
-        base_dir = f"{cells_root}/base_v{newver}"
-        (
-            purged.repartition(min(int(nc), 64), "cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(base_dir)
-        )
-        _bucket_manifest_write(
-            purged, cells_root, "cell", bid=-newver, nb=int(nc), version=newver,
-            data_dir=base_dir, sub="base",
-        )
-        _compact_del_log(sess, del_root, "vec_id", None)
-        # carry the quantizer pointer through the purge (r14 review): a
-        # routine compaction after a re-train must NOT revert seeds_version
-        # to the staged quantizer — the purge rewrites cells laid out by
-        # the CURRENT seeds, and serving them under the old ones is exactly
-        # the new-cells-under-old-seeds mismatch the atomic cutover forbids
-        new_meta = {
-            "version": newver,
-            "nb": int(nc),
-            "rows": int(meta.get("rows", 0)),
-            "seeds_version": int(meta.get("seeds_version", 0)),
-        }
-        _state_meta_write(cells_root, new_meta)  # the commit point
-        return new_meta
+        return live.withColumn("cell", F.col("ccell")), {"nb": nc}
+
+    return _commit_bucketed_base(
+        sess, cells_root, "cell", "ivf-purge", build,
+        del_root=del_root, del_col="vec_id", cap=64,
+    )
 
 
 #: Cell-occupancy imbalance (max/mean) above which the FROZEN coarse
@@ -3976,13 +3961,7 @@ def ivf_cell_imbalance(sess: SparkSession, cells_root: str) -> float:
     bounded by how many are occupied, so a total collapse into one
     cell would read as 'balanced' — emptied cells ARE the drift
     signal.  Empty state returns 1.0 (perfectly balanced nothing)."""
-    meta = _state_meta_read(cells_root)
-    man = sess.read.option("recursiveFileLookup", "true").parquet(
-        _manifest_dir(cells_root, int(meta["version"]))
-    )
-    # planning-metadata: live nb tiers + every committed leaf dir
-    nbs = [int(r.nb) for r in man.select("nb").distinct().collect() if r.nb]  # planning-metadata
-    paths = [r.path for r in man.select("path").distinct().collect()]  # planning-metadata
+    paths, nbs = _manifest_leaves(sess, cells_root)
     if not paths or not nbs:
         return 1.0
     nc = max(nbs)
@@ -4040,14 +4019,13 @@ def ivf_retrain_quantizer(
        training points per centroid and ONE full-corpus assignment,
        and so is ours; below the cap the dial keeps occupancy under
        the budget and the sample is the whole corpus);
-    3. re-assign every live vector to the new cells and write the
-       consolidated ``base_v{N}`` + manifest under the next version —
-       the purge discipline with a new quantizer as the point;
-    4. COMMIT both atomically: one meta-pointer write carrying
-       {version, nb, seeds_version}, so serving probes and the
-       version-aware ingestion processor cut over to the (new seeds,
-       new cells) pair in the same read, and a crash before the commit
-       leaves the old pair fully live.
+    3. re-assign every live vector to the new cells and commit the
+       consolidated base through :func:`_commit_bucketed_base` — the
+       purge discipline with a new quantizer as the point;
+    4. the one pointer write carries {version, nb, seeds_version}, so
+       serving probes and the version-aware ingestion processor cut
+       over to the (new seeds, new cells) pair in the same read, and a
+       crash before the commit leaves the old pair fully live.
 
     Run OFFLINE like every fold (no in-flight bid can be excluded) —
     lease-enforced (r14): acquisition of the family lease fails loudly
@@ -4059,33 +4037,17 @@ def ivf_retrain_quantizer(
     from tailsql_spark.operators.similarity import assign_cells, norm
     from tailsql_spark.operators.similarity import ivf_cell_count
 
-    with family_lease(cells_root, _lease_holder("ivf-retrain")):
-        meta = _state_meta_read(cells_root)
-        ver = int(meta["version"])
-        man = sess.read.option("recursiveFileLookup", "true").parquet(
-            _manifest_dir(cells_root, ver)
-        )
-        # planning-metadata: every committed leaf dir of the family
-        paths = [r.path for r in man.select("path").distinct().collect()]  # planning-metadata
-        src = sess.read.parquet(f"{cells_root}/seed", *paths).select(
-            "vec_id", "v", "nrm"
-        )
-        if del_root is not None:
-            dels = _del_ids(sess, del_root, "vec_id")
-            src = src.join(F.broadcast(dels), "vec_id", "left_anti")
-        src = src.persist()
+    held: list = []
+
+    def build(live, meta, nbs, ver):
+        src = live.select("vec_id", "v", "nrm").persist()
+        held.append(src)
         n_live = src.count()
         nc = ivf_cell_count(int(n_live))
-        # deterministic init: the nc lowest live vec_ids
-        seeds = (
-            src.orderBy("vec_id")
-            .limit(int(nc))
-            .select(
-                F.col("vec_id").alias("seed_id"),
-                F.col("v").alias("sv"),
-                F.col("nrm").alias("sn"),
-            )
-        )
+        # deterministic init: the nc lowest live vec_ids.  Seeds keep the
+        # staged quantizer's column shape (vec_id, v, nrm), so every
+        # reader's rename-to-seed projection works on the committed dir
+        seeds = src.orderBy("vec_id").limit(int(nc))
         # TRAIN-SIDE SAMPLE (r14): every Lloyd iteration is an |V|×|C|
         # assignment.  The mean updates only need a representative sample
         # (the FAISS discipline: O(100) training points per centroid), so
@@ -4102,17 +4064,19 @@ def ivf_retrain_quantizer(
         if int(n_live) > sample_n:
             p = int(n_live) // sample_n
             train = src.filter(F.pmod(F.xxhash64("vec_id"), F.lit(p)) == 0)
-        newver = ver + 1
-        spool = f"{cells_root}/_retrain_spool_v{newver}"
-        assigned = None
+        spool = f"{cells_root}/_retrain_spool_v{ver}"
+        last = int(n_iters) - 1
         for r in range(int(n_iters)):
-            # lineage truncation per round (the lloyd_loop spool lesson)
-            seeds.write.mode("overwrite").parquet(f"{spool}/s{r}")
-            seeds = sess.read.parquet(f"{spool}/s{r}")
+            # lineage truncation per round (the lloyd_loop spool lesson).
+            # The last round's seeds ARE the new quantizer, so they land
+            # in its own dir and the spool can go before the base write
+            out = f"{seeds_path}_v{ver}" if r == last else f"{spool}/s{r}"
+            seeds.write.mode("overwrite").parquet(out)
             assigned = assign_cells(
-                src if r == int(n_iters) - 1 else train, seeds
+                src if r == last else train,
+                sess.read.parquet(out).toDF("seed_id", "sv", "sn"),
             )
-            if r < int(n_iters) - 1:
+            if r < last:
                 per_el = (
                     assigned.select("cell", F.posexplode("v").alias("pos", "x"))
                     .groupBy("cell", "pos")
@@ -4124,47 +4088,24 @@ def ivf_retrain_quantizer(
                         F.transform(
                             F.array_sort(F.collect_list(F.struct("pos", "m"))),
                             lambda s: s["m"],
-                        ).alias("sv")
+                        ).alias("v")
                     )
                     .select(
-                        F.col("cell").alias("seed_id"),
-                        "sv",
-                        norm(F.col("sv")).alias("sn"),
+                        F.col("cell").alias("vec_id"), "v", norm(F.col("v")).alias("nrm")
                     )
                 )
-        new_seeds_dir = f"{seeds_path}_v{newver}"
-        # persist in the staged quantizer's column shape (vec_id, v, nrm)
-        # so every reader's rename-to-seed projection works unchanged
-        seeds.select(
-            F.col("seed_id").alias("vec_id"),
-            F.col("sv").alias("v"),
-            F.col("sn").alias("nrm"),
-        ).write.mode("overwrite").parquet(new_seeds_dir)
-        final = assigned.withColumn("ccell", F.col("cell").cast("long"))
-        base_dir = f"{cells_root}/base_v{newver}"
-        (
-            final.select("vec_id", "v", "nrm", "ccell", "cell")
-            .repartition(min(int(nc), 64), "cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(base_dir)
-        )
-        _bucket_manifest_write(
-            final, cells_root, "cell", bid=-newver, nb=int(nc), version=newver,
-            data_dir=base_dir, sub="base",
-        )
-        if del_root is not None:
-            _compact_del_log(sess, del_root, "vec_id", None)
-        src.unpersist()
         _fs_rmtree(spool)
-        new_meta = {
-            "version": newver,
-            "nb": int(nc),
-            "rows": int(n_live),
-            "seeds_version": newver,
+        ccell = F.col("cell").cast("long").alias("ccell")
+        return assigned.select("vec_id", "v", "nrm", ccell, "cell"), {
+            "nb": int(nc), "rows": int(n_live), "seeds_version": ver,
         }
-        _state_meta_write(cells_root, new_meta)  # the atomic cutover
-        return new_meta
+
+    meta = _commit_bucketed_base(
+        sess, cells_root, "cell", "ivf-retrain", build,
+        del_root=del_root, del_col="vec_id", cap=64,
+    )
+    held[0].unpersist()
+    return meta
 
 
 #: Mean recall@RECALL_K the serving index must hold — the SAME floor
@@ -4369,13 +4310,8 @@ def _bucketed_has_deltas(sess, root: str, meta: dict | None = None) -> bool:
     beyond the consolidated base — i.e. a fold would change the
     layout.  The no-op fast-path probe shared by :func:`bm25_maintain`
     and :func:`curation_maintain`; cost is one manifest read."""
-    meta = meta if meta is not None else _state_meta_read(root)
-    man = sess.read.option("recursiveFileLookup", "true").parquet(
-        _manifest_dir(root, int(meta["version"]))
-    )
-    # planning-metadata: committed leaf dirs of the family
-    paths = [r.path for r in man.select("path").distinct().collect()]  # planning-metadata
-    return any("/base_v" not in p for p in paths)
+    version = int(meta["version"]) if meta is not None else None
+    return any("/base_v" not in p for p in _manifest_leaves(sess, root, version)[0])
 
 
 def _n_batch_dirs(paths: list[str]) -> int:
@@ -5279,12 +5215,6 @@ def _bm25_index_processor(post_root: str, stat_root: str, del_root: str | None =
             .persist()
         )
         sub = _bdir(bid)
-        post_tb = post.withColumn(
-            "tb", F.pmod(bm25_term_hash_col("tok"), F.lit(N_STATE_BUCKETS))
-        )
-        post_tb.repartition(N_STATE_BUCKETS, "tb").write.mode("overwrite").partitionBy(
-            "tb"
-        ).parquet(f"{post_root}/{sub}")
         # stats partial BEFORE the manifest commit: the manifest is the
         # batch's visibility gate (readers trust only committed bids),
         # so every piece of the batch's state — postings AND the
@@ -5331,8 +5261,11 @@ def _bm25_index_processor(post_root: str, stat_root: str, del_root: str | None =
             batch_df.filter(F.col("op") == "D").select("doc_id").write.mode(
                 "overwrite"
             ).parquet(f"{del_root}/{sub}")
-        _bucket_manifest_write(
-            post_tb, post_root, "tb", bid, version=int(meta["version"])
+        _bucketed_write(
+            post.withColumn(
+                "tb", F.pmod(bm25_term_hash_col("tok"), F.lit(N_STATE_BUCKETS))
+            ),
+            post_root, "tb", bid, int(meta["version"]),
         )
         meta["rows"] = int(meta["rows"]) + post.count()
         _state_meta_write(post_root, meta)
@@ -6373,9 +6306,13 @@ def _takedown_processor(inner_process, del_root: str, key: str = "doc_id"):
     return process
 
 
-def _del_ids(sess: SparkSession, del_root: str, key: str = "doc_id") -> DataFrame:
-    """The distinct tombstoned ``key`` ids across the whole del log."""
-    return sess.read.parquet(*_flat_state_paths(del_root)).select(key).distinct()
+def _del_ids(
+    sess: SparkSession, del_root: str, key: str = "doc_id", exclude_bid: int | None = None
+) -> DataFrame:
+    """The distinct tombstoned ``key`` ids across the del log, minus a
+    replaying batch's own delete dir when ``exclude_bid`` is given."""
+    paths = _flat_state_paths(del_root, exclude_bid)
+    return sess.read.parquet(*paths).select(key).distinct()
 
 
 def _vacuum_del_log(sess: SparkSession, del_root: str, key: str = "doc_id") -> None:

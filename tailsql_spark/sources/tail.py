@@ -12,7 +12,11 @@ semantics as a :class:`SimpleDataSourceStreamReader`:
   over the reference, which has no recovery);
 * rotation-aware: when the file shrinks below the recorded offset, or
   its inode or first bytes change, the reader re-opens from 0 (tail
-  ``ReOpen``);
+  ``ReOpen``).  ``tailf`` replays every batch deterministically: an end
+  below the start means "rotated", and a replacement that re-plans to
+  an end at or above the old position bumps the offset's rotation
+  count (``{"pos": N, "rot": k}``; absent = 0), so a pair whose counts
+  differ replays [0, end);
 * ``seek_to_end`` mirrors tail's default start-at-EOF; ``False``
   reads from the beginning (``--do-not-tail`` still ultimately maps to
   plain batch ``spark.read.text``);
@@ -314,23 +318,29 @@ class TailStreamReader(SimpleDataSourceStreamReader):
         return _plan_file(self.path, st, prev, self.max_bytes, self._ident)
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        pos = int(start["pos"])
+        pos, rot = int(start["pos"]), int(start.get("rot", 0))
         end = self._plan(pos)
         if end == 0 < pos:
             # a replaced file (the planner's one-batch rotation signal):
-            # re-open from 0 within this same call
-            pos, end = 0, self._plan(0)
+            # re-open from 0 within this same call.  An end below the
+            # old position says "rotated" by itself; one at or above it
+            # would replay as growth (or not advance at all), so the
+            # offset's rotation count says it instead
+            end = self._plan(0)
+            if end is not None and end >= pos:
+                rot += 1
+            pos = 0
         if end is None:
             return iter([]), start
         # materialized: the engine copies a prefetched batch's iterator
         rows = [(v,) for v in _read_lines(self.path, pos, end)]
-        return iter(rows), {"pos": end}
+        return iter(rows), {"pos": end, "rot": rot} if rot else {"pos": end}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        # replay for recovery: deterministic re-read of [start, end)
-        return (
-            (v,) for v in _read_lines(self.path, int(start["pos"]), int(end["pos"]))
-        )
+        # replay for recovery: deterministic re-read of [start, end), or
+        # of [0, end) when a rotation lies between the two offsets
+        s = int(start["pos"]) if start.get("rot", 0) == end.get("rot", 0) else 0
+        return ((v,) for v in _read_lines(self.path, s, int(end["pos"])))
 
 
 class PipeStreamReader(SimpleDataSourceStreamReader):

@@ -577,6 +577,61 @@ def test_tailf_rotation_batch_replays_identically(tmp_path):
     assert list(r.readBetweenOffsets(off, off2)) == live
 
 
+def test_tailf_same_size_replacement_advances_offset(tmp_path):
+    """A delete-rotated replacement of the SAME size re-plans to the old
+    position; the offset must still advance, or Spark's simple-reader
+    wrapper rejects the non-empty batch (OFFSET_DID_NOT_ADVANCE) and
+    the query dies.  Replay of the pair re-delivers the new file."""
+    import os
+
+    from pyspark.sql.datasource_internal import _SimpleStreamReaderWrapper
+
+    from tailsql_spark.sources.tail import TailStreamReader
+
+    log = tmp_path / "app.log"
+    log.write_text("aaa\n")
+    r = TailStreamReader(str(log), seek_to_end=False,
+                         max_bytes_per_batch=1 << 20)
+    w = _SimpleStreamReaderWrapper(r)
+    off = w.latestOffset()
+    assert off == {"pos": 4}
+    os.unlink(log)
+    log.write_text("bbb\n")
+    off2 = w.latestOffset()
+    assert off2 != off and off2["pos"] == 4
+    assert list(w.getCache(off, off2)) == [("bbb",)]
+    assert list(r.readBetweenOffsets(off, off2)) == [("bbb",)]
+
+
+def test_tailf_bigger_replacement_batch_replays_identically(tmp_path):
+    """After a delete-rotation to a LARGER file the live batch delivers
+    the replacement from byte 0; replaying the same offset pair must
+    too (not [old pos, end) of the new file, which tears its first
+    line), and the offsets after it replay plain growth."""
+    import os
+
+    from tailsql_spark.sources.tail import TailStreamReader
+
+    log = tmp_path / "app.log"
+    log.write_text("old-line-1\n")
+    r = TailStreamReader(str(log), seek_to_end=False,
+                         max_bytes_per_batch=1 << 20)
+    _rows, off = r.read(r.initialOffset())
+    assert off == {"pos": 11}
+    os.unlink(log)
+    repl = [f"replacement-{i}" for i in range(4)]
+    log.write_text("".join(ln + "\n" for ln in repl))
+    rows, off2 = r.read(off)
+    live = list(rows)
+    assert live == [(v,) for v in repl] and off2["pos"] == 56
+    assert list(r.readBetweenOffsets(off, off2)) == live
+    with open(log, "a") as fh:
+        fh.write("after\n")
+    rows3, off3 = r.read(off2)
+    assert list(rows3) == [("after",)]
+    assert list(r.readBetweenOffsets(off2, off3)) == [("after",)]
+
+
 def test_tailn_seek_to_end_engine_order_skips_old_lines(tmp_path):
     """Engine order on a fresh seek_to_end query: latestOffset() plans
     first, the file grows, then initialOffset() runs.  The start must be

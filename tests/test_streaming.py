@@ -518,6 +518,18 @@ def test_stream_result_survives_scratch_cleanup(spark, oracle_sf_dir):
 
     assert owners("[1:].isdigit()") == {"_batch_dirs"}
     assert owners("acquire_family_lease(") == {"family_lease", "wait_family_lease"}
+    # ...and ONE bucketed layout: one manifest read, one data-then-
+    # manifest write, one version-bumping commit per layout (the flat
+    # one is _rewrite_flat_family); the two processors' own pointer
+    # writes only advance the dial's row estimate
+    assert owners('"recursiveFileLookup"') == {"_manifest_rows"}
+    assert owners("_bucket_manifest_write(") == {"_bucketed_write"}
+    assert owners('["version"]) + 1') == {
+        "_rewrite_flat_family", "_commit_bucketed_base",
+    }
+    assert owners("_state_meta_write(") == {
+        "_commit_bucketed_base", "_minhash_bucketed_processor", "_bm25_index_processor",
+    }
     for gone in (
         "_mh_state_paths",
         "_del_state_paths",

@@ -579,7 +579,9 @@ def test_curation_processor_replay_idempotent(spark, oracle_sf_dir):
         attrs = spark.read.parquet(*_flat_state_paths(attrs_root))
         cleaned = clean_keep_attrs(attrs)
         labels = spark.read.parquet(_latest_snapshot_path(labels_root, None))
-        got = sorted(map(tuple, survivor_budgets(cleaned, labels).collect()))
+        got = sorted(
+            map(tuple, survivor_budgets(cleaned, labels, hint_broadcast=True).collect())
+        )
         want = sorted(
             map(
                 tuple,

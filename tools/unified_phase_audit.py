@@ -49,7 +49,7 @@ def main() -> None:
         corpus_clean_pipeline,
         unified_text_row,
     )
-    from tailsql_spark.operators.dedup import dedup_minhash_lsh
+    from tailsql_spark.operators.dedup import _small_input, dedup_minhash_lsh
     from tailsql_spark.operators.graphs import connected_components
     from tailsql_spark.operators.multimodal import (
         AUDIO_DF_CAP,
@@ -121,7 +121,9 @@ def main() -> None:
             docs = load_tables(spark, sf)["documents"]
             _, phases["text_row"] = timed(
                 "text_row", factor,
-                lambda: unified_text_row(cleaned, labels, docs).collect(),
+                lambda: unified_text_row(
+                    cleaned, labels, docs, hint_broadcast=_small_input(sf)
+                ).collect(),
             )
             media = synth_media(spark, sf)
             big = _big_corpus(sf)  # the registry queries' own size gate
