@@ -16,9 +16,13 @@ Semantics preserved (reference file:line cited per rule):
   (``1 t T TRUE true True 0 f F FALSE false False``,
   ``sql/lparser.go:116``) — narrower than Spark's cast (no ``yes/no``);
 * ``int`` is strict base-10 int64 (``strconv.ParseInt``,
-  ``sql/lparser.go:122``) — no floats, no hex;
+  ``sql/lparser.go:122``) — no floats, no hex, and a value outside int64
+  drops the line;
 * ``float`` is Go ``strconv.ParseFloat`` (``sql/lparser.go:128``) —
-  accepts scientific notation, ``inf``/``nan``;
+  accepts scientific notation, hex with a ``p`` exponent and
+  ``inf``/``nan``; a number that rounds to ±Inf drops the line. Digit
+  separators (``0x_1p0``), which Go takes after a base prefix, are
+  refused;
 * ``date`` is fuzzy multi-layout parsing (``dateparse.ParseAny``,
   ``sql/lparser.go:134``) — compiled to a ``coalesce`` chain of
   ``try_to_timestamp`` formats over :data:`DATE_LAYOUTS`.
@@ -26,6 +30,17 @@ Semantics preserved (reference file:line cited per rule):
 Everything compiles to built-in Spark SQL expressions (``regexp_extract``
 + guarded casts), so parsing runs inside whole-stage codegen and scales
 linearly with input partitions — no Python on the hot path, no shuffle.
+
+Parse once: like the reference's one match and one parse per field
+(``sql/lparser.go:89-149``), each capture and each typed conversion is
+evaluated exactly once per line. Left to itself, Catalyst pushes the
+not-null drop and the user's ``-F`` filter below the projection and
+re-inlines every ``regexp_extract`` and cast they read: a 5-field
+pattern with a filter on one ``int`` column planned 18 extracts per line
+where 5 do, and a ``date`` field ran its layout chain twice. So the
+captures, then the typed values, sit behind a ``Generate``
+(:func:`_once`), and Catalyst never pushes a filter on a ``Generate``'s
+output below it.
 
 The reference's hidden metadata columns ``__tname``/``__id``
 (``sql/lparser.go:64-67``) are unnecessary in Spark: each source keeps
@@ -87,6 +102,12 @@ DAYLESS_LAYOUTS: tuple[str, ...] = (
 
 _WEEKDAY_PREFIX = r"^(Mon|Tue|Wed|Thu|Fri|Sat|Sun),? "
 
+#: the numbers strconv.ParseFloat reads, less its ``_`` digit separators
+_GO_FLOAT_NUMBER = (
+    r"^[+-]?(([0-9]+(\.[0-9]*)?|\.[0-9]+)([eE][+-]?[0-9]+)?"
+    r"|0[xX]([0-9a-fA-F]+(\.[0-9a-fA-F]*)?|\.[0-9a-fA-F]+)[pP][+-]?[0-9]+)$"
+)
+
 _GROUP_RE = re.compile(r"\(\?P<([A-Za-z_][A-Za-z0-9_]*)>")
 
 
@@ -123,20 +144,26 @@ class CompiledPattern:
     # ------------------------------------------------------------------
     # column builders
     # ------------------------------------------------------------------
-    def _raw(self, line: Column, spec: FieldSpec) -> Column:
-        return F.regexp_extract(line, self.java_pattern, spec.group_index)
-
-    def _typed(self, line: Column, spec: FieldSpec) -> Column:
-        raw = self._raw(line, spec)
+    def _typed(self, raw: Column, spec: FieldSpec) -> Column:
+        """The typed value of one field's capture ``raw``, NULL when it
+        fails its type's parse."""
         if spec.tail_type == "str":
             return raw
         if spec.tail_type == "int":
-            # strict base-10 int64, like strconv.ParseInt(_, 10, 64)
-            return F.when(raw.rlike(r"^[+-]?[0-9]+$"), raw.cast(T.LongType()))
+            # strict base-10 int64, like strconv.ParseInt(_, 10, 64); an
+            # out-of-range value is a parse error, which try_cast makes NULL
+            return F.when(raw.rlike(r"^[+-]?[0-9]+$"), raw.try_cast(T.LongType()))
         if spec.tail_type == "float":
-            return F.when(
-                raw.rlike(r"^[+-]?(([0-9]+(\.[0-9]*)?|\.[0-9]+)([eE][+-]?[0-9]+)?|[iI][nN][fF](inity)?|[nN][aA][nN])$"),
-                raw.cast(T.DoubleType()),
+            # strconv.ParseFloat: decimal or hex (p exponent required)
+            # numbers, where one that rounds to ±Inf is a range error
+            # (Spark plans nullif's operand as a common expression, so
+            # the cast still runs once); inf/infinity take a sign and
+            # any case, nan only any case
+            inf = F.lit(float("inf"))
+            number = F.when(raw.rlike(_GO_FLOAT_NUMBER), raw).try_cast(T.DoubleType())
+            special = F.when(raw.rlike(r"(?i)^([+-]?inf(inity)?|nan)$"), raw)
+            return F.coalesce(
+                F.nullif(F.nullif(number, inf), -inf), special.try_cast(T.DoubleType())
             )
         if spec.tail_type == "bool":
             # exactly Go strconv.ParseBool's accepted set
@@ -178,18 +205,44 @@ class CompiledPattern:
         typed field fails its cast is dropped whole
         (``sql/squeryer.go:117-121``). Empty lines are ignored
         (``sql/lparser.go:90-93``).
+
+        The captures, then the typed values, are each evaluated once per
+        line (:func:`_once`); the not-null drop and any filter applied to
+        the result read the typed columns.
         """
         line = F.col(line_col)
         matched = lines.filter(line.isNotNull() & (line != "")).filter(
             line.rlike(self.java_pattern)
         )
-        cols = [self._typed(line, spec).alias(spec.name) for spec in self.fields]
-        typed = matched.select(*cols)
+        raw = _once(
+            matched,
+            [
+                F.regexp_extract(line, self.java_pattern, spec.group_index).alias(f"_{i}")
+                for i, spec in enumerate(self.fields)
+            ],
+        )
+        typed = _once(
+            raw,
+            [
+                self._typed(F.col(f"_{i}"), spec).alias(spec.name)
+                for i, spec in enumerate(self.fields)
+            ],
+        )
         not_null = [F.col(spec.name).isNotNull() for spec in self.fields]
         pred = not_null[0]
         for c in not_null[1:]:
             pred = pred & c
         return typed.filter(pred)
+
+
+def _once(df: DataFrame, cols: list[Column]) -> DataFrame:
+    """Select ``cols`` behind an optimizer barrier, so each is evaluated
+    once per row: Catalyst never pushes a filter on a ``Generate``'s
+    output below that ``Generate``, where a filter over a plain
+    projection would be rewritten to re-evaluate every column it reads.
+    ``inline`` of a one-element array keeps the row count and stays in
+    whole-stage codegen."""
+    return df.select(F.inline(F.array(F.struct(*cols))))
 
 
 def compile_pattern(pattern: str) -> CompiledPattern:

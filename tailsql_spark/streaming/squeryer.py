@@ -18,8 +18,9 @@ squeryer.go:354-439``) on Structured Streaming:
   the window view is a scan over the live segments. foreachBatch hands
   the callback a DataFrame bound to a CLONED SparkSession whose temp
   views/plans are invisible to the main session — the spool decouples
-  the two, doubles as a restart-safe window buffer (bounded by SIZE),
-  and at cluster scale is simply a scratch object-store prefix;
+  the two, and at cluster scale is simply a scratch object-store
+  prefix. The spool is a fresh temp dir and the buffer index lives in
+  driver memory, so a restart starts from an empty window;
 * a lock serializes buffer mutation against emission, exactly the
   reference's engine mutex (``squeryer.go:55,262,285``);
 * empty sources still get (empty) views so multi-table joins stay
@@ -134,6 +135,8 @@ class StreamQueryer:
         self._lock = threading.Lock()
         self._queries = []
         self._emissions = 0
+        #: window ticks :meth:`run` skipped because an emission overran them
+        self.missed_ticks = 0
         self._batch_seq = 0
         self._last_batch_ts: dict[int, float] = {}
         import tempfile
@@ -415,7 +418,11 @@ class StreamQueryer:
             while t_end is None or time.time() < t_end:
                 time.sleep(max(0.0, nxt - time.time()))
                 self.emit()
-                nxt += period
+                # an emission slower than the period skips the ticks it
+                # overran instead of firing them back to back
+                missed = max(0, int((time.time() - nxt) // period))
+                self.missed_ticks += missed
+                nxt += (missed + 1) * period
         finally:
             self.stop()
 

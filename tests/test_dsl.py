@@ -3,12 +3,14 @@
 from __future__ import annotations
 
 import datetime
+import re
 
 import pytest
 
 from pyspark.sql import types as T
 
-from tailsql_spark.dsl import compile_pattern
+from tailsql_spark.dsl import DATE_LAYOUTS, DAYLESS_LAYOUTS, compile_pattern
+from tailsql_spark.operators.rowfilter import apply_filter
 
 README_RE = r".+ (?P<method__str>GETM) (?P<status__str>SUCC) .+7710 (?P<time__int>[0-9]+) .+"
 
@@ -150,3 +152,48 @@ def test_fuzzy_date_documented_divergences(spark):
     ]
     df = spark.createDataFrame([(v,) for v in dropped], ["value"])
     assert cp.parse_lines(df).count() == 0
+
+
+FIVE_FIELD_RE = (
+    r".+ (?P<method__str>[A-Z]{4}) (?P<status__str>SUCC) [^ ]+:7710 "
+    r"(?P<time__int>[0-9]+) (?P<seq__int>[0-9]+) (?P<created__int>[0-9]+)"
+)
+
+
+def _optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_parse_evaluates_each_capture_once(spark):
+    """A -F filter on a typed column reads the parsed columns: the
+    optimized plan holds one regexp_extract per field and one rlike of
+    the pattern, not copies inlined into the pushed-down filter."""
+    cp = compile_pattern(FIVE_FIELD_RE)
+    lines = [
+        "2024/04/12 22:47:42.506277 GETM SUCC localhost:7710 605 1 17",
+        "2024/04/12 22:47:43.012345 PUTM SUCC localhost:7710 12500 2 18",
+        "2024/04/12 22:47:43.523456 SETM FAIL localhost:7710 98000 3 19",
+    ]
+    df = spark.createDataFrame([(l,) for l in lines], ["value"])
+    out = apply_filter(cp.parse_lines(df), "time > 10000")
+    plan = _optimized_plan(out)
+    assert plan.count("regexp_extract(") == len(cp.fields), plan
+    assert len(re.findall(r"RLIKE\(value#[0-9]+, " + re.escape(cp.java_pattern) + r"\)", plan)) == 1, plan
+    assert [tuple(r) for r in out.collect()] == [("PUTM", "SUCC", 12500, 2, 18)]
+
+
+def test_parse_evaluates_each_date_layout_once(spark):
+    cp = compile_pattern(r"^(?P<ts__date>[^ ]+ [^ ]+) (?P<n__int>[0-9]+)$")
+    lines = ["2024/04/12 22:47:42 5", "04/11/2024 05:04:05 6", "2024-04-09 22:47:42 7", "2024-04-12 22:47:42 1"]
+    df = spark.createDataFrame([(l,) for l in lines], ["value"])
+    out = apply_filter(cp.parse_lines(df), "n > 1 and ts > '2024-04-10'")
+    plan = _optimized_plan(out)
+    assert plan.count("regexp_extract(") == 2, plan
+    # one layout is tried both with and without a leading weekday
+    layouts = DATE_LAYOUTS + DAYLESS_LAYOUTS
+    for fmt in layouts:
+        assert plan.count(f", {fmt}, TimestampType") == layouts.count(fmt), fmt
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (datetime.datetime(2024, 4, 11, 5, 4, 5), 6),
+        (datetime.datetime(2024, 4, 12, 22, 47, 42), 5),
+    ]

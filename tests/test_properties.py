@@ -17,11 +17,14 @@ test_dsl.py.
 from __future__ import annotations
 
 import datetime
+import math
+import re
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from tailsql_spark.dsl import compile_pattern
+from tailsql_spark.operators.rowfilter import apply_filter
 
 # (spark layout concern, python strftime renderer, truncation unit)
 _RENDERERS: list[tuple[str, str]] = [
@@ -81,6 +84,136 @@ def test_fuzzy_date_roundtrips_python_renderings(spark, dt):
     want = [_truncate(dt, unit) for _, unit in _RENDERERS]
     for g, w, (fmt, _) in zip(got, want, _RENDERERS):
         assert g == w, f"layout {fmt!r}: parsed {g!r}, rendered from {w!r}"
+
+
+# every field type; only regex syntax Java and Python read alike
+_DIFF_RE = (
+    r"^(?P<k__int>[^ ]*) (?P<tag__str>[a-z]*) (?P<x__float>[^ ]*) "
+    r"(?P<ok__bool>[^ ]*) (?P<ts__date>[^ ]+ [^ ]+) (?P<n__int>[^ ]+)$"
+)
+_GO_BOOL = {"1": True, "t": True, "T": True, "TRUE": True, "true": True, "True": True,
+            "0": False, "f": False, "F": False, "FALSE": False, "false": False, "False": False}
+_GO_DECIMAL = r"[+-]?([0-9]+(\.[0-9]*)?|\.[0-9]+)([eE][+-]?[0-9]+)?"
+_GO_HEX = r"[+-]?0[xX]([0-9a-fA-F]+(\.[0-9a-fA-F]*)?|\.[0-9a-fA-F]+)[pP][+-]?[0-9]+"
+
+
+def _go_int(tok: str):
+    """strconv.ParseInt(tok, 10, 64), None on error."""
+    if not re.fullmatch(r"[+-]?[0-9]+", tok):
+        return None
+    v = int(tok)
+    return v if -(2**63) <= v < 2**63 else None
+
+
+def _go_float(tok: str):
+    """strconv.ParseFloat(tok, 64), None on error (a range error too)."""
+    if re.fullmatch(r"[+-]?inf(inity)?", tok.lower()):
+        return float(tok)
+    if tok.lower() == "nan":
+        return math.nan
+    try:
+        if re.fullmatch(_GO_DECIMAL, tok):
+            v = float(tok)
+        elif re.fullmatch(_GO_HEX, tok):
+            v = float.fromhex(tok)
+        else:
+            return None
+    except OverflowError:
+        return None
+    return None if math.isinf(v) else v
+
+
+def _go_date(tok: str):
+    try:
+        return datetime.datetime.strptime(tok, "%Y-%m-%d %H:%M:%S")
+    except ValueError:
+        return None
+
+
+def _reference_rows(lines: list[str], k: int) -> list[tuple]:
+    """The reference's parse then ``-F "n > k"``: one regex search per
+    line, one strconv-style parse per field, and a line dropped whole
+    when any field fails."""
+    rx = re.compile(_DIFF_RE)
+    rows = []
+    for line in lines:
+        m = rx.search(line) if line else None
+        if m is None:
+            continue
+        row = (
+            _go_int(m["k__int"]), m["tag__str"], _go_float(m["x__float"]),
+            _GO_BOOL.get(m["ok__bool"]), _go_date(m["ts__date"]), _go_int(m["n__int"]),
+        )
+        if None not in row and row[5] > k:
+            rows.append(row)
+    return rows
+
+
+def _canonical(rows) -> list[tuple]:
+    return sorted(
+        (tuple("nan" if isinstance(v, float) and math.isnan(v) else v for v in r) for r in rows),
+        key=repr,
+    )
+
+
+_INT_TOKENS = st.one_of(
+    st.integers(-(2**63), 2**63 - 1).map(str),
+    st.integers(-9, 9).map(str),
+    st.sampled_from([
+        "9223372036854775808", "-9223372036854775809", "99999999999999999999",
+        "+7", "-0", "007", "", "1.5", "1e3", "0x10", "seven", "+-1", "1_000",
+    ]),
+)
+_FLOAT_TOKENS = st.one_of(
+    st.floats(allow_nan=False, allow_infinity=False).map(repr),
+    st.sampled_from([
+        "1e999", "-1e999", "1e-999", "1.797693134862316e308", "inf", "-Infinity",
+        "INF", "+iNfInItY", "infinit", "nan", "NaN", "+nan", "-NaN", ".5", "5.", "+.5e-3",
+        ".", "1e", "e5", "1.2.3", "", "0x1p3", "-0x.8p1", "0X1P-2", "0x1p9999", "0x10",
+        "0x1.8", "1.5d", "1_0", "true",
+    ]),
+)
+_BOOL_TOKENS = st.sampled_from(sorted(_GO_BOOL) + ["yes", "no", "Y", "tRuE", "2", ""])
+_DATE_TOKENS = st.one_of(
+    st.datetimes(
+        min_value=datetime.datetime(1971, 1, 1),
+        max_value=datetime.datetime(2099, 12, 31, 23, 59, 59),
+    ).map(lambda d: d.strftime("%Y-%m-%d %H:%M:%S")),
+    st.sampled_from([
+        "2024-13-01 00:00:00", "2024-02-30 10:00:00", "2024-04-12 25:00:00",
+        "not a-date", "2024-04-12 x",
+    ]),
+)
+_LINES = st.one_of(
+    st.tuples(
+        _INT_TOKENS, st.sampled_from(["", "ab", "xyz", "AB"]), _FLOAT_TOKENS,
+        _BOOL_TOKENS, _DATE_TOKENS, _INT_TOKENS,
+    ).map(" ".join),
+    # no ':' in noise, so no noise token reads as a date-time
+    st.text(alphabet=" abxyzT01234567.-+eE", max_size=24),
+    st.just(""),
+)
+
+
+@settings(
+    max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow]
+)
+@given(lines=st.lists(_LINES, min_size=1, max_size=40), k=st.integers(-5, 5))
+@example(
+    lines=[
+        f"1 ab {x} true 2024-04-12 22:47:42 {n}"
+        for x, n in [
+            ("1.5", "9223372036854775808"), ("1e999", "7"), ("+nan", "7"),
+            ("INFINITY", "7"), ("0x1p3", "7"), ("nan", "-9223372036854775808"),
+        ]
+    ],
+    k=0,
+)
+def test_parse_then_filter_matches_reference_rules(spark, lines, k):
+    cp = compile_pattern(_DIFF_RE)
+    df = spark.createDataFrame([(l,) for l in lines], ["value"])
+    got = apply_filter(cp.parse_lines(df), f"n > {k}").collect()
+    assert _canonical(tuple(r) for r in got) == _canonical(_reference_rows(lines, k))
 
 
 @settings(

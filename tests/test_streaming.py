@@ -179,6 +179,44 @@ def test_window_harness_tumbling_clears(spark):
     assert sq.emit(now=t0 + 2) == "n\n0"
 
 
+def test_run_skips_ticks_an_emission_overran(monkeypatch):
+    """An emission 2.5 periods long makes run() skip the two ticks it
+    overran, not fire them back to back."""
+    from tailsql_spark.streaming import squeryer
+
+    class Clock:
+        now = 1000.0
+
+        def time(self):
+            return self.now
+
+        def sleep(self, sec):
+            self.now += sec
+
+    clock, period, starts = Clock(), 2.0, []
+
+    class Probe(StreamQueryer):
+        def start(self, trigger_sec=1.0):
+            pass
+
+        def emit(self, now=None):
+            starts.append(clock.now)
+            clock.now += 2.5 * period if len(starts) == 2 else 0.1
+
+    monkeypatch.setattr(squeryer, "time", clock)
+    sq = Probe(
+        None,
+        [SourceSpec(path="unused", pattern=README_RE)],
+        WindowSpec(size_sec=10, slide_sec=period),
+        "select 1",
+        sink=lambda s: None,
+    )
+    sq.run(duration_sec=20)
+    gaps = [b - a for a, b in zip(starts, starts[1:])]
+    assert len(starts) >= 5 and min(gaps) >= period, gaps
+    assert sq.missed_ticks == 2
+
+
 def test_event_time_stream_with_watermark(spark, sf_dir):
     """Event-time tumbling agg under readStream + watermark (the
     reference's broken event-time path done right, SURVEY §2A)."""
